@@ -67,7 +67,9 @@ PER_LAYER = {
     **{f"q.{g}.s": "s" for g in ("scan", "kernel", "graph")},
     **{f"q.{q}.{m}": u for q in QUERIES for m, u in (("s", "s"), ("jobs", "count"))},
     "spark.persisted_rdds": "count",
+    "spark.persisted_rdds_growth": "count",
     "spark.blockmgr_mib": "MiB",
+    "spark.blockmgr_mib_growth": "MiB",
     "trace.overhead_ratio": "ratio",
     "trace.bookkeeping_s": "s",
 }
@@ -109,9 +111,11 @@ def layer_metrics(tracer: Tracer, wl, k: int, res) -> dict:
 
     all_jobs = inclusive(root)
     cc = named("cc")
+    own_s = root.attrs["bookkeeping_s"]
     m = {
         "op.s": res.seconds,
-        "trace.bookkeeping_s": tracer.bookkeeping_s,
+        "trace.bookkeeping_s": own_s,
+        "trace.overhead_ratio": res.seconds / (res.seconds - own_s),
         "op.jobs": len(all_jobs),
         "op.stages": tracer.stages_of(all_jobs),
         "checkpoints.validate_s": busy("checkpoints.validate"),
@@ -183,17 +187,18 @@ def measure(spark, args, session_s: float) -> dict:
         stage_s.append(time.perf_counter() - t0)
     for i in range(1, STAGINGS):
         shutil.rmtree(wl.path(f"input{i}"))
-    warm = wl.warmup()
-    warm_ok = warm is None or wl.check(warm)
-    setup_s = session_s + statistics.median(stage_s) + (warm.seconds if warm else 0.0)
+    t0 = time.perf_counter()
+    wl.warmup()
+    warm_s = time.perf_counter() - t0
+    setup_s = session_s + statistics.median(stage_s) + warm_s
     settle(spark)
     t_setup = time.perf_counter()
 
     # Untraced: operations back to back until --seconds have passed.
-    # Traced: traced, untraced, traced, untraced. The first traced operation
-    # sits where an untraced run measures, so its layer numbers explain that
-    # figure; the second is compared with the untraced ones around it.
-    pattern = (True, False, True, False) if args.trace else (False,)
+    # Traced: two traced operations. The first sits where an untraced run
+    # measures, so its layer numbers explain that figure; the second shows
+    # whether job counts and storage repeat from one operation to the next.
+    pattern = (True, True) if args.trace else (False,)
     tracer = Tracer(sc) if args.trace else None
     if tracer:
         wl.install(tracer)
@@ -221,11 +226,13 @@ def measure(spark, args, session_s: float) -> dict:
         )
         wl.after_op(k)
         settle(spark)
+        # what survives the clean-up: drift shows as growth over the ops
+        samples[-1]["persisted_rdds"] = persisted_rdds(sc)
+        samples[-1]["blockmgr_mib"] = blockmgr_mib(sc)
         k += 1
     t_loop = time.perf_counter()
 
-    # the warm-up's output is checked too, so it counts as an attempt
-    oks = ([warm_ok] if warm else []) + [s["ok"] for s in samples]
+    oks = [s["ok"] for s in samples]
     attempted, failed = len(oks), oks.count(False)
     if not args.trace:
         metrics = {
@@ -237,13 +244,15 @@ def measure(spark, args, session_s: float) -> dict:
     else:
         metrics = dict.fromkeys(PER_LAYER, 0)
         metrics.update(layers[0])
+        # query times and the tracer's cost: medians over the traced ops
+        for name in layers[0]:
+            if name.startswith("trace.") or (name.startswith("q.") and name.endswith(".s")):
+                metrics[name] = statistics.median(m[name] for m in layers)
         metrics.update(wl.extract_probe())
         metrics["fail_ratio"] = failed / attempted
-        metrics["spark.persisted_rdds"] = persisted_rdds(sc)
-        metrics["spark.blockmgr_mib"] = blockmgr_mib(sc)
-        metrics["trace.overhead_ratio"] = samples[2]["s"] / statistics.mean(
-            (samples[1]["s"], samples[3]["s"])
-        )
+        for name in ("persisted_rdds", "blockmgr_mib"):
+            metrics[f"spark.{name}"] = samples[-1][name]
+            metrics[f"spark.{name}_growth"] = samples[-1][name] - samples[0][name]
         units = PER_LAYER
     detail = {
         "workload": args.workload,
@@ -251,11 +260,11 @@ def measure(spark, args, session_s: float) -> dict:
         "cpus": DEFAULT_CPUS,
         "session_s": session_s,
         "stage_s": stage_s,
-        "warmup_s": warm.seconds if warm else None,
+        "warmup_s": warm_s,
         "timeline_s": {"setup_end": t_setup - T_START, "loop_end": t_loop - T_START},
         "samples": samples,
         "op_jobs": [m["op.jobs"] for m in layers],
-        "layers_warm": layers[1:],
+        "layers_later": layers[1:],
     }
     return {
         "detail": detail,

@@ -2,7 +2,7 @@
 
 Usage (from the root of a checkout):
 
-    python3 perfbench/run.py --workload kg_build --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload kg_pipeline --seed 1 --seconds 5 --trace 0
 
 The run itself (perfbench/bench.py) executes in a child process whose
 environment is pinned here: ``local[nproc]``, a driver heap below host RAM,

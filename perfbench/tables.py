@@ -1,15 +1,23 @@
 """Seeded generator for the star-schema tables the ``query_mix`` workload reads.
 
 Writes one parquet file per table (``<dir>/<name>.parquet``) with the column
-names, types and value domains of the repository's read-only test data, so
-the registered queries and their DuckDB oracle SQL run unchanged. Row counts
-scale with ``sf`` the way the test data does (lineitem ~ 600 000 x sf).
-Every value is a pure function of ``seed``: the same seed writes the same
-tables.
+names and types of the repository's read-only test data, so the registered
+queries and their DuckDB oracle SQL run unchanged. Every value is a pure
+function of ``seed``: the same seed writes the same tables.
 
-Two properties are planted so the kernels have work to do: about one
-document in ten is a near-duplicate of an earlier one (t05 / c01 find
-pairs), and about one embedding in fifty is an exact copy of another (t10).
+The shape follows the sf0.1 test data, measured column by column (see
+README.md, "Input tables"):
+
+- row counts are linear in ``sf``: at sf0.1, 15 000 customers, 1 000
+  suppliers, 20 000 parts, 150 000 orders, 600 000 line items (each on a
+  uniformly drawn order, so orders hold a Poisson(4) number of lines),
+  100 000 events over 1 500 users, 5 000 documents, 2 000 embeddings;
+- documents are 10-100 words drawn uniformly from a 30-word vocabulary;
+  one in twenty is a near-duplicate of another document: its copy with the
+  word ``dup`` inserted (word-3-gram Jaccard 0.92-1.0 to its source);
+- embeddings are isotropic random unit vectors in 64 dimensions with a
+  label drawn from 10, so about 0.2 % of pairs reach cosine 0.35 (t10)
+  and no two vectors are equal.
 """
 
 from __future__ import annotations
@@ -32,11 +40,16 @@ COLORS = ("blue", "red", "green", "small", "hot", "cold", "big", "old")
 NOUNS = ("anvil", "widget", "bolt", "gear", "ring", "nut", "spring", "valve")
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 LANGS = ("en", "zh", "es", "de", "fr")
-LANG_P = (0.44, 0.15, 0.14, 0.14, 0.13)
+LANG_P = (0.412, 0.151, 0.149, 0.140, 0.148)
+DUP_SHARE = 0.05
 DAY_US = 86_400 * 1_000_000
 TABLE_NAMES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
+
+
+def _pick(rng: np.random.Generator, choices, n: int) -> pa.Array:
+    return pa.array(np.asarray(choices, dtype=object)[rng.integers(0, len(choices), n)], pa.string())
 
 
 def _money(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
@@ -48,26 +61,24 @@ def _days(base: str, offsets: np.ndarray) -> pa.Array:
     return pa.array(t0 + offsets.astype(np.int64) * DAY_US, pa.timestamp("us"))
 
 
-def _names(prefix: str, n: int) -> list[str]:
-    return [f"{prefix}#{i:09d}" for i in range(n)]
+def _names(prefix: str, n: int) -> pa.Array:
+    return pa.array(np.char.add(f"{prefix}#", np.char.zfill(np.arange(n).astype(str), 9)))
 
 
 def _documents(rng: np.random.Generator, n: int) -> pa.Table:
-    texts: list[str] = []
-    for i in range(n):
-        if i >= 10 and rng.random() < 0.1:
-            toks = texts[int(rng.integers(0, i))].split()
-            for j in rng.integers(0, len(toks), 2):
-                toks[j] = WORDS[int(rng.integers(0, len(WORDS)))]
-            toks.insert(int(rng.integers(0, len(toks))), "dup")
-        else:
-            toks = [WORDS[k] for k in rng.integers(0, len(WORDS), int(rng.integers(10, 101)))]
-        texts.append(" ".join(toks))
+    words = np.asarray(WORDS, dtype=object)
+    texts = [" ".join(words[rng.integers(0, len(words), int(k))]) for k in rng.integers(10, 101, n)]
+    dups = np.flatnonzero(rng.random(n) < DUP_SHARE)
+    originals = np.setdiff1d(np.arange(n), dups)
+    for i, src in zip(dups, rng.choice(originals, len(dups))):
+        toks = texts[src].split()
+        toks.insert(int(rng.integers(0, len(toks) + 1)), "dup")
+        texts[i] = " ".join(toks)
     return pa.table(
         {
             "doc_id": pa.array(np.arange(n), pa.int64()),
             "text": texts,
-            "lang": [LANGS[k] for k in rng.choice(len(LANGS), n, p=LANG_P)],
+            "lang": pa.array(np.asarray(LANGS, dtype=object)[rng.choice(len(LANGS), n, p=LANG_P)]),
             "source": [f"src{i % 20}" for i in range(n)],
             "n_chars": pa.array([len(t) for t in texts], pa.int64()),
         }
@@ -75,44 +86,27 @@ def _documents(rng: np.random.Generator, n: int) -> pa.Table:
 
 
 def _embeddings(rng: np.random.Generator, n: int, dim: int = 64) -> pa.Table:
-    centers = rng.normal(size=(10, dim))
-    label = rng.integers(0, 10, n)
-    vec = centers[label] + 0.6 * rng.normal(size=(n, dim))
-    copies = np.flatnonzero(rng.random(n) < 0.02)
-    copies = copies[copies > 0]
-    src = rng.integers(0, copies, len(copies)) if len(copies) else copies
-    vec[copies], label[copies] = vec[src], label[src]
+    vec = rng.normal(size=(n, dim))
     vec = (vec / np.linalg.norm(vec, axis=1, keepdims=True)).astype(np.float32)
     return pa.table(
         {
             "vec_id": pa.array(np.arange(n), pa.int64()),
-            "embedding": pa.array(list(vec), pa.list_(pa.float32())),
-            "label": pa.array(label, pa.int32()),
+            "embedding": pa.FixedSizeListArray.from_arrays(pa.array(vec.ravel()), dim).cast(
+                pa.list_(pa.float32())
+            ),
+            "label": pa.array(rng.integers(0, 10, n), pa.int32()),
         }
     )
 
 
-def generate(out_dir: str, sf: float, doc_sf: float, seed: int) -> dict[str, int]:
-    """Write every table under ``out_dir``; returns row counts by table.
-
-    ``documents`` scales with ``doc_sf`` instead of ``sf``: the DuckDB
-    oracles of t05 and c01 compare document pairs, so their cost grows
-    with the square of its row count."""
+def generate(out_dir: str, sf: float, seed: int) -> dict[str, int]:
+    """Write every table under ``out_dir``; returns row counts by table."""
     rng = np.random.default_rng(seed)
-    n_cust, n_supp, n_part = int(150_000 * sf), max(int(10_000 * sf), 10), int(200_000 * sf)
-    n_ord, n_ev, n_emb = int(1_500_000 * sf), int(1_000_000 * sf), int(20_000 * sf)
-    n_doc = int(50_000 * doc_sf)
+    n_cust, n_supp, n_part = int(150_000 * sf), int(10_000 * sf), int(200_000 * sf)
+    n_ord, n_li, n_ev = int(1_500_000 * sf), int(6_000_000 * sf), int(1_000_000 * sf)
+    n_doc, n_emb, n_user = int(50_000 * sf), int(20_000 * sf), int(15_000 * sf)
 
-    o_date = rng.integers(0, 2404, n_ord)  # 1995-01-01 .. 2001-08-01
-    n_lines = rng.integers(1, 8, n_ord)
-    l_order = np.repeat(np.arange(n_ord), n_lines)
-    l_num = np.concatenate([np.arange(1, k + 1) for k in n_lines])
-    n_li = len(l_order)
-    l_part = rng.integers(0, n_part, n_li)
     qty = rng.integers(1, 51, n_li).astype(np.float64)
-    retail = 900.0 + (l_part % 1000) / 10.0
-
-    ev_us = np.sort(rng.integers(0, 30 * DAY_US, n_ev))
     tables = {
         "region": pa.table(
             {
@@ -133,7 +127,7 @@ def generate(out_dir: str, sf: float, doc_sf: float, seed: int) -> dict[str, int
                 "c_name": _names("Customer", n_cust),
                 "c_nationkey": pa.array(rng.integers(0, 25, n_cust), pa.int32()),
                 "c_acctbal": _money(rng, -999.99, 9999.99, n_cust),
-                "c_mktsegment": [SEGMENTS[k] for k in rng.integers(0, 5, n_cust)],
+                "c_mktsegment": _pick(rng, SEGMENTS, n_cust),
             }
         ),
         "supplier": pa.table(
@@ -147,12 +141,14 @@ def generate(out_dir: str, sf: float, doc_sf: float, seed: int) -> dict[str, int
         "part": pa.table(
             {
                 "p_partkey": pa.array(np.arange(n_part), pa.int64()),
-                "p_name": [
-                    f"{COLORS[a]} {NOUNS[b]}"
-                    for a, b in zip(rng.integers(0, 8, n_part), rng.integers(0, 8, n_part))
-                ],
-                "p_brand": [f"Brand#{k}" for k in rng.integers(1, 26, n_part)],
-                "p_type": [PART_TYPES[k] for k in rng.integers(0, 6, n_part)],
+                "p_name": pa.array(
+                    np.char.add(
+                        np.char.add(np.asarray(COLORS)[rng.integers(0, 8, n_part)], " "),
+                        np.asarray(NOUNS)[rng.integers(0, 8, n_part)],
+                    )
+                ),
+                "p_brand": pa.array(np.char.add("Brand#", rng.integers(1, 26, n_part).astype(str))),
+                "p_type": _pick(rng, PART_TYPES, n_part),
                 "p_size": pa.array(rng.integers(1, 51, n_part), pa.int32()),
                 "p_retailprice": 900.0 + (np.arange(n_part) % 1000) / 10.0,
             }
@@ -161,37 +157,41 @@ def generate(out_dir: str, sf: float, doc_sf: float, seed: int) -> dict[str, int
             {
                 "o_orderkey": pa.array(np.arange(n_ord), pa.int64()),
                 "o_custkey": pa.array(rng.integers(0, n_cust, n_ord), pa.int64()),
-                "o_orderstatus": [("F", "O", "P")[k] for k in rng.integers(0, 3, n_ord)],
+                "o_orderstatus": _pick(rng, ("F", "O", "P"), n_ord),
                 "o_totalprice": _money(rng, 1000.0, 500_000.0, n_ord),
-                "o_orderdate": _days("1995-01-01", o_date),
-                "o_orderpriority": [PRIORITIES[k] for k in rng.integers(0, 5, n_ord)],
+                "o_orderdate": _days("1995-01-01", rng.integers(0, 2404, n_ord)),
+                "o_orderpriority": _pick(rng, PRIORITIES, n_ord),
             }
         ),
         "lineitem": pa.table(
             {
-                "l_orderkey": pa.array(l_order, pa.int64()),
-                "l_partkey": pa.array(l_part, pa.int64()),
+                "l_orderkey": pa.array(rng.integers(0, n_ord, n_li), pa.int64()),
+                "l_partkey": pa.array(rng.integers(0, n_part, n_li), pa.int64()),
                 "l_suppkey": pa.array(rng.integers(0, n_supp, n_li), pa.int64()),
-                "l_linenumber": pa.array(l_num, pa.int32()),
+                "l_linenumber": pa.array(rng.integers(1, 8, n_li), pa.int32()),
                 "l_quantity": qty,
-                "l_extendedprice": np.round(qty * retail, 2),
+                "l_extendedprice": _money(rng, 900.0, 105_000.0, n_li),
                 "l_discount": rng.integers(0, 11, n_li) / 100.0,
                 "l_tax": rng.integers(0, 9, n_li) / 100.0,
-                "l_returnflag": [("A", "N", "R")[k] for k in rng.integers(0, 3, n_li)],
-                "l_linestatus": [("F", "O")[k] for k in rng.integers(0, 2, n_li)],
-                "l_shipdate": _days("1995-01-01", o_date[l_order] + rng.integers(1, 122, n_li)),
+                "l_returnflag": _pick(rng, ("A", "N", "R"), n_li),
+                "l_linestatus": _pick(rng, ("F", "O"), n_li),
+                "l_shipdate": _days("1995-01-02", rng.integers(0, 2498, n_li)),
             }
         ),
         "events": pa.table(
             {
                 "event_id": pa.array(np.arange(n_ev), pa.int64()),
                 "ts": pa.array(
-                    np.datetime64("2024-01-01", "us").astype(np.int64) + ev_us, pa.timestamp("us")
+                    np.datetime64("2024-01-01", "us").astype(np.int64)
+                    + np.sort(rng.integers(0, 30 * DAY_US, n_ev)),
+                    pa.timestamp("us"),
                 ),
-                "user_id": pa.array(rng.integers(0, max(int(1500 * sf), 10), n_ev), pa.int64()),
-                "event_type": [EVENT_TYPES[k] for k in rng.integers(0, 5, n_ev)],
-                "value": np.round(rng.uniform(0.01, 490.0, n_ev), 2),
-                "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n_ev)],
+                "user_id": pa.array(rng.integers(0, n_user, n_ev), pa.int64()),
+                "event_type": _pick(rng, EVENT_TYPES, n_ev),
+                "value": np.round(rng.exponential(50.0, n_ev), 2),
+                "props": pa.array(
+                    np.char.add(np.char.add('{"k": ', rng.integers(0, 100, n_ev).astype(str)), "}")
+                ),
             }
         ),
         "documents": _documents(rng, n_doc),

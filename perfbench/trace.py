@@ -78,7 +78,7 @@ class Tracer:
         self._root: Span | None = None
         self._op_stack: list[Span] = []
         self._op_id = -1
-        self.bookkeeping_s = 0.0  # time spent in span entry and exit
+        self.bookkeeping_s = 0.0  # the tracer's own time: span entry and exit, hooks
 
     # -- spans --------------------------------------------------------------
     @contextmanager
@@ -117,7 +117,6 @@ class Tracer:
         """Trace one operation: install the patches, open its root span.
         The root owns the unlabelled jobs no child span claimed."""
         self._op_id = op_id
-        self.bookkeeping_s = 0.0
         before = self._ungrouped()
         self._op_stack = self._local.__dict__.setdefault("stack", [])
         for owner, attr, wrapper in self._patches:
@@ -125,7 +124,10 @@ class Tracer:
         try:
             with self.span("op") as root:
                 self._root = root
+                self.bookkeeping_s = 0.0
                 yield root
+                # the tracer's own time inside the operation's timed region
+                root.attrs["bookkeeping_s"] = self.bookkeeping_s
         finally:
             self._root = None
             for owner, attr, wrapper in self._patches:
@@ -137,17 +139,24 @@ class Tracer:
         """Register a patch of ``owner.attr``; active only inside :meth:`op`.
 
         ``before(args, kwargs)`` may rewrite the call's keyword arguments;
-        ``after(span, result, kwargs)`` records attributes on the span."""
+        ``after(span, result, kwargs)`` records attributes on the span once
+        it has closed. Both count as the tracer's own time."""
         orig = getattr(owner, attr)
         tracer = self
 
         def wrapper(*args, **kwargs):
+            t0 = time.perf_counter()
             if before is not None:
                 before(args, kwargs)
+            hooks_s = time.perf_counter() - t0
             with tracer.span(name) as sp:
                 result = orig(*args, **kwargs)
-                if after is not None:
-                    after(sp, result, kwargs)
+            t1 = time.perf_counter()
+            if after is not None:
+                after(sp, result, kwargs)
+            hooks_s += time.perf_counter() - t1
+            with tracer._lock:
+                tracer.bookkeeping_s += hooks_s
             return result
 
         wrapper.__wrapped__ = orig
