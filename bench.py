@@ -196,9 +196,9 @@ def _cc_at_scale_section(spark, timings: dict) -> dict:
     Correctness of the at-scale run is double-checked in-bench:
     * analytically — the synthetic graph's component minima are known in
       closed form, full-graph mismatch count must be 0;
-    * driver union-find parity on a sampled subgraph (5k complete chain
-      components, 35k edges): same edges through the driver path must
-      yield identical labels.
+    * small-graph kernel parity on a sampled subgraph (5k complete chain
+      components, 35k edges): same edges through the numpy kernel path
+      must yield identical labels.
     """
     import time as _t
 
@@ -230,7 +230,7 @@ def _cc_at_scale_section(spark, timings: dict) -> dict:
     )
     mism = comp.where(F.col("component") != want).count()
 
-    # driver union-find parity on a sampled subgraph of COMPLETE components
+    # small-graph kernel parity on a sampled subgraph of COMPLETE components
     sub = chains.where(F.col("src") < BASE + 5000 * 8)
     uf = connected_components(sub, small_graph_threshold=10**9)
     parity_mism = (

@@ -41,7 +41,7 @@ def canon_map(entities: DataFrame, edges: DataFrame) -> DataFrame:
     :func:`comention_edges` emits — star edges from the group min), so CC
     skips its undirect-distinct shuffle. A caller violating it only loses
     that optimization: duplicate undirected edges are harmless to both CC
-    paths (min-label and union-find are idempotent)."""
+    paths (the numpy kernel and the min-label loop are idempotent)."""
     comp = connected_components(edges, "src", "dst", edges_distinct=True)
     return (
         entities.select(F.col("entity_id"))

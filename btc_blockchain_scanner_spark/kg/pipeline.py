@@ -186,9 +186,13 @@ def run(
         f_edg = pool.submit(
             lambda: edges.write.mode("overwrite").parquet(f"{out_dir}/edges")
         )
-        canon = canonicalize.canon_map(entities, edges_sim).localCheckpoint(eager=True)
-        f_ent.result()
-        f_edg.result()
+        try:
+            canon = canonicalize.canon_map(entities, edges_sim).localCheckpoint(eager=True)
+        finally:
+            # observe the writes even when canon raised: the pool's exit
+            # waits for them but would swallow their failures
+            for f in (f_ent, f_edg):
+                f.result()
 
     nodes = materialize.build_nodes(entities, canon)
     # canon state write ∥ nodes sink (nodes needs canon, so it waited)

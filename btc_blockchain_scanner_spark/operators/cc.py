@@ -1,11 +1,17 @@
-"""Distributed connected components (min-label propagation + pointer doubling).
+"""Connected components: a numpy kernel for small graphs, a distributed
+min-label loop (with pointer doubling) for the rest.
 
 Reference analog: the incremental union-find in RunUpdateWallets2.java
 :151-263 where every address row carries its wallet id and merges are bulk
 relabels (``UPDATE address_x SET wallet_id=min WHERE wallet_id=other``) —
 its acknowledged hot spot is hub wallets (SURVEY.md §2.7 M2, §4 skew row).
 
-Spark-first design:
+The physical path is chosen by size. A graph of at most
+``small_graph_threshold`` undirected edges (default
+``smallgraph.SMALL_GRAPH_EDGES``) is collected once through Arrow and
+resolved in numpy on the driver (operators/smallgraph.py) — the
+reference's one-box union-find. Every KG entity graph and every registered
+query's graph takes this path. Larger graphs run the distributed loop:
 
 * labels live in a (node, label) DataFrame; one propagation round is
   ``edges ⋈ labels → groupBy(node).min(label)`` — the min() is
@@ -27,8 +33,11 @@ Spark-first design:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import smallgraph
 
 
 def connected_components(
@@ -37,7 +46,7 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 50,
     eager_checkpoint: bool = True,
-    small_graph_threshold: int = 100_000,
+    small_graph_threshold: int = smallgraph.SMALL_GRAPH_EDGES,
     stats_out: dict | None = None,
     checkpoint_mode: str = "local_unpersist",
     edges_distinct: bool = False,
@@ -48,22 +57,17 @@ def connected_components(
     id in the component (deterministic at any parallelism).
 
     Size-aware strategy: when the graph has at most
-    ``small_graph_threshold`` deduplicated UNDIRECTED edges (i.e. up to
-    ``2 * small_graph_threshold`` rows of the both-orientations list, which
-    is also the driver-side collect bound of this path), the edges are
-    collected and resolved by a driver-side union-find — exactly the
-    reference's in-memory path (RunUpdateWallets2 keeps the whole wallet
-    map on one box). The KG pipeline's entity graph is bounded by the
-    distinct-entity count, which is orders of magnitude below the mention
-    count, so this is the common case; every distributed CC round otherwise
-    costs 3 shuffles + a checkpoint of pure fixed latency (~10 s for a
-    30-node graph locally). Labels are identical by construction (min node
-    id per component). ``small_graph_threshold=0`` forces the distributed
-    loop (tests and the bench's at-scale CC section do).
+    ``small_graph_threshold`` deduplicated UNDIRECTED edges, one bounded
+    Arrow collect of the canonical ``(least, greatest)`` pairs feeds the
+    numpy kernel (:mod:`.smallgraph`), and the labels come back through
+    ``createDataFrame`` from Arrow. Nothing is cached or checkpointed on
+    this path. Labels are identical by construction (min node id per
+    component; parity-tested). ``small_graph_threshold=0`` forces the
+    distributed loop (tests and the bench's at-scale CC section do).
 
     ``stats_out`` (optional dict) receives run evidence: ``path``
-    ("driver" | "distributed"), ``undirected_edges``, and for the
-    distributed loop ``rounds``.
+    ("driver" for the kernel | "distributed"), ``undirected_edges``, and
+    for the distributed loop ``rounds``.
 
     ``checkpoint_mode`` picks how each round's labels are materialized and
     how the SUPERSEDED round's storage is reclaimed (the VERDICT r4 item-2
@@ -94,6 +98,18 @@ def connected_components(
             f"connected_components: unknown checkpoint_mode {checkpoint_mode!r}; "
             "expected 'local_unpersist', 'local' or 'disk'"
         )
+    spark = edges.sparkSession
+    if small_graph_threshold:
+        g = smallgraph.collect_edges(
+            edges, src, dst, small_graph_threshold, edges_distinct=edges_distinct
+        )
+        if g is not None:
+            nodes, a, b = g
+            if stats_out is not None:
+                stats_out.update(undirected_edges=len(a), path="driver")
+            comp = nodes[smallgraph.components(len(nodes), a, b)]
+            return spark.createDataFrame(pa.table({"node": nodes, "component": comp}))
+
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col("a") != F.col("b")
     )
@@ -106,53 +122,9 @@ def connected_components(
     if not edges_distinct:
         und = und.distinct()
     und = und.localCheckpoint(eager=eager_checkpoint) if eager_checkpoint else und.cache()
-
-    # Size probe + driver collect in ONE bounded job (r6): the old
-    # count-then-collect pair ran two full passes over the undirected list
-    # on the COMMON path (every bench/gate entity graph). A
-    # limit(cap+1).collect() makes the identical threshold decision — it
-    # returns every row iff there are <= cap — while bounding driver bytes
-    # exactly like the old collect did, and CollectLimit's early-exit
-    # partition scan makes the over-threshold probe cheap (it reads the
-    # already-checkpointed blocks). Union-find with merge-into-min is
-    # edge-ORDER-independent (the merged root is min(rootA, rootB), so by
-    # induction the final root is the component min under any order), and
-    # the old collect's row order was partition-arbitrary anyway.
-    rows_small = None
-    if small_graph_threshold:
-        cap = 2 * small_graph_threshold
-        probe = und.limit(cap + 1).collect()
-        if len(probe) <= cap:
-            rows_small = probe
     if stats_out is not None:
-        n_und = len(rows_small) if rows_small is not None else und.count()
-        stats_out["undirected_edges"] = n_und // 2
-    if rows_small is not None:
-        if stats_out is not None:
-            stats_out["path"] = "driver"
-        spark = edges.sparkSession
-        parent: dict[int, int] = {}
+        stats_out.update(undirected_edges=und.count() // 2, path="distributed")
 
-        def find(x: int) -> int:
-            r = x
-            while parent.get(r, r) != r:
-                r = parent[r]
-            while parent.get(x, x) != x:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for row in rows_small:
-            a, b = find(int(row[0])), find(int(row[1]))
-            if a != b:
-                parent[max(a, b)] = min(a, b)
-        nodes = set(parent) | {v for v in parent.values()}
-        out = [(n, find(n)) for n in sorted(nodes)]
-        return spark.createDataFrame(out, "node long, component long")
-
-    if stats_out is not None:
-        stats_out["path"] = "distributed"
-
-    spark = edges.sparkSession
     sc = spark.sparkContext
 
     def _persistent_ids() -> set[int]:

@@ -1,15 +1,23 @@
 """Graph traversal operators beyond CC.
 
 M7 (SURVEY.md §2.7): the reference's transitive related-address expansion
-(db/DbQueries.java:39-64) — BFS over addr → spending-tx → addr. Here: an
-iterative frontier-join loop with visited-set pruning, localCheckpoint per
-hop (same lineage hygiene as CC).
+(db/DbQueries.java:39-64) — BFS over addr → spending-tx → addr. Like CC,
+the physical path is chosen by size: a graph within the small-graph budget
+is collected once through Arrow and walked by the numpy CSR kernel
+(operators/smallgraph.py); a larger one runs an iterative frontier-join
+loop with visited-set pruning and a localCheckpoint per hop (same lineage
+hygiene as CC).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import smallgraph
 
 
 def bfs_reachable(
@@ -21,13 +29,22 @@ def bfs_reachable(
     undirected: bool = True,
     edges_distinct: bool = False,
     broadcast_node_limit: int = 4_000_000,
+    small_graph_threshold: int = smallgraph.SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """Nodes reachable from ``sources`` (column ``node``) within max_hops.
 
-    Returns (node, hops) with the minimal hop count. Scale notes: the
-    edge list is undirected + deduplicated once and checkpointed; each
-    hop joins it against the frontier and anti-joins the visited set —
-    both checkpointed so plans stay flat.
+    Returns (node, hops) with the minimal hop count; every source is
+    returned at hop 0, also one that is on no edge.
+
+    Small path: with at most ``small_graph_threshold`` deduplicated edges
+    (and at most as many source rows), the edges and the sources are each
+    collected in one bounded Arrow job and the walk runs in numpy
+    (:func:`.smallgraph.bfs`); nothing is cached or checkpointed.
+    ``small_graph_threshold=0`` forces the distributed loop below.
+
+    Distributed loop: the edge list is undirected + deduplicated once and
+    checkpointed; each hop joins it against the frontier and anti-joins
+    the visited set — both checkpointed so plans stay flat.
 
     r6 join strategy (guide §3.1): the frontier and visited sets have
     EXACT known counts (each hop counts them anyway), so while they stay
@@ -43,6 +60,13 @@ def bfs_reachable(
     free edge list is itself distinct, so the prep pass skips one full
     shuffle of the edge list.
     """
+    if small_graph_threshold:
+        out = _small_bfs(
+            edges, sources, max_hops, src, dst, undirected, edges_distinct, small_graph_threshold
+        )
+        if out is not None:
+            return out
+
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if undirected:
         e = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -75,3 +99,25 @@ def bfs_reachable(
         frontier = nxt
 
     return visited
+
+
+def _small_bfs(edges, sources, max_hops, src, dst, undirected, edges_distinct, cap):
+    """The kernel path of :func:`bfs_reachable`, or None over ``cap``."""
+    g = smallgraph.collect_edges(edges, src, dst, cap, edges_distinct, undirected)
+    if g is None:
+        return None
+    srcs = sources.select(F.col("node").cast("long")).limit(cap + 1).toArrow()
+    if srcs.num_rows > cap:
+        return None
+    srcs = pc.unique(srcs.column(0))  # in Arrow: no shuffle job for a distinct
+    nodes, a, b = g
+    ids = srcs.drop_null().to_numpy()
+    pos = np.searchsorted(nodes, ids)
+    on_graph = pos < len(nodes)
+    on_graph[on_graph] = nodes[pos[on_graph]] == ids[on_graph]
+    dist = smallgraph.bfs(len(nodes), a, b, pos[on_graph], max_hops, undirected)
+    # sources (null included) at hop 0, then every node first reached later
+    hit = dist > 0
+    node = pa.concat_arrays([srcs, pa.array(nodes[hit])])
+    hops = np.concatenate([np.zeros(len(srcs), np.int32), dist[hit].astype(np.int32)])
+    return edges.sparkSession.createDataFrame(pa.table({"node": node, "hops": hops}))

@@ -215,11 +215,6 @@ def _closure_from_rows(rows):
     return {int(i): j for j, i in enumerate(ids)}, M, nrm
 
 
-def _vec_closure(vectors: DataFrame, id_col: str, vec_col: str):
-    """Collect a bounded (id → vector) table for closure broadcast."""
-    return _closure_from_rows(vectors.select(F.col(id_col), F.col(vec_col)).collect())
-
-
 def _try_vec_closure(vectors: DataFrame, id_col: str, vec_col: str, max_rows: int):
     """ONE pass: take(max_rows+1). Returns the closure triple if the table
     fits the bound, else None — the rows double as the collect, so the
@@ -231,35 +226,10 @@ def _try_vec_closure(vectors: DataFrame, id_col: str, vec_col: str, max_rows: in
     return _closure_from_rows(rows)
 
 
-def gather_verify_pairs(
-    pairs: DataFrame,
-    vectors: DataFrame,
-    vectors_b: DataFrame | None = None,
-    id_col: str = "_id",
-    vec_col: str = "_v",
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    out_col: str = "cos_sim",
-) -> DataFrame:
-    """Score (a, b) id pairs with exact cosine by closure-broadcasting the
-    BOUNDED vector table(s) and gathering per Arrow batch (row-wise einsum).
-
-    Only id pairs stream through Python — no vector ever enters the
-    candidate shuffle, and no per-pair fold runs in the JVM. This is the
-    candidate-verify twin of the exact path's closure-broadcast GEMM; it
-    requires the vector table(s) to fit the driver/closure (caller-checked).
-    ``vectors_b`` gives the b-side its own table (top-k: queries vs corpus);
-    default is self-join semantics. Zero-norm vectors score NULL (NaN →
-    filtered by any threshold / ordered last).
-    """
-    index_a, Ma, na = _vec_closure(vectors, id_col, vec_col)
-    index_b, Mb, nb = (
-        (index_a, Ma, na) if vectors_b is None else _vec_closure(vectors_b, id_col, vec_col)
-    )
-    return _gather_score(pairs, (index_a, Ma, na), (index_b, Mb, nb), a_col, b_col, out_col)
-
-
 def _gather_score(pairs, closure_a, closure_b, a_col, b_col, out_col="cos_sim"):
+    """Score (a, b) id pairs with exact cosine, gathering rows of the two
+    closure-broadcast vector tables per Arrow batch (row-wise einsum).
+    Only id pairs stream through Python; zero-norm vectors score NULL."""
     import numpy as np
 
     index_a, Ma, na = closure_a

@@ -165,7 +165,7 @@ def kg03_entity_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg04_canonical_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonicalization: connected components over the triple co-occurrence
     graph, label = min entity id (M2 merge-into-min rule). The Spark side is
-    the iterative min-label propagation (operators/cc.py); the oracle is an
+    operators/cc.py (its small-graph kernel at this size); the oracle is an
     independent WITH RECURSIVE transitive closure."""
     from ..operators.rank import ranked_by_md5
 
@@ -176,12 +176,14 @@ def kg04_canonical_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     ids = ranked_by_md5(surfaces, "surface", "id", prefix_len=2).select("surface", "id")
+    # The id map is bounded by the DOC_ENTITIES dictionary: materialize it
+    # once, so neither the edges nor the final join re-runs the rank.
+    ids = spark.createDataFrame(ids.toArrow())
+    # CC drops the self-loops and deduplicates the (least, greatest) pairs
     edges = (
         tr.join(ids.withColumnRenamed("surface", "subj").withColumnRenamed("id", "src"), "subj")
         .join(ids.withColumnRenamed("surface", "obj").withColumnRenamed("id", "dst"), "obj")
         .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
     )
     comp = connected_components(edges, "src", "dst")
     return ids.join(comp, ids.id == comp.node, "left").select(

@@ -341,57 +341,62 @@ def t06_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r6 scheduling, refined: instead of two barrier waves (dependents
     # waited for ALL of wave 1 — including the O(n²) exact baselines no
     # family depends on), each dependent chains on the ONE shared-frame
-    # future it needs. 13 workers ≥ 13 tasks, so every task holds a worker
-    # immediately and the blocked `_after` tasks cannot deadlock the pool.
-    fams: dict = {}
-    with ThreadPoolExecutor(max_workers=13) as pool:
-        f_sh3 = pool.submit(_eager, sh3)
-        f_sigs = pool.submit(_eager, sigs)
-        f_eb = pool.submit(_eager, eb)
+    # future it needs.
+    shared = {"sh3": sh3, "sigs": sigs, "eb": eb}
+    # family → (the shared frame it probes, or None; its builder)
+    families = {
+        "winnow": (None, lambda: _eager(
+            dedup.winnow_dup_pairs(docs_s, k=5, window=4, min_shared=3).persist()
+        )),
+        "emb_exact": (None, lambda: _eager(
+            dedup.embedding_dup_pairs(emb_s, threshold=0.35, exact=True).persist()
+        )),
+        "top_exact": (None, lambda: _eager(
+            similarity.brute_force_topk(q, emb_s, k=1).select("q_id", "c_id").persist()
+        )),
+        "top_ivf": (None, lambda: _eager(
+            similarity.ivf_topk(q, emb_s, k=1, n_centroids=16, n_probe=10)
+            .select("q_id", "c_id").persist()
+        )),
+        "jacc_exact": ("sh3", lambda: _eager(
+            dedup.ngram_jaccard_pairs(docs_s, n=3, threshold=0.5, sh=sh3)
+            .select("id_a", "id_b").persist()
+        )),
+        "minhash": ("sh3", lambda: _eager(
+            dedup.minhash_lsh_pairs(
+                docs_s, n=3, num_perm=32, num_bands=8, threshold=0.5, sh=sh3
+            ).persist()
+        )),
+        "sim_exact": ("sigs", lambda: _eager(
+            dedup.simhash_pairs_exact(docs_s, max_hamming=3, sigs=sigs).persist()
+        )),
+        "sim_band": ("sigs", lambda: _eager(
+            dedup.simhash_dup_pairs(docs_s, max_hamming=3, sigs=sigs).persist()
+        )),
+        "emb_lsh": ("eb", lambda: _eager(
+            dedup.embedding_dup_pairs(
+                emb_s, threshold=0.35, num_tables=12, planes_per_table=3, buckets=eb
+            ).persist()
+        )),
+        "top_lsh": ("eb", lambda: _eager(
+            similarity.lsh_topk(
+                q, emb_s, k=1, num_tables=12, planes_per_table=3,
+                corpus_buckets=eb, query_buckets=eb.where(F.col("_id") < 50),
+            ).select("q_id", "c_id").persist()
+        )),
+    }
+    # One worker per task, sized from the submissions: every task holds a
+    # worker at once, so a dependent blocked in `_after` cannot starve the
+    # shared-frame task it waits on.
+    with ThreadPoolExecutor(max_workers=len(shared) + len(families)) as pool:
+        ready = {name: pool.submit(_eager, df) for name, df in shared.items()}
         futs = {
-            "winnow": pool.submit(lambda: _eager(
-                dedup.winnow_dup_pairs(docs_s, k=5, window=4, min_shared=3).persist()
-            )),
-            "emb_exact": pool.submit(lambda: _eager(
-                dedup.embedding_dup_pairs(emb_s, threshold=0.35, exact=True).persist()
-            )),
-            "top_exact": pool.submit(lambda: _eager(
-                similarity.brute_force_topk(q, emb_s, k=1).select("q_id", "c_id").persist()
-            )),
-            "top_ivf": pool.submit(lambda: _eager(
-                similarity.ivf_topk(q, emb_s, k=1, n_centroids=16, n_probe=10)
-                .select("q_id", "c_id").persist()
-            )),
-            "jacc_exact": pool.submit(_after, f_sh3, lambda: _eager(
-                dedup.ngram_jaccard_pairs(docs_s, n=3, threshold=0.5, sh=sh3)
-                .select("id_a", "id_b").persist()
-            )),
-            "minhash": pool.submit(_after, f_sh3, lambda: _eager(
-                dedup.minhash_lsh_pairs(
-                    docs_s, n=3, num_perm=32, num_bands=8, threshold=0.5, sh=sh3
-                ).persist()
-            )),
-            "sim_exact": pool.submit(_after, f_sigs, lambda: _eager(
-                dedup.simhash_pairs_exact(docs_s, max_hamming=3, sigs=sigs).persist()
-            )),
-            "sim_band": pool.submit(_after, f_sigs, lambda: _eager(
-                dedup.simhash_dup_pairs(docs_s, max_hamming=3, sigs=sigs).persist()
-            )),
-            "emb_lsh": pool.submit(_after, f_eb, lambda: _eager(
-                dedup.embedding_dup_pairs(
-                    emb_s, threshold=0.35, num_tables=12, planes_per_table=3, buckets=eb
-                ).persist()
-            )),
-            "top_lsh": pool.submit(_after, f_eb, lambda: _eager(
-                similarity.lsh_topk(
-                    q, emb_s, k=1, num_tables=12, planes_per_table=3,
-                    corpus_buckets=eb, query_buckets=eb.where(F.col("_id") < 50),
-                ).select("q_id", "c_id").persist()
-            )),
+            name: pool.submit(_after, ready[dep], build) if dep else pool.submit(build)
+            for name, (dep, build) in families.items()
         }
-        sh3, sigs, eb = f_sh3.result(), f_sigs.result(), f_eb.result()
-        for name, f in futs.items():
-            fams[name] = f.result()
+        for f in ready.values():
+            f.result()
+        fams = {name: f.result() for name, f in futs.items()}
     jacc_exact, minhash, winnow = fams["jacc_exact"], fams["minhash"], fams["winnow"]
     sim_exact, sim_band = fams["sim_exact"], fams["sim_band"]
     emb_exact, emb_lsh = fams["emb_exact"], fams["emb_lsh"]

@@ -11,7 +11,7 @@ from btc_blockchain_scanner_spark.operators.cc import (
 
 def _cc(spark, edges, threshold=0):
     # threshold=0 forces the DISTRIBUTED min-label loop (these topology
-    # tests exist to cover it); the driver union-find fast path is
+    # tests exist to cover it); the numpy small-graph kernel is
     # equivalence-tested against it in test_small_graph_fast_path below.
     df = spark.createDataFrame(edges, "src long, dst long")
     return {
@@ -30,6 +30,26 @@ def test_small_graph_fast_path_equals_distributed(spark):
     fast = _cc(spark, edges, threshold=100_000)
     slow = _cc(spark, edges, threshold=0)
     assert fast == slow
+
+
+def test_small_path_leaves_no_persisted_rdds(spark):
+    """The kernel paths of CC and BFS cache and checkpoint nothing: the
+    JVM's persistent-RDD registry gains no id across a call."""
+    from btc_blockchain_scanner_spark.operators.graph import bfs_reachable
+
+    def persistent_ids():
+        jm = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jm.keySet().toArray()}
+
+    e = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
+    src = spark.createDataFrame([(1,)], "node long")
+    before = persistent_ids()
+    st: dict = {}
+    assert len(connected_components(e, stats_out=st).collect()) == 5
+    assert st["path"] == "driver"
+    assert len(bfs_reachable(e, src).collect()) == 3
+    # no NEW ids (the ContextCleaner may reap other tests' blocks meanwhile)
+    assert persistent_ids() - before == set()
 
 
 def test_chain(spark):

@@ -2,15 +2,18 @@
 
 from pyspark.sql import functions as F
 
-from btc_blockchain_scanner_spark.operators import graph, multimodal
+from btc_blockchain_scanner_spark.operators import graph, multimodal, smallgraph
 from btc_blockchain_scanner_spark.sources import ddl
+
+
+# the numpy small-graph kernel (default budget) and the distributed loop
+PATHS = (smallgraph.SMALL_GRAPH_EDGES, 0)
 
 
 def test_bfs_matches_python(spark):
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (4, 10), (20, 21)]
     e = spark.createDataFrame(edges, "src long, dst long")
     src = spark.createDataFrame([(1,)], "node long")
-    got = {(r.node, r.hops) for r in graph.bfs_reachable(e, src, max_hops=10).collect()}
 
     # python BFS oracle
     adj = {}
@@ -26,14 +29,23 @@ def test_bfs_matches_python(spark):
                     dist[v] = dist[u] + 1
                     nxt.append(v)
         frontier = nxt
-    assert got == set(dist.items())
+    for t in PATHS:
+        got = {
+            (r.node, r.hops)
+            for r in graph.bfs_reachable(e, src, max_hops=10, small_graph_threshold=t).collect()
+        }
+        assert got == set(dist.items()), t
 
 
 def test_bfs_respects_max_hops(spark):
     e = spark.createDataFrame([(i, i + 1) for i in range(6)], "src long, dst long")
     src = spark.createDataFrame([(0,)], "node long")
-    got = {r.node: r.hops for r in graph.bfs_reachable(e, src, max_hops=2).collect()}
-    assert got == {0: 0, 1: 1, 2: 2}
+    for t in PATHS:
+        got = {
+            r.node: r.hops
+            for r in graph.bfs_reachable(e, src, max_hops=2, small_graph_threshold=t).collect()
+        }
+        assert got == {0: 0, 1: 1, 2: 2}, t
 
 
 def test_multimodal_features_deterministic(spark):

@@ -460,3 +460,24 @@ def test_incremental_update_rejects_uri_state_dir(spark):
             pipeline.incremental_update(spark, tr, bad)
     with pytest.raises(NotImplementedError):
         merge_upsert(spark, "s3://bucket/entities", tr.limit(1), ["conv_id"])
+
+
+def test_sink_write_failure_surfaces_when_canon_raises(spark, tmp_path, monkeypatch):
+    """The entities/edges writes overlap canon_map; when canon raises, a
+    write failure must still be raised (canon's error chained to it), not
+    swallowed by the pool's exit."""
+    from btc_blockchain_scanner_spark.kg import materialize
+
+    def canon_fails(entities, edges):
+        raise RuntimeError("canon failed")
+
+    def edges_fail(linked_triples):
+        boom = F.raise_error(F.lit("edges sink failed"))
+        return linked_triples.select(F.when(F.lit(True), boom).otherwise(F.lit(1)).alias("x"))
+
+    monkeypatch.setattr(canonicalize, "canon_map", canon_fails)
+    monkeypatch.setattr(materialize, "build_edges", edges_fail)
+    tr = datagen.transcripts(spark, n_convs=4)
+    with pytest.raises(Exception, match="edges sink failed") as err:
+        pipeline.run(spark, tr, str(tmp_path / "kg"), n_parts=2)
+    assert "canon failed" in str(err.value.__context__)

@@ -99,25 +99,51 @@ edges_strategy = st.lists(
 )
 
 
+def _messy(edges):
+    """Duplicates and both orientations of some edges on top of the drawn
+    list (which already carries self-loops and repeats by chance)."""
+    return edges + [(b, a) for a, b in edges[::3]] + edges[:2]
+
+
 @given(edges=edges_strategy)
 @settings(**_SETTINGS)
 def test_unionfind_fast_path_equals_distributed_cc(spark, edges):
-    """The driver union-find and the distributed min-label loop must agree
-    on ANY edge list (self-loops, duplicates, both orientations)."""
+    """The numpy small-graph kernel and the distributed min-label loop
+    must agree on ANY edge list (self-loops, duplicates, both
+    orientations), an all-self-loop (empty) graph included."""
     from btc_blockchain_scanner_spark.operators.cc import connected_components
 
-    if all(a == b for a, b in edges):
-        return  # nothing but self-loops → empty graph in both paths
-    df = spark.createDataFrame(edges, "src long, dst long")
-    fast = {
-        (r.node, r.component)
-        for r in connected_components(df, small_graph_threshold=10_000).collect()
-    }
-    slow = {
-        (r.node, r.component)
-        for r in connected_components(df, small_graph_threshold=0).collect()
-    }
-    assert fast == slow
+    df = spark.createDataFrame(_messy(edges), "src long, dst long")
+    fast = connected_components(df).collect()
+    slow = connected_components(df, small_graph_threshold=0).collect()
+    assert sorted(fast) == sorted(slow)
+
+
+@given(
+    edges=edges_strategy,
+    # 0..40 are graph ids (isolated when on no drawn edge), 41..50 absent
+    sources=st.lists(st.integers(min_value=0, max_value=50), min_size=1, max_size=4),
+    max_hops=st.integers(min_value=0, max_value=4),
+    undirected=st.booleans(),
+)
+@settings(**_SETTINGS)
+def test_small_graph_bfs_equals_distributed(spark, edges, sources, max_hops, undirected):
+    """BFS's numpy kernel and its distributed hop loop return identical
+    (node, hops) rows, sources off the graph included at hop 0."""
+    from btc_blockchain_scanner_spark.operators.graph import bfs_reachable
+
+    df = spark.createDataFrame(_messy(edges), "src long, dst long")
+    src = spark.createDataFrame([(s,) for s in sources], "node long")
+
+    def run(threshold):
+        return sorted(
+            bfs_reachable(
+                df, src, max_hops=max_hops, undirected=undirected,
+                small_graph_threshold=threshold,
+            ).collect()
+        )
+
+    assert run(10_000) == run(0)
 
 
 kv_strategy = st.lists(
