@@ -4,11 +4,13 @@ tail validation.
 Reference analog (SURVEY.md §2.8): the NumberFile checkpoint —  a file
 rewritten every batch with the last processed id (util/Utils.java:287-329,
 used by RunUpdateSpent.java:98,130 etc.) — plus DbUpdate's run counters
-(DbUpdate.java:196-214). Here the manifest is itself a partitioned table:
-one row per conv_id-hash partition with the counters that FIXTURES.md §2
-specifies (turns_scanned, mentions_found, triples_emitted), written with
-dynamic partition overwrite so re-running a partition replaces exactly its
-own manifest row (single-writer-per-partition, idempotent).
+(DbUpdate.java:196-214). Here the manifest is itself a hive-partitioned
+parquet table: one row per conv_id-hash partition with the counters that
+FIXTURES.md §2 specifies (turns_scanned, mentions_found, triples_emitted).
+The rows are a handful of driver-side counters, so :meth:`Manifest.record`
+writes them from the driver through pyarrow (no Spark job) and replaces
+exactly the partitions it is given (single-writer-per-partition,
+idempotent); Spark still reads the directory as a table.
 
 Tail validation (M5, DbValidationUtils.java:77-165): the reference walks
 the table tail after a crash, compares stored counts against actual rows,
@@ -22,58 +24,89 @@ the "delete from the first bad block" repair.
 
 from __future__ import annotations
 
-import glob
-import os
+import datetime as dt
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyarrow import fs as pafs
 
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_key", T.StringType(), False),
-        T.StructField("last_done", T.StringType(), True),
-        T.StructField("turns_scanned", T.LongType(), True),
-        T.StructField("mentions_found", T.LongType(), True),
-        T.StructField("triples_emitted", T.LongType(), True),
-        T.StructField("updated_at", T.TimestampType(), True),
-    ]
+COUNTERS = ("turns_scanned", "mentions_found", "triples_emitted")
+# the data file of one manifest partition (partition_key is the directory)
+ROW_SCHEMA = pa.schema(
+    [("last_done", pa.string())]
+    + [(c, pa.int64()) for c in COUNTERS]
+    # UTC-adjusted, so Spark reads it as TIMESTAMP (not TIMESTAMP_NTZ)
+    + [("updated_at", pa.timestamp("us", tz="UTC"))]
 )
+# what :meth:`Manifest.rows` reads: the counters plus the partition key
+KEY = pa.field("partition_key", pa.string())
+READ_SCHEMA = pa.schema([KEY] + [(c, pa.int64()) for c in COUNTERS])
 
 
-def _is_dir(path: str) -> bool:
-    """URI-aware directory test (same resolution rules as
-    :func:`_partition_rowcount`)."""
+def _resolve(path: str) -> tuple[pafs.FileSystem, str]:
+    """(filesystem, path) for a plain local path or a URI.
+
+    URI-style paths (``file:``, ``hdfs://``, ``s3://``, ...) resolve through
+    ``pyarrow.fs.FileSystem.from_uri`` — the Arrow-native twin of the
+    Hadoop FileSystem API, so the manifest and the M5 check are
+    cluster-real without JVM round-trips. A scheme the local Arrow build
+    lacks (e.g. hdfs without libhdfs) raises loudly instead of silently
+    reading every partition as "absent" and quietly disabling incremental
+    resume."""
     if "://" in path or path.startswith("file:"):
-        from pyarrow import fs as pafs
+        try:
+            return pafs.FileSystem.from_uri(path)
+        except Exception as e:  # unsupported scheme must stay LOUD
+            raise NotImplementedError(
+                f"cannot resolve {path!r} via pyarrow.fs ({e}) — unsupported "
+                "scheme in this Arrow build; use Iceberg snapshot metadata "
+                "for such deployments"
+            ) from e
+    return pafs.LocalFileSystem(), path
 
-        filesystem, p = pafs.FileSystem.from_uri(path)
-        return filesystem.get_file_info(p).type == pafs.FileType.Directory
-    return os.path.isdir(path)
+
+def rowcount(path: str) -> int | None:
+    """Row count of one parquet directory from its footers, or None if the
+    directory is absent or any footer is unreadable (= corrupt tail).
+    Hidden ``.``/``_`` files are skipped, as Spark's reader skips them."""
+    filesystem, d = _resolve(path)
+    if filesystem.get_file_info(d).type != pafs.FileType.Directory:
+        return None
+    total = 0
+    for fi in filesystem.get_file_info(pafs.FileSelector(d)):
+        if fi.type != pafs.FileType.File or not fi.base_name.endswith(".parquet"):
+            continue
+        if fi.base_name.startswith((".", "_")):
+            continue
+        try:
+            total += pq.read_metadata(fi.path, filesystem=filesystem).num_rows
+        except Exception:  # noqa: BLE001 — any unreadable footer = corrupt
+            return None
+    return total
 
 
 class Manifest:
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
+    def __init__(self, path: str):
         self.path = path
 
-    def exists(self) -> bool:
-        return _is_dir(self.path)
-
-    def read(self) -> DataFrame:
-        if not self.exists():
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
-        return self.spark.read.parquet(self.path)
-
-    def done_partitions(self) -> set[str]:
-        if not self.exists():
-            return set()
-        # parquet partition-column type inference may read "3" back as int 3;
-        # normalize to strings so set algebra against pending keys works.
-        return {
-            str(r.partition_key)
-            for r in self.read().select("partition_key").distinct().collect()
-        }
+    def rows(self) -> list[dict]:
+        """Every manifest row as ``{partition_key, *COUNTERS}`` (keys as
+        strings), read from the driver through pyarrow — the manifest's one
+        reader. Reads only those columns, so files an older Spark writer
+        produced (INT96 ``updated_at``) read too."""
+        filesystem, root = _resolve(self.path)
+        if filesystem.get_file_info(root).type != pafs.FileType.Directory:
+            return []
+        dataset = ds.dataset(
+            root,
+            schema=READ_SCHEMA,
+            filesystem=filesystem,
+            format="parquet",
+            partitioning=ds.partitioning(pa.schema([KEY]), flavor="hive"),
+        )
+        return dataset.to_table().to_pylist()
 
     def validated_done(self, expected: dict[str, str]) -> set[str]:
         """Done partitions whose on-disk data matches the manifest counters.
@@ -90,102 +123,44 @@ class Manifest:
         manifest is EXCLUDED — the caller re-extracts it, and the dynamic
         partition overwrite replaces the bad tail byte-identically.
         """
-        if not self.exists():
-            return set()
-        cols = sorted(set(expected.values()))
-        rows = self.read().select("partition_key", *cols).collect()
         ok: set[str] = set()
-        for r in rows:
-            key = str(r["partition_key"])
+        for r in self.rows():
+            key = r["partition_key"]
             good = True
             for path, col in expected.items():
                 want = r[col] or 0
-                have = _partition_rowcount(path, key)
-                if have is None:
-                    # empty partitions legitimately write no directory
-                    good = want == 0
-                else:
-                    good = have == want
+                have = rowcount(f"{path.rstrip('/')}/partition_key={key}")
+                # empty partitions legitimately write no directory
+                good = want == 0 if have is None else have == want
                 if not good:
                     break
             if good:
                 ok.add(key)
         return ok
 
-    def record(self, counters: DataFrame) -> None:
-        """Upsert counter rows (one per partition_key) — dynamic partition
-        overwrite replaces only the partitions present in ``counters``."""
-        (
-            counters.select(
-                "partition_key",
-                "last_done",
-                "turns_scanned",
-                "mentions_found",
-                "triples_emitted",
-                F.current_timestamp().alias("updated_at"),
+    def record(self, rows: list[dict]) -> None:
+        """Upsert counter rows (``{partition_key, last_done, *COUNTERS}``,
+        one per partition_key) — replaces only the partitions given.
+
+        Each row is written to a hidden temporary file in its partition
+        directory, the partition's other files are deleted, then the
+        temporary file is renamed into place. An interrupted record leaves
+        the old row, the new row, or no row (the partition is merely
+        re-extracted on resume) — never an unreadable file, and readers skip
+        a leftover hidden temporary."""
+        filesystem, root = _resolve(self.path)
+        now = dt.datetime.now(dt.timezone.utc)
+        for r in rows:
+            pdir = f"{root.rstrip('/')}/partition_key={r['partition_key']}"
+            filesystem.create_dir(pdir, recursive=True)
+            table = pa.Table.from_pylist(
+                [{**{c: r[c] for c in ("last_done", *COUNTERS)}, "updated_at": now}],
+                schema=ROW_SCHEMA,
             )
-            # counters has exactly one row per partition_key by contract —
-            # a keyed repartition here shuffled ~n_parts rows into
-            # shuffle.partitions tasks (mostly empty) before an 8-file
-            # write; one task writes the whole tiny table faster. NOT
-            # coalesce(1): coalesce back-propagates through the narrow
-            # join into the createDataFrame pending-key frame, so ONE task
-            # evaluates all ~32 Python-side input partitions SEQUENTIALLY
-            # (~125 ms of Python-worker round-trip each ≈ 4 s measured for
-            # an 8-row write); repartition(1) keeps the upstream parallel
-            # and shuffles 8 rows (0.5 s measured — r6, guide §2.3).
-            .repartition(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_key")
-            .parquet(self.path)
-        )
-
-
-def _partition_rowcount(base: str, key: str) -> int | None:
-    """Row count of one hive partition from parquet footers, or None if the
-    directory is absent or any footer is unreadable (= corrupt tail).
-
-    Scheme-less paths walk the local filesystem (os/glob); URI-style paths
-    (``file:``, ``hdfs://``, ``s3://``, ...) resolve through
-    ``pyarrow.fs.FileSystem.from_uri`` — the Arrow-native twin of the
-    Hadoop FileSystem API, so the M5 check is cluster-real without JVM
-    round-trips (VERDICT r3 item 6; the r3 stopgap raised here). A scheme
-    the local Arrow build lacks (e.g. hdfs without libhdfs) still raises
-    loudly instead of silently reading every partition as "absent" and
-    quietly disabling incremental resume."""
-    import pyarrow.parquet as pq
-
-    if "://" in base or base.startswith("file:"):
-        from pyarrow import fs as pafs
-
-        try:
-            filesystem, root = pafs.FileSystem.from_uri(base)
-        except Exception as e:  # unsupported scheme must stay LOUD
-            raise NotImplementedError(
-                f"tail validation cannot resolve {base!r} via pyarrow.fs "
-                f"({e}) — unsupported scheme in this Arrow build; use "
-                "Iceberg snapshot metadata for such deployments"
-            ) from e
-        pdir = f"{root.rstrip('/')}/partition_key={key}"
-        if filesystem.get_file_info(pdir).type != pafs.FileType.Directory:
-            return None
-        total = 0
-        for fi in filesystem.get_file_info(pafs.FileSelector(pdir)):
-            if fi.type == pafs.FileType.File and fi.path.endswith(".parquet"):
-                try:
-                    total += pq.read_metadata(fi.path, filesystem=filesystem).num_rows
-                except Exception:  # noqa: BLE001 — unreadable footer = corrupt
-                    return None
-        return total
-
-    pdir = os.path.join(base, f"partition_key={key}")
-    if not os.path.isdir(pdir):
-        return None
-    total = 0
-    for f in glob.glob(os.path.join(pdir, "*.parquet")):
-        try:
-            total += pq.ParquetFile(f).metadata.num_rows
-        except Exception:  # noqa: BLE001 — any unreadable footer = corrupt
-            return None
-    return total
+            tmp = f"{pdir}/.{uuid.uuid4().hex}.tmp"
+            pq.write_table(table, tmp, filesystem=filesystem)
+            final = f"{pdir}/part-00000.parquet"
+            for fi in filesystem.get_file_info(pafs.FileSelector(pdir)):
+                if fi.type == pafs.FileType.File and fi.path not in (tmp, final):
+                    filesystem.delete_file(fi.path)
+            filesystem.move(tmp, final)

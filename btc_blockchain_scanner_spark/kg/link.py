@@ -20,7 +20,11 @@ Spark-first re-expression:
 Scale: the alias dict is a small broadcast dim (J8); the distinct-surface
 set is tiny relative to mentions (groupBy first, link once, join back) —
 the same reason the reference caches address lookups instead of querying
-per row.
+per row. Link materializes what it resolves exactly once: the resolved
+surfaces and the surface → (entity_id, match_type) map are collected
+through Arrow, the entities table is localCheckpointed. The map is the
+broadcast side of the join back to the mentions, so the driver holds it
+either way; collecting it needs no budget of its own.
 """
 
 from __future__ import annotations
@@ -62,21 +66,27 @@ def resolve_surfaces(
     num_perm: int = 16,
     num_bands: int = 8,
 ) -> DataFrame:
-    """Distinct surfaces → (surface, entity_key, match_type).
+    """Distinct surfaces → (surface, entity_key, match_type), a local
+    relation collected through Arrow (one collect on the fast path).
 
     exact: surface in alias dict. fuzzy: best Jaccard over char-3-gram
     shingles among LSH-blocked dictionary candidates, if >= threshold
     (deterministic tiebreak: higher jaccard, then lexicographic key).
     new: otherwise the surface is its own key.
     """
+    spark = surfaces.sparkSession
     s = surfaces.select("surface").distinct()
-    exact = s.join(F.broadcast(alias_dict), "surface", "left").select(
-        "surface", F.col("entity_key").alias("exact_key")
+    # the distinct-surface set is the broadcast side of link's join, so the
+    # driver holds it anyway: collect it once through Arrow (one job) and
+    # serve the fast-path test and all three branches from that copy
+    exact_tbl = (
+        s.join(F.broadcast(alias_dict), "surface", "left")
+        .select("surface", F.col("entity_key").alias("exact_key"))
+        .toArrow()
     )
-    exact = exact.localCheckpoint(eager=True)  # tiny; reused by 3 branches
-    unmatched = exact.where(F.col("exact_key").isNull()).select("surface")
+    exact = spark.createDataFrame(exact_tbl)
 
-    if unmatched.limit(1).count() == 0:
+    if exact_tbl.column("exact_key").null_count == 0:
         # common fast path: every surface hit the dictionary — skip the
         # whole LSH candidate machinery (reference analog: cache hit rate
         # ~100% after warmup, RunNeoLoader.java:211-217)
@@ -86,6 +96,7 @@ def resolve_surfaces(
             F.lit("exact").alias("match_type"),
         )
 
+    unmatched = exact.where(F.col("exact_key").isNull()).select("surface")
     dict_side = alias_dict.select(
         F.concat(F.lit("d:"), F.col("surface")).alias("_id"),
         char_shingles(F.col("surface")).alias("_sh"),
@@ -98,7 +109,8 @@ def resolve_surfaces(
         F.col("surface").alias("q_surface"),
     )
     both = query_side.select("_id", "_sh").unionByName(dict_side.select("_id", "_sh"))
-    cand = lsh.lsh_candidate_pairs(both, "_id", "_sh", num_perm, num_bands)
+    buckets = lsh.band_buckets(both, "_id", "_sh", num_perm, num_bands)
+    cand = lsh.candidate_pairs(buckets)
     # keep only (query, dict) pairings in either order
     qd = cand.where(
         (F.col("id_a").startswith("q:") & F.col("id_b").startswith("d:"))
@@ -120,6 +132,8 @@ def resolve_surfaces(
         .select(F.col("q_surface").alias("surface"), F.col("entity_key").alias("fuzzy_key"))
     )
 
+    # collected like ``exact`` (same rows), which lets the LSH bucket
+    # table be released before return
     resolved = (
         exact.join(fuzzy, "surface", "left")
         .select(
@@ -130,8 +144,10 @@ def resolve_surfaces(
             .otherwise("new")
             .alias("match_type"),
         )
+        .toArrow()
     )
-    return resolved
+    buckets.unpersist()
+    return spark.createDataFrame(resolved)
 
 
 def get_or_create_entities(
@@ -143,13 +159,14 @@ def get_or_create_entities(
     ids ordered by md5(key) starting at watermark+1 — deterministic across
     batches and parallelism levels.
     """
-    if existing is None:
-        existing = spark.createDataFrame([], ENTITY_SCHEMA)
     keys = entity_keys.select(F.col("entity_key")).distinct()
-    new = keys.join(
-        existing.select(F.col("display_name").alias("entity_key")), "entity_key", "left_anti"
-    )
-    max_id = existing.agg(F.coalesce(F.max("entity_id"), F.lit(0))).collect()[0][0]
+    if existing is None:
+        existing, new, max_id = spark.createDataFrame([], ENTITY_SCHEMA), keys, 0
+    else:
+        new = keys.join(
+            existing.select(F.col("display_name").alias("entity_key")), "entity_key", "left_anti"
+        )
+        max_id = existing.agg(F.coalesce(F.max("entity_id"), F.lit(0))).collect()[0][0]
     from ..operators.rank import ranked_by_md5
 
     new_entities = ranked_by_md5(
@@ -168,17 +185,30 @@ def link_mentions(
     alias_dict: DataFrame,
     entities: DataFrame | None = None,
     spark: SparkSession | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """mentions(+surface) → (linked mentions with entity_id, entities table).
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """mentions(+surface) → (linked mentions with entity_id, entities table,
+    surface → (entity_id, match_type) map).
 
     Linking happens on the distinct-surface set (tiny), then broadcast-joins
-    back to the mention stream — the J8 cache-join shape.
+    back to the mention stream — the J8 cache-join shape. Both link outputs
+    are materialized once, so no consumer re-runs resolution or the md5
+    rank: the entities table is localCheckpointed here (the one persisted
+    RDD link leaves; it also cuts the lineage to the state files an
+    incremental merge swaps), and the map is collected once through Arrow.
+    The map is the broadcast side of the join, so the driver held it
+    already — it needs no budget of its own.
     """
     spark = spark or mentions.sparkSession
     resolved = resolve_surfaces(mentions.select("surface"), alias_dict)
-    entities = get_or_create_entities(spark, resolved.select("entity_key"), entities)
-    surface_to_id = resolved.join(
-        entities.select(F.col("display_name").alias("entity_key"), "entity_id"), "entity_key"
-    ).select("surface", "entity_id", "match_type")
+    entities = get_or_create_entities(
+        spark, resolved.select("entity_key"), entities
+    ).localCheckpoint(eager=True)
+    surface_to_id = spark.createDataFrame(
+        resolved.join(
+            entities.select(F.col("display_name").alias("entity_key"), "entity_id"), "entity_key"
+        )
+        .select("surface", "entity_id", "match_type")
+        .toArrow()
+    )
     linked = mentions.join(F.broadcast(surface_to_id), "surface")
-    return linked, entities
+    return linked, entities, surface_to_id

@@ -9,6 +9,14 @@ sequence (SURVEY.md §3) as one orchestrated Spark job graph:
     triples+entities ──materialize──▶ nodes, edges               [global]
     counters ──▶ checkpoints manifest                            [per-partition]
 
+Link hands back its outputs materialized once (entities checkpointed, the
+surface → entity map collected — it is the broadcast side of the mention
+join, so the driver holds it anyway and it needs no budget of its own);
+the triples resolve through that map and CC and the sinks never re-run
+resolution or the md5 rank. The run's counters come from what was written:
+the per-partition rows recorded in the manifest and the footers of the
+written tables.
+
 Partitioning: partition_key = pmod(xxhash64(conv_id), n_parts) — the
 conv_id-range analog of the reference's block-height batches. The
 extraction stage writes mentions/triples with dynamic partition overwrite,
@@ -20,13 +28,14 @@ tests/test_pipeline.py).
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import canonicalize, extract, link, materialize
-from .checkpoints import Manifest
+from .checkpoints import COUNTERS, Manifest, rowcount
 
 
 def with_partition_key(df: DataFrame, n_parts: int) -> DataFrame:
@@ -40,6 +49,25 @@ class PipelineResult:
     out_dir: str
     counters: dict
     processed_partitions: list[str]
+
+
+def overlap(*thunks):
+    """Run independent pieces of work concurrently and return their results
+    in argument order (Spark actions are only sequential because the driver
+    calls them sequentially; each keeps its own jobs).
+
+    The pool has one thread per thunk and every thunk runs to completion.
+    Only then is the first failure (in argument order) re-raised, with each
+    later failure chained as the context of the one before — so a failing
+    write surfaces even when another thunk raised too."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        for err, later in zip(errors, errors[1:]):
+            err.__context__, err.__suppress_context__ = later, False
+        raise errors[0]
+    return [f.result() for f in futures]
 
 
 def _write_partitioned(df: DataFrame, path: str) -> None:
@@ -67,7 +95,7 @@ def run(
     the run aborts before linking — simulating a mid-job kill.
     """
     alias_dict = alias_dict if alias_dict is not None else link.default_alias_dict(spark)
-    manifest = Manifest(spark, f"{out_dir}/checkpoints")
+    manifest = Manifest(f"{out_dir}/checkpoints")
     turns = with_partition_key(transcripts, n_parts)
 
     mentions_path = f"{out_dir}/mentions"
@@ -104,45 +132,41 @@ def run(
             "partition_key", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_parts)).cast("string")
         )
         # The three sink jobs all branch off the SAME persisted extraction
-        # and write to disjoint paths — overlap them from a small thread
-        # pool (guide §2.6: actions are only sequential because the driver
-        # calls them sequentially); each write keeps its own job.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            list(
-                pool.map(
-                    lambda t: _write_partitioned(*t),
-                    [
-                        (mentions, mentions_path),
-                        (triples, triples_path),
-                        (flags, f"{out_dir}/mention_flags"),
-                    ],
-                )
-            )
+        # and write to disjoint paths — overlap them.
+        overlap(
+            lambda: _write_partitioned(mentions, mentions_path),
+            lambda: _write_partitioned(triples, triples_path),
+            lambda: _write_partitioned(flags, f"{out_dir}/mention_flags"),
+        )
 
         if fail_after_extract_partitions is not None:
             extracted.unpersist()
             raise RuntimeError("simulated mid-run failure (dirty-tail test hook)")
 
         # per-partition lineage counters (A8 analog: DbUpdate.printStats) —
-        # ONE pass over the persisted extraction; hash-empty pending
-        # partitions still get a manifest row (left join against the
-        # pending-key list) so resume doesn't re-queue them forever.
-        pend_df = spark.createDataFrame([(p,) for p in pending], "partition_key string")
-        per_part = extracted.groupBy("partition_key").agg(
-            F.count("*").alias("turns_scanned"),
-            F.sum(F.size("ex.mentions")).alias("mentions_found"),
-            F.sum(F.size("ex.triples")).alias("triples_emitted"),
+        # ONE aggregate over the persisted extraction, collected; a
+        # hash-empty pending partition still gets a (zero) manifest row so
+        # resume doesn't re-queue it forever.
+        per_part = {
+            r["partition_key"]: r
+            for r in extracted.groupBy("partition_key")
+            .agg(
+                F.count("*").alias("turns_scanned"),
+                F.sum(F.size("ex.mentions")).alias("mentions_found"),
+                F.sum(F.size("ex.triples")).alias("triples_emitted"),
+            )
+            .collect()
+        }
+        manifest.record(
+            [
+                {
+                    "partition_key": p,
+                    "last_done": "batch-1",
+                    **{c: int(per_part[p][c]) if p in per_part else 0 for c in COUNTERS},
+                }
+                for p in pending
+            ]
         )
-        counters = pend_df.join(per_part, "partition_key", "left").select(
-            "partition_key",
-            F.lit("batch-1").alias("last_done"),
-            F.coalesce(F.col("turns_scanned"), F.lit(0)).cast("long").alias("turns_scanned"),
-            F.coalesce(F.col("mentions_found"), F.lit(0)).cast("long").alias("mentions_found"),
-            F.coalesce(F.col("triples_emitted"), F.lit(0)).cast("long").alias("triples_emitted"),
-        )
-        manifest.record(counters)
         extracted.unpersist()
 
     # Global stages (linking, canonicalization, materialization) recompute
@@ -151,80 +175,43 @@ def run(
     mentions_all = spark.read.parquet(mentions_path)
     triples_all = spark.read.parquet(triples_path)
 
-    linked_mentions, entities = link.link_mentions(mentions_all, alias_dict, spark=spark)
-    # Materialize entities ONCE (was write-then-re-read — the same lineage
-    # cut, but the checkpoint lets the state write below overlap the canon
-    # computation instead of serializing in front of it; r6, guide §2.6).
-    entities = entities.localCheckpoint(eager=True)
-
-    surface_to_id = linked_mentions.select("surface", "entity_id").distinct()
-    linked_triples = (
-        triples_all.join(
-            F.broadcast(surface_to_id.withColumnRenamed("surface", "subj_surface").withColumnRenamed("entity_id", "subj_entity")),
-            "subj_surface",
-        )
-        .join(
-            F.broadcast(surface_to_id.withColumnRenamed("surface", "obj_surface").withColumnRenamed("entity_id", "obj_entity")),
-            "obj_surface",
-        )
+    # entities and the surface map come back materialized (link.py), so
+    # neither the sinks nor CC below re-run resolution or the md5 rank
+    linked_mentions, entities, surface_to_id = link.link_mentions(
+        mentions_all, alias_dict, spark=spark
     )
+    # the triples resolve through the collected map (a local relation),
+    # not a distinct over every linked mention
+    ids = surface_to_id.select("surface", "entity_id")
+    linked_triples = triples_all.join(
+        F.broadcast(ids.toDF("subj_surface", "subj_entity")), "subj_surface"
+    ).join(F.broadcast(ids.toDF("obj_surface", "obj_entity")), "obj_surface")
 
     edges_sim = canonicalize.comention_edges(linked_mentions)
     edges = materialize.build_edges(linked_triples)
-    # Three independent pieces of work (guide §2.6): the entities state
-    # write, the edges sink (depends only on linked triples), and the canon
-    # computation (CC materializes eagerly inside canon_map). The write
-    # jobs never persist RDDs, so they cannot disturb CC's checkpoint
-    # bookkeeping; canon's own localCheckpoint runs on this thread after
-    # canon_map returns (CC already done).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_ent = pool.submit(
-            lambda: entities.write.mode("overwrite").parquet(f"{out_dir}/entities")
-        )
-        f_edg = pool.submit(
-            lambda: edges.write.mode("overwrite").parquet(f"{out_dir}/edges")
-        )
-        try:
-            canon = canonicalize.canon_map(entities, edges_sim).localCheckpoint(eager=True)
-        finally:
-            # observe the writes even when canon raised: the pool's exit
-            # waits for them but would swallow their failures
-            for f in (f_ent, f_edg):
-                f.result()
+    # Three independent pieces of work: the entities state write, the edges
+    # sink (depends only on linked triples), and the canon computation (CC
+    # materializes eagerly inside canon_map). The write jobs never persist
+    # RDDs, so they cannot disturb CC's checkpoint bookkeeping.
+    _, _, canon = overlap(
+        lambda: entities.write.mode("overwrite").parquet(f"{out_dir}/entities"),
+        lambda: edges.write.mode("overwrite").parquet(f"{out_dir}/edges"),
+        lambda: canonicalize.canon_map(entities, edges_sim).localCheckpoint(eager=True),
+    )
 
     nodes = materialize.build_nodes(entities, canon)
     # canon state write ∥ nodes sink (nodes needs canon, so it waited)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_can = pool.submit(
-            lambda: canon.write.mode("overwrite").parquet(f"{out_dir}/canon_map")
-        )
-        f_nod = pool.submit(
-            lambda: nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes")
-        )
-        f_can.result()
-        f_nod.result()
-
-    # lineage totals come from the manifest (no recompute of the input);
-    # table counts are cheap parquet-footer scans.
-    totals = (
-        manifest.read()
-        .agg(
-            F.sum("turns_scanned").alias("t"),
-            F.sum("mentions_found").alias("m"),
-            F.sum("triples_emitted").alias("tr"),
-        )
-        .collect()[0]
+    overlap(
+        lambda: canon.write.mode("overwrite").parquet(f"{out_dir}/canon_map"),
+        lambda: nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes"),
     )
-    counters_out = {
-        "turns_scanned": totals["t"] or 0,
-        "mentions_found": totals["m"] or 0,
-        "triples_emitted": totals["tr"] or 0,
-        "entities": entities.count(),
-        "nodes": spark.read.parquet(f"{out_dir}/nodes").count(),
-        "edges": spark.read.parquet(f"{out_dir}/edges").count(),
-    }
+
+    # counters come from what was written: lineage totals from the manifest
+    # rows, table counts from the written files' parquet footers — no job
+    rows = manifest.rows()
+    counters_out = {c: sum(r[c] or 0 for r in rows) for c in COUNTERS}
+    for table in ("entities", "nodes", "edges"):
+        counters_out[table] = rowcount(f"{out_dir}/{table}")
     return PipelineResult(out_dir=out_dir, counters=counters_out, processed_partitions=pending)
 
 
@@ -284,13 +271,13 @@ def incremental_update(
     existing_ents = spark.read.parquet(ents_path) if os.path.isdir(ents_path) else None
     extracted = extract.extract(new_transcripts).persist()
     mentions = extract.mentions_from(extracted)
-    linked, entities = link.link_mentions(
+    # entities comes back localCheckpointed, which cuts its lineage to the
+    # state paths: both upserts below atomically swap the very parquet dirs
+    # it was read from — a lazy plan evaluated after the first swap would
+    # chase deleted files
+    linked, entities, _ = link.link_mentions(
         mentions, alias_dict, entities=existing_ents, spark=spark
     )
-    # cut lineage to the state paths NOW: both upserts below atomically
-    # swap the very parquet dirs these plans read from — a lazy plan
-    # evaluated after the first swap would chase deleted files
-    entities = entities.localCheckpoint(eager=True)
     # The batch edge list is consumed TWICE: connected_components
     # materializes it (via the contracted graph) and the incremental
     # update's new-node pass re-derives endpoints from it — without a
@@ -320,13 +307,11 @@ def incremental_update(
 
     # Both state frames are fully materialized (localCheckpoint above), so
     # neither merge holds a lazy reference to the other's target dir — the
-    # two upserts touch disjoint paths and can overlap (guide §2.6; ~0.7 s
-    # of the smaller merge's job latency hidden per batch, measured r6).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_ents = pool.submit(merge_upsert, spark, ents_path, entities, ["entity_id"])
-        f_canon = pool.submit(merge_upsert, spark, canon_path, canon, ["entity_id"])
-        stats = {"entities": f_ents.result(), "canon_map": f_canon.result()}
+    # two upserts touch disjoint paths and can overlap (~0.7 s of the
+    # smaller merge's job latency hidden per batch, measured r6).
+    ents_stats, canon_stats = overlap(
+        lambda: merge_upsert(spark, ents_path, entities, ["entity_id"]),
+        lambda: merge_upsert(spark, canon_path, canon, ["entity_id"]),
+    )
     extracted.unpersist()
-    return stats
+    return {"entities": ents_stats, "canon_map": canon_stats}

@@ -79,12 +79,23 @@ def lsh_candidate_pairs(
     num_bands: int = 8,
 ) -> DataFrame:
     """Items → candidate (id_a, id_b) pairs (id_a < id_b) that share at
-    least one LSH band. One shuffle: explode bands → groupBy bucket →
-    within-bucket chaining... here full within-bucket pairing because a
-    *candidate* relation must contain every colliding pair (verification
-    prunes). Buckets are small by construction (band collisions); a
-    pathological mega-bucket is capped by distinctness of the pair set.
-    """
+    least one LSH band: :func:`candidate_pairs` over :func:`band_buckets`.
+    The bucket table stays persisted; callers that must release it call the
+    two steps themselves."""
+    return candidate_pairs(band_buckets(df, id_col, shingles_col, num_perm, num_bands))
+
+
+def band_buckets(
+    df: DataFrame,
+    id_col: str,
+    shingles_col: str,
+    num_perm: int = 32,
+    num_bands: int = 8,
+) -> DataFrame:
+    """Items → persisted (_id, _band_idx, _band_hash) rows, one per band.
+
+    The caller unpersists the result once the pairs built from it have been
+    consumed."""
     rows_per_band = max(1, num_perm // num_bands)
     # Materialization barriers between the expression stages: without them
     # CollapseProject inlines the shingle pipeline into every one of the
@@ -107,10 +118,18 @@ def lsh_candidate_pairs(
     # the self-join would re-execute the whole signature lineage for each
     # branch; persist the (tiny relative to input) bucket table once — at
     # cluster scale this is the signature table you'd write to storage
-    buckets = buckets.persist()
+    return buckets.persist()
+
+
+def candidate_pairs(buckets: DataFrame) -> DataFrame:
+    """Bucket rows → distinct (id_a, id_b) pairs (id_a < id_b) sharing a
+    band. One shuffle: full within-bucket pairing, because a *candidate*
+    relation must contain every colliding pair (verification prunes).
+    Buckets are small by construction (band collisions); a pathological
+    mega-bucket is capped by distinctness of the pair set."""
     a = buckets.alias("a")
     b = buckets.alias("b")
-    pairs = (
+    return (
         a.join(
             b,
             (F.col("a._band_idx") == F.col("b._band_idx"))
@@ -120,7 +139,6 @@ def lsh_candidate_pairs(
         .select(F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b"))
         .distinct()
     )
-    return pairs
 
 
 def jaccard(a: Column, b: Column) -> Column:

@@ -80,13 +80,11 @@ def merge_upsert(
             "targets need a real Iceberg catalog (module docstring)"
         )
     _recover_swap(target_path)
-    dup = updates.groupBy(*key_cols).count().where(F.col("count") > 1).limit(1).count()
-    if dup:
-        raise ValueError("updates contain duplicate keys — dedup before merging")
 
     if not os.path.isdir(target_path):
+        counters = _op_counters(updates.withColumn("_op", F.lit("insert")), key_cols)
         updates.write.mode("overwrite").parquet(target_path)
-        return {"inserted": updates.count(), "updated": 0, "deleted": 0, "kept": 0}
+        return counters
 
     target = spark.read.parquet(target_path)
     val_cols = [c for c in target.columns if c not in key_cols]
@@ -109,13 +107,29 @@ def merge_upsert(
         *[F.coalesce(F.col(f"u.{c}"), F.col(f"t.{c}")).alias(c) for c in val_cols],
     ).persist()
 
-    counters = {r["_op"]: r["n"] for r in merged.groupBy("_op").agg(F.count("*").alias("n")).collect()}
-    out = merged.where(F.col("_op") != "delete").drop("_op")
-    _atomic_swap(out, target_path)
-    merged.unpersist()
-    return {
-        "inserted": counters.get("insert", 0),
-        "updated": counters.get("update", 0),
-        "deleted": counters.get("delete", 0),
-        "kept": counters.get("keep", 0),
-    }
+    try:
+        counters = _op_counters(merged, key_cols)
+        out = merged.where(F.col("_op") != "delete").drop("_op")
+        _atomic_swap(out, target_path)
+    finally:
+        merged.unpersist()
+    return counters
+
+
+def _op_counters(merged: DataFrame, key_cols: list[str]) -> dict:
+    """Op counters of a merge plan (an ``_op`` column per output row) and
+    the unique-update-key check, in ONE aggregate; raises before the caller
+    writes anything.
+
+    Rows carried by an update (insert/update) must have distinct keys. The
+    distinct count sees every other row as one null group, so its shuffle
+    scales with the updates, not the target."""
+    ops = {"insert": "inserted", "update": "updated", "delete": "deleted", "keep": "kept"}
+    from_updates = F.col("_op").isin("insert", "update")
+    r = merged.agg(
+        *[F.count(F.when(F.col("_op") == op, 1)).alias(name) for op, name in ops.items()],
+        F.count_distinct(F.when(from_updates, F.struct(*key_cols))).alias("_keys"),
+    ).collect()[0]
+    if r["inserted"] + r["updated"] != r["_keys"]:
+        raise ValueError("updates contain duplicate keys — dedup before merging")
+    return {name: r[name] for name in ops.values()}

@@ -53,7 +53,7 @@ def test_link_mentions_roundtrip(spark):
         [("c1", 0, 1, "spark"), ("c1", 0, 3, "sprk"), ("c2", 1, 0, "kafka")],
         "conv_id string, turn_idx int, pos int, surface string",
     )
-    linked, entities = link.link_mentions(mentions, d, spark=spark)
+    linked, entities, surface_to_id = link.link_mentions(mentions, d, spark=spark)
     rows = linked.select("surface", "entity_id").collect()
     by_surface = {}
     for r in rows:
@@ -61,3 +61,35 @@ def test_link_mentions_roundtrip(spark):
     # alias and canonical surface link to the SAME entity id
     assert by_surface["spark"] == by_surface["sprk"]
     assert entities.count() == 2  # spark, kafka
+    # the returned map is the one the mentions were joined through
+    assert {(r.surface, r.entity_id) for r in surface_to_id.collect()} == {
+        (s, i) for s, ids in by_surface.items() for i in ids
+    }
+    assert {r.match_type for r in surface_to_id.collect()} == {"exact"}
+
+
+def test_link_mentions_persists_only_entity_checkpoint(spark):
+    """Link materializes its outputs once: the entities checkpoint is the
+    only RDD it leaves registered, on the exact fast path and on the LSH
+    fuzzy path alike (the surface map is a driver-collected local relation,
+    and resolution releases what it persisted)."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return {int(k) for k in jsc.getPersistentRDDs().keySet()}
+
+    d = link.default_alias_dict(spark)
+    for surfaces, kinds in ((["spark", "sprk"], {"exact"}), (["spark", "snowflakee"], {"exact", "fuzzy"})):
+        mentions = spark.createDataFrame(
+            [("c1", 0, i, s) for i, s in enumerate(surfaces)],
+            "conv_id string, turn_idx int, pos int, surface string",
+        )
+        before = persisted()
+        linked, entities, surface_to_id = link.link_mentions(mentions, d, spark=spark)
+        added = persisted() - before
+        assert len(added) == 1, kinds
+        assert {r.match_type for r in surface_to_id.collect()} == kinds
+        # consuming the outputs materializes nothing further
+        linked.count()
+        entities.count()
+        assert persisted() - before == added

@@ -45,6 +45,30 @@ def test_merge_rejects_duplicate_update_keys(spark, tmp_path):
     assert not (tmp_path / "t2").exists()
 
 
+def test_merge_rejects_duplicate_update_keys_on_existing_target(spark, tmp_path):
+    import os
+
+    import pytest
+
+    target = str(tmp_path / "t5")
+    base = spark.createDataFrame([(1, "a", 1.0), (2, "b", 2.0)], "id long, name string, v double")
+    merge_upsert(spark, target, base, ["id"])
+
+    def snapshot():
+        return {
+            f: open(os.path.join(target, f), "rb").read() for f in sorted(os.listdir(target))
+        }
+
+    before = snapshot()
+    # one duplicate on a matched key, one on a new key
+    for rows in ([(2, "x", 1.0), (2, "y", 2.0)], [(3, "x", 1.0), (3, "y", 2.0)]):
+        dup = spark.createDataFrame(rows, "id long, name string, v double")
+        with pytest.raises(ValueError, match="duplicate keys"):
+            merge_upsert(spark, target, dup, ["id"])
+        assert snapshot() == before
+    assert sorted(os.listdir(tmp_path)) == ["t5"]  # no temp dir or backup left
+
+
 def test_merge_recovers_interrupted_swap(spark, tmp_path):
     """Crash between the two swap renames leaves only <target>._old; the
     next merge call must restore it instead of treating the table as new."""

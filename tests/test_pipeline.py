@@ -9,13 +9,33 @@ from pyspark.sql import functions as F
 from btc_blockchain_scanner_spark.kg import canonicalize, datagen, oracle, pipeline
 
 
+def _turns(tr):
+    return [(r.conv_id, r.turn_idx, r.text) for r in tr.orderBy("conv_id", "turn_idx").collect()]
+
+
+def assert_counters_match(spark, out, counters, turns, o):
+    """The counters a run reports — read back from the manifest and the
+    written files' footers — equal the oracle's counts and Spark's counts
+    of the written tables."""
+    assert {k: counters[k] for k in ("turns_scanned", "mentions_found", "triples_emitted")} == {
+        "turns_scanned": len(turns),
+        "mentions_found": len(o["mentions"]),
+        "triples_emitted": len(o["triples"]),
+    }
+    assert counters["entities"] == len(o["entity_ids"])
+    for table in ("entities", "nodes", "edges"):
+        assert counters[table] == pipeline.read_table(spark, out, table).count(), table
+
+
 @pytest.fixture(scope="module")
 def run_dir(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("kg"))
     tr = datagen.transcripts(spark, n_convs=40).cache()
     res = pipeline.run(spark, tr, out, n_parts=4)
-    turns = [(r.conv_id, r.turn_idx, r.text) for r in tr.orderBy("conv_id", "turn_idx").collect()]
-    return out, res, oracle.run(turns)
+    turns = _turns(tr)
+    o = oracle.run(turns)
+    assert_counters_match(spark, out, res.counters, turns, o)
+    return out, res, o
 
 
 def test_triple_pr_vs_oracle(spark, run_dir):
@@ -54,7 +74,7 @@ def test_invariants(spark, run_dir):
     assert entities.join(canon, "entity_id", "left_anti").count() == 0
     from btc_blockchain_scanner_spark.kg.link import default_alias_dict, link_mentions
 
-    linked, _ = link_mentions(mentions, default_alias_dict(spark), spark=spark)
+    linked, _, _ = link_mentions(mentions, default_alias_dict(spark), spark=spark)
     sim_edges = canonicalize.comention_edges(linked)
     assert canonicalize.verify_fixpoint(canon, sim_edges) == 0
 
@@ -327,7 +347,9 @@ def test_tail_validation_on_file_uri_path(spark, tmp_path):
     tr = datagen.transcripts(spark, n_convs=25).cache()
     local = str(tmp_path / "uri")
     out = f"file:{local}"
-    pipeline.run(spark, tr, out, n_parts=4)
+    res0 = pipeline.run(spark, tr, out, n_parts=4)
+    turns = _turns(tr)
+    assert_counters_match(spark, out, res0.counters, turns, oracle.run(turns))
 
     files = glob.glob(f"{local}/mentions/partition_key=2/*.parquet")
     assert files
@@ -377,6 +399,71 @@ def test_resume_skips_done_partitions(spark, tmp_path):
     res2 = pipeline.run(spark, tr, out, n_parts=4)
     assert res2.processed_partitions == []  # manifest says all done
     assert res1.counters == res2.counters
+
+
+def _manifest_row(key, n):
+    return {
+        "partition_key": key,
+        "last_done": "batch-1",
+        "turns_scanned": n,
+        "mentions_found": 2 * n,
+        "triples_emitted": 3 * n,
+    }
+
+
+def test_manifest_record_replaces_only_given_partitions(tmp_path):
+    import os
+
+    from btc_blockchain_scanner_spark.kg.checkpoints import Manifest
+
+    path = str(tmp_path / "checkpoints")
+    m = Manifest(path)
+    assert m.rows() == []
+    m.record([_manifest_row(k, int(k) + 1) for k in ("0", "1", "2")])
+    m.record([_manifest_row("1", 10), _manifest_row("3", 4)])
+
+    got = {r["partition_key"]: r["turns_scanned"] for r in m.rows()}
+    assert got == {"0": 1, "1": 10, "2": 3, "3": 4}
+    assert {r["partition_key"]: r["triples_emitted"] for r in m.rows()}["1"] == 30
+    # one data file per partition, no temporary left behind
+    for key in got:
+        assert os.listdir(f"{path}/partition_key={key}") == ["part-00000.parquet"]
+
+
+def test_manifest_record_replaces_spark_written_partition(spark, tmp_path):
+    """A partition an earlier Spark writer produced (other file names, INT96
+    timestamps, .crc side files) is replaced whole, not appended to."""
+    import os
+
+    from btc_blockchain_scanner_spark.kg.checkpoints import Manifest
+
+    path = str(tmp_path / "checkpoints")
+    spark.createDataFrame([_manifest_row(k, 5) for k in ("0", "1")]).withColumn(
+        "updated_at", F.current_timestamp()
+    ).write.partitionBy("partition_key").parquet(path)
+    m = Manifest(path)
+    m.record([_manifest_row("0", 7)])
+    assert {r["partition_key"]: r["turns_scanned"] for r in m.rows()} == {"0": 7, "1": 5}
+    assert os.listdir(f"{path}/partition_key=0") == ["part-00000.parquet"]
+
+
+def test_manifest_spark_types(spark, tmp_path):
+    """Spark reads the pyarrow-written manifest with the types a Spark
+    writer gave it: partition_key inferred as int, updated_at TIMESTAMP."""
+    from btc_blockchain_scanner_spark.kg.checkpoints import Manifest
+
+    path = str(tmp_path / "checkpoints")
+    Manifest(path).record([_manifest_row("0", 1), _manifest_row("5", 2)])
+    df = spark.read.parquet(path)
+    types = dict(df.dtypes)
+    assert types["partition_key"] == "int"
+    assert types["updated_at"] == "timestamp"
+    assert {c: types[c] for c in ("turns_scanned", "mentions_found", "triples_emitted")} == {
+        "turns_scanned": "bigint",
+        "mentions_found": "bigint",
+        "triples_emitted": "bigint",
+    }
+    assert {(r.partition_key, r.turns_scanned) for r in df.collect()} == {(0, 1), (5, 2)}
 
 
 def test_pipeline_deterministic_across_parallelism(spark, tmp_path):
