@@ -1,22 +1,22 @@
-"""At-scale distributed-CC evidence + the round-storage reclamation
-experiment (VERDICT r4 item 2): the 10M-edge point was super-linear
-(365 s vs ~152 s linear-expected from 5M) in ONE shared-heap JVM under
-the r4 strategy (localCheckpoint + gc-nudge, ContextCleaner reaping).
-This harness measures the three ``checkpoint_mode`` strategies
-(operators/cc.py) on the bench's exact graph shape — hub star (40% of
-edges on one component) + diameter-7 chains — at 5M/10M/20M edges,
-each cell in a FRESH JVM so block-manager fill cannot leak across cells.
+"""At-scale distributed-CC evidence: the distributed loop of
+``operators/cc.py`` (forced with ``small_graph_threshold=0``) on the
+bench's exact graph shape — hub star (40% of edges on one component) +
+diameter-7 chains — at 5M/10M/20M edges, each cell in a FRESH JVM so
+block-manager fill cannot leak across cells.
 
 Correctness inside every cell: the synthetic graph's component minima
 are known in closed form; full-graph mismatches must be 0.
 
 Usage:
-  python bench_cc_scale.py <mode> <n_edges_millions> [cpus]  # one cell
-  python bench_cc_scale.py grid                              # full grid
+  python bench_cc_scale.py <n_edges_millions> [cpus]  # one cell
+  python bench_cc_scale.py grid [cpus]                # full grid
 
 One JSON line per cell:
-  {"mode": ..., "edges": ..., "wall_sec": ..., "rounds": ...,
-   "mismatches": 0, "edges_per_sec": ...}
+  {"edges": ..., "wall_sec": ..., "rounds": ..., "mismatches": 0,
+   "edges_per_sec": ...}
+
+BENCH_CC_SCALE.json is the round-6 record (``local[32]``), taken when the
+loop still had three round-storage modes; its ``mode`` field names them.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-CPUS = int(sys.argv[3]) if len(sys.argv) > 3 else 32
+CPUS = int(sys.argv[2]) if len(sys.argv) > 2 else 32
 
 # hub:chain ratio fixed at 2:3 (the bench's 5M shape, scaled)
 HUB_FRAC_NUM, HUB_FRAC_DEN = 2, 5
@@ -52,21 +52,19 @@ def build_edges(spark, n_edges: int):
     return hub.unionByName(chains).repartition(CPUS * 2), n_hub
 
 
-def run_cell(mode: str, n_edges: int) -> None:
+def run_cell(n_edges: int) -> None:
     from pyspark.sql import functions as F
 
     from btc_blockchain_scanner_spark.operators.cc import connected_components
     from btc_blockchain_scanner_spark.session import get_spark
 
     spark = get_spark(
-        master=f"local[{CPUS}]", shuffle_partitions=CPUS, app_name=f"cc_{mode}_{n_edges}"
+        master=f"local[{CPUS}]", shuffle_partitions=CPUS, app_name=f"cc_{n_edges}"
     )
     edges, n_hub = build_edges(spark, n_edges)
     st: dict = {}
     t0 = time.perf_counter()
-    comp = connected_components(
-        edges, small_graph_threshold=0, stats_out=st, checkpoint_mode=mode
-    ).persist()
+    comp = connected_components(edges, small_graph_threshold=0, stats_out=st).persist()
     n_nodes = comp.count()
     wall = time.perf_counter() - t0
 
@@ -78,7 +76,6 @@ def run_cell(mode: str, n_edges: int) -> None:
     print(
         json.dumps(
             {
-                "mode": mode,
                 "edges": n_edges,
                 "nodes": n_nodes,
                 "wall_sec": round(wall, 1),
@@ -94,23 +91,18 @@ def run_cell(mode: str, n_edges: int) -> None:
 
 
 def grid() -> None:
-    cells = [
-        ("local", 5), ("local_unpersist", 5), ("disk", 5),
-        ("local", 10), ("local_unpersist", 10), ("disk", 10),
-        ("local_unpersist", 20),
-    ]
     results = []
-    for mode, m in cells:
+    for m in (5, 10, 20):
         # ADVICE r5: one hung/failed cell must not abort the grid or drop
         # completed cells from the saved JSON — record an error entry and
         # keep going; the file is always written.
         try:
             p = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), mode, str(m), str(CPUS)],
+                [sys.executable, os.path.abspath(__file__), str(m), str(CPUS)],
                 capture_output=True, text=True, timeout=1800,
             )
         except subprocess.TimeoutExpired:
-            err = {"mode": mode, "edges": m, "error": "timeout after 1800s"}
+            err = {"edges": m, "error": "timeout after 1800s"}
             results.append(err)
             print(json.dumps(err), flush=True)
             continue
@@ -119,7 +111,7 @@ def grid() -> None:
             results.append(json.loads(line[-1]))
             print(line[-1], flush=True)
         else:
-            err = {"mode": mode, "edges": m, "error": p.stderr[-400:]}
+            err = {"edges": m, "error": p.stderr[-400:]}
             results.append(err)
             print(json.dumps(err), flush=True)
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_CC_SCALE.json"), "w") as f:
@@ -130,4 +122,4 @@ if __name__ == "__main__":
     if len(sys.argv) > 1 and sys.argv[1] == "grid":
         grid()
     else:
-        run_cell(sys.argv[1], int(sys.argv[2]) * 1_000_000)
+        run_cell(int(sys.argv[1]) * 1_000_000)

@@ -16,8 +16,6 @@ see SURVEY.md) as an idiomatic Apache Spark DataFrame/SQL engine:
                    (union-find / CC), graph materialization, checkpoints
                    (reference: RunFullScan / RunUpdateWallets2 / RunNeoLoader — SURVEY.md §3)
 * ``plans``      — the query registry that backs ``__spark_entry__.py``
-* ``streaming``  — incremental / Trigger.AvailableNow passes
-                   (reference: --loop polling + NumberFile checkpoints — SURVEY.md §2.8)
 
 Everything is declarative DataFrame/SQL so Catalyst + AQE pick physical plans;
 per-row logic lives exclusively in Arrow-vectorized pandas UDFs.

@@ -19,24 +19,9 @@ def synth_key(parent_id: Column, pos: Column) -> Column:
     return (parent_id.cast("long") * F.lit(POS_BASE) + pos.cast("long")).alias("synth_key")
 
 
-def split_synth_key(key: Column) -> tuple[Column, Column]:
-    """Inverse of :func:`synth_key` (reference: NeoQueries.java:242-244)."""
-    return (key / POS_BASE).cast("long"), (key % POS_BASE).cast("long")
-
-
 def hex_id(col: Column) -> Column:
     """Hex encoding of a numeric/binary id (reference: util/Utils.java:99-153)."""
     return F.hex(col)
-
-
-def intern_hash(col: Column) -> Column:
-    """Stable 128-bit intern key for a string/binary value, as lowercase hex.
-
-    The reference interns 32-byte txids/addresses once and fans out 4-byte
-    surrogate ids (SURVEY.md §1.2). md5 (not xxhash64) so a DuckDB oracle can
-    reproduce values bit-for-bit.
-    """
-    return F.md5(col.cast("string"))
 
 
 def from_fixed_point(amount: Column, scale: int = 8) -> Column:
@@ -55,11 +40,6 @@ def type_from_id(id_col: Column, ranges: list[tuple[int, int, str]]) -> Column:
     for lo, hi, tag in reversed(ranges):
         expr = F.when((id_col >= lo) & (id_col < hi), F.lit(tag)).otherwise(expr)
     return expr
-
-
-def conditional_count(cond: Column) -> Column:
-    """SUM(IF(cond,1,0)) — reference tests/RunUpdateWallets.java:167 (F9)."""
-    return F.sum(F.when(cond, 1).otherwise(0))
 
 
 def coalesce_ladder(*cols: Column) -> Column:

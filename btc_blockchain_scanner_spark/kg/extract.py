@@ -122,66 +122,6 @@ def mentions_from(extracted: DataFrame) -> DataFrame:
     )
 
 
-PRONOUNS = frozenset({"it", "this", "that"})
-
-CONV_EXTRACT_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("pos", T.IntegerType()),
-        T.StructField("surface", T.StringType()),
-        T.StructField("mention_type", T.StringType()),
-        T.StructField("source_token", T.StringType()),
-    ]
-)
-
-
-def extract_conversational(turns: DataFrame) -> DataFrame:
-    """Grouped extraction with FULL-CONVERSATION context (SURVEY.md §2.9:
-    "grouped extraction (needing full-conversation context) maps to
-    applyInPandas under stable (conv_id, turn_idx) ordering").
-
-    Beyond the per-turn extractor, a pronoun token ('it'/'this'/'that')
-    resolves to the most recent canonical mention ANYWHERE earlier in the
-    conversation — state that a per-turn UDF cannot carry. Each group is
-    one conversation's turns, sorted by turn_idx inside the UDF (Spark
-    does not guarantee intra-group order), so output is deterministic at
-    any parallelism. Emits (conv_id, turn_idx, pos, surface,
-    mention_type, source_token) where pronoun rows carry the RESOLVED
-    surface and their originating token.
-    """
-    import pandas as pd  # noqa: F401 — applyInPandas contract
-
-    def one_conv(pdf):
-        pdf = pdf.sort_values("turn_idx")
-        last_canonical: str | None = None
-        out: list[tuple] = []
-        for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-            if text is None:
-                continue
-            for i, m in enumerate(TOKEN_RE.finditer(text.lower())):
-                tok = m.group(0)
-                if tok in _SURFACES:
-                    kind = "exact" if tok in ENTITIES else "alias"
-                    last_canonical = ALIASES.get(tok, tok)
-                    out.append((conv_id, int(turn_idx), i, tok, kind, None))
-                elif tok in PRONOUNS and last_canonical is not None:
-                    out.append(
-                        (conv_id, int(turn_idx), i, last_canonical, "pronoun", tok)
-                    )
-        import pandas as pd
-
-        return pd.DataFrame(
-            out, columns=["conv_id", "turn_idx", "pos", "surface", "mention_type", "source_token"]
-        )
-
-    return (
-        turns.select("conv_id", "turn_idx", "text")
-        .groupBy("conv_id")
-        .applyInPandas(one_conv, CONV_EXTRACT_SCHEMA)
-    )
-
-
 def mention_flags_from(mentions: DataFrame, turns: DataFrame) -> DataFrame:
     """F4 sparse-flags side table (input_special analog: the reference
     stores a TxInputSpecial row ONLY for inputs whose sighash/multisig

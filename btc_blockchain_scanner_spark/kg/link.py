@@ -197,6 +197,9 @@ def link_mentions(
     incremental merge swaps), and the map is collected once through Arrow.
     The map is the broadcast side of the join, so the driver held it
     already — it needs no budget of its own.
+
+    The caller owns the entities checkpoint: it frees it with
+    :func:`~..session.release` once nothing it returns reads it any more.
     """
     spark = spark or mentions.sparkSession
     resolved = resolve_surfaces(mentions.select("surface"), alias_dict)

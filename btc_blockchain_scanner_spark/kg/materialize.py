@@ -53,14 +53,3 @@ def build_edges(linked_triples: DataFrame) -> DataFrame:
         .dropDuplicates(["conv_id", "turn_idx", "src", "dst", "rel", "pos"])
     )
 
-
-def entity_degree(edges: DataFrame) -> DataFrame:
-    """Flagship query: entity degree (in+out) over the materialized edges —
-    the 'top addresses by activity' analog."""
-    outd = edges.groupBy(F.col("src").alias("node_id")).agg(F.count("*").alias("d"))
-    ind = edges.groupBy(F.col("dst").alias("node_id")).agg(F.count("*").alias("d"))
-    return (
-        outd.unionByName(ind)
-        .groupBy("node_id")
-        .agg(F.sum("d").alias("degree"))
-    )

@@ -34,6 +34,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import release
 from . import canonicalize, extract, link, materialize
 from .checkpoints import COUNTERS, Manifest, rowcount
 
@@ -189,22 +190,28 @@ def run(
 
     edges_sim = canonicalize.comention_edges(linked_mentions)
     edges = materialize.build_edges(linked_triples)
-    # Three independent pieces of work: the entities state write, the edges
-    # sink (depends only on linked triples), and the canon computation (CC
-    # materializes eagerly inside canon_map). The write jobs never persist
-    # RDDs, so they cannot disturb CC's checkpoint bookkeeping.
-    _, _, canon = overlap(
-        lambda: entities.write.mode("overwrite").parquet(f"{out_dir}/entities"),
-        lambda: edges.write.mode("overwrite").parquet(f"{out_dir}/edges"),
-        lambda: canonicalize.canon_map(entities, edges_sim).localCheckpoint(eager=True),
-    )
+    canon = None
+    try:
+        # Three independent pieces of work: the entities state write, the
+        # edges sink (depends only on linked triples), and the canon
+        # computation (CC materializes eagerly inside canon_map).
+        _, _, canon = overlap(
+            lambda: entities.write.mode("overwrite").parquet(f"{out_dir}/entities"),
+            lambda: edges.write.mode("overwrite").parquet(f"{out_dir}/edges"),
+            lambda: canonicalize.canon_map(entities, edges_sim).localCheckpoint(eager=True),
+        )
 
-    nodes = materialize.build_nodes(entities, canon)
-    # canon state write ∥ nodes sink (nodes needs canon, so it waited)
-    overlap(
-        lambda: canon.write.mode("overwrite").parquet(f"{out_dir}/canon_map"),
-        lambda: nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes"),
-    )
+        nodes = materialize.build_nodes(entities, canon)
+        # canon state write ∥ nodes sink (nodes needs canon, so it waited)
+        overlap(
+            lambda: canon.write.mode("overwrite").parquet(f"{out_dir}/canon_map"),
+            lambda: nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes"),
+        )
+    finally:
+        # every reader of the two checkpoints has returned
+        release(entities)
+        if canon is not None:
+            release(canon)
 
     # counters come from what was written: lineage totals from the manifest
     # rows, table counts from the written files' parquet footers — no job
@@ -270,48 +277,55 @@ def incremental_update(
 
     existing_ents = spark.read.parquet(ents_path) if os.path.isdir(ents_path) else None
     extracted = extract.extract(new_transcripts).persist()
-    mentions = extract.mentions_from(extracted)
-    # entities comes back localCheckpointed, which cuts its lineage to the
-    # state paths: both upserts below atomically swap the very parquet dirs
-    # it was read from — a lazy plan evaluated after the first swap would
-    # chase deleted files
-    linked, entities, _ = link.link_mentions(
-        mentions, alias_dict, entities=existing_ents, spark=spark
-    )
-    # The batch edge list is consumed TWICE: connected_components
-    # materializes it (via the contracted graph) and the incremental
-    # update's new-node pass re-derives endpoints from it — without a
-    # persist the whole mention→star-edge chain (groupBy-min + join +
-    # distinct over the batch mentions) recomputes per consumer (~2 s per
-    # 5k-conv batch measured; r6, guide §2.6 "pay for a stage once").
-    # Materialized lazily at CC's first action, released after the canon
-    # checkpoint below.
-    edges = canonmod.comention_edges(linked).persist()
-
-    if os.path.isdir(canon_path):
-        canon = canonmod.incremental_canon_update(spark.read.parquet(canon_path), edges)
-    else:
-        canon = canonmod.canon_map(entities, edges)
-    # total-ize over the (updated) entities table: batch singletons and
-    # never-edged entities canonicalize to themselves — the same read-time
-    # coalesce canon_map performs
-    canon = (
-        entities.select("entity_id")
-        .join(canon, "entity_id", "left")
-        .select(
-            "entity_id",
-            F.coalesce(F.col("canon_id"), F.col("entity_id")).cast("int").alias("canon_id"),
+    entities = canon = None
+    try:
+        mentions = extract.mentions_from(extracted)
+        # entities comes back localCheckpointed, which cuts its lineage to
+        # the state paths: both upserts below atomically swap the very
+        # parquet dirs it was read from — a lazy plan evaluated after the
+        # first swap would chase deleted files
+        linked, entities, _ = link.link_mentions(
+            mentions, alias_dict, entities=existing_ents, spark=spark
         )
-    ).localCheckpoint(eager=True)  # same swap-safety as entities above
-    edges.unpersist()
+        # The batch edge list is consumed TWICE: connected_components
+        # materializes it (via the contracted graph) and the incremental
+        # update's new-node pass re-derives endpoints from it — without a
+        # persist the whole mention→star-edge chain (groupBy-min + join +
+        # distinct over the batch mentions) recomputes per consumer (~2 s
+        # per 5k-conv batch measured; r6, guide §2.6 "pay for a stage
+        # once"). Materialized lazily at CC's first action, released after
+        # the canon checkpoint below.
+        edges = canonmod.comention_edges(linked).persist()
 
-    # Both state frames are fully materialized (localCheckpoint above), so
-    # neither merge holds a lazy reference to the other's target dir — the
-    # two upserts touch disjoint paths and can overlap (~0.7 s of the
-    # smaller merge's job latency hidden per batch, measured r6).
-    ents_stats, canon_stats = overlap(
-        lambda: merge_upsert(spark, ents_path, entities, ["entity_id"]),
-        lambda: merge_upsert(spark, canon_path, canon, ["entity_id"]),
-    )
-    extracted.unpersist()
+        if os.path.isdir(canon_path):
+            merged = canonmod.incremental_canon_update(spark.read.parquet(canon_path), edges)
+        else:
+            merged = canonmod.canon_map(entities, edges)
+        # total-ize over the (updated) entities table: batch singletons and
+        # never-edged entities canonicalize to themselves — the same
+        # read-time coalesce canon_map performs
+        canon = (
+            entities.select("entity_id")
+            .join(merged, "entity_id", "left")
+            .select(
+                "entity_id",
+                F.coalesce(F.col("canon_id"), F.col("entity_id")).cast("int").alias("canon_id"),
+            )
+        ).localCheckpoint(eager=True)  # same swap-safety as entities above
+        edges.unpersist()
+
+        # Both state frames are fully materialized (localCheckpoint above),
+        # so neither merge holds a lazy reference to the other's target dir
+        # — the two upserts touch disjoint paths and can overlap (~0.7 s of
+        # the smaller merge's job latency hidden per batch, measured r6).
+        ents_stats, canon_stats = overlap(
+            lambda: merge_upsert(spark, ents_path, entities, ["entity_id"]),
+            lambda: merge_upsert(spark, canon_path, canon, ["entity_id"]),
+        )
+    finally:
+        # both merges have returned: nothing reads the checkpoints any more
+        for frame in (entities, canon):
+            if frame is not None:
+                release(frame)
+        extracted.unpersist()
     return {"entities": ents_stats, "canon_map": canon_stats}

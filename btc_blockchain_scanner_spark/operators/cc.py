@@ -25,8 +25,10 @@ query's graph takes this path. Larger graphs run the distributed loop:
   converges in ~k rounds, not 2^k.
 * the edges ⋈ labels shuffle join is where hub skew lands; AQE skew-join
   (enabled in session.py) splits oversized partitions at runtime.
-* every round ends in ``localCheckpoint()`` to cut lineage (SURVEY.md §4
-  custom-work item 1) — without it the plan doubles each iteration.
+* every round ends in ``localCheckpoint(eager=True)`` to cut lineage
+  (SURVEY.md §4 custom-work item 1) — without it the plan doubles each
+  iteration — and the superseded round is released at once
+  (``session.release``), so one round's labels are live at a time.
 * convergence = zero labels changed in a round; if ``max_iter`` rounds pass
   without convergence we RAISE instead of returning silently-wrong labels.
 """
@@ -37,6 +39,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import release
 from . import smallgraph
 
 
@@ -45,10 +48,8 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 50,
-    eager_checkpoint: bool = True,
     small_graph_threshold: int = smallgraph.SMALL_GRAPH_EDGES,
     stats_out: dict | None = None,
-    checkpoint_mode: str = "local_unpersist",
     edges_distinct: bool = False,
 ) -> DataFrame:
     """Compute components over an undirected edge list of long node ids.
@@ -69,35 +70,18 @@ def connected_components(
     ("driver" for the kernel | "distributed"), ``undirected_edges``, and
     for the distributed loop ``rounds``.
 
-    ``checkpoint_mode`` picks how each round's labels are materialized and
-    how the SUPERSEDED round's storage is reclaimed (the VERDICT r4 item-2
-    experiments; only consulted when ``eager_checkpoint`` is True):
-
-    * ``"local_unpersist"`` (default) — localCheckpoint, then explicitly
-      unpersist the previous round's checkpoint RDD (identified by
-      diffing the JVM's persistent-RDD registry around the checkpoint
-      call) the moment the new round is materialized. Deterministic
-      reclamation: storage per round is O(nodes), never
-      O(rounds x nodes), with no reliance on Python GC timing.
-    * ``"local"`` — r4 behavior: localCheckpoint + a gc.collect() nudge
-      and ContextCleaner reaping (kept as the measured baseline).
-    * ``"disk"`` — reliable ``DataFrame.checkpoint`` to the session's
-      checkpoint dir (a temp dir is set if absent), superseded round
-      files deleted eagerly. Trades serialization for heap headroom —
-      on a real cluster this is the HDFS-backed option.
+    Storage on the distributed loop: the undirected edge list and every
+    round's labels are ``localCheckpoint(eager=True)``ed, and each
+    superseded round is freed by :func:`~..session.release` the moment the
+    next one is materialized, so live storage is O(nodes), never
+    O(rounds x nodes). The edge checkpoint is freed before return; the one
+    persisted RDD left is the final round's labels, which the returned
+    frame reads.
 
     Raises RuntimeError if ``max_iter`` rounds pass without convergence —
     with pointer doubling that needs a component of diameter > 2^max_iter,
     i.e. it only fires on a genuine bug, never silently mislabels.
     """
-    if checkpoint_mode not in ("local_unpersist", "local", "disk"):
-        # ADVICE r5: an unrecognized mode used to silently fall through to
-        # plain localCheckpoint with NO reclamation — worse than either
-        # documented mode. Same guard shape as salted_join's `how`.
-        raise ValueError(
-            f"connected_components: unknown checkpoint_mode {checkpoint_mode!r}; "
-            "expected 'local_unpersist', 'local' or 'disk'"
-        )
     spark = edges.sparkSession
     if small_graph_threshold:
         g = smallgraph.collect_edges(
@@ -121,70 +105,28 @@ def connected_components(
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     if not edges_distinct:
         und = und.distinct()
-    und = und.localCheckpoint(eager=eager_checkpoint) if eager_checkpoint else und.cache()
+    und = und.localCheckpoint(eager=True)
+    try:
+        if stats_out is not None:
+            stats_out.update(undirected_edges=und.count() // 2, path="distributed")
+        labels, rounds = _min_label_rounds(und, max_iter)
+    finally:
+        release(und)
     if stats_out is not None:
-        stats_out.update(undirected_edges=und.count() // 2, path="distributed")
+        stats_out["rounds"] = rounds
+    return labels.select("node", F.col("label").alias("component"))
 
-    sc = spark.sparkContext
 
-    def _persistent_ids() -> set[int]:
-        return {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-    def _unpersist_by_id(rdd_id: int) -> None:
-        m = sc._jsc.getPersistentRDDs()
-        for key in m.keySet().toArray():
-            if int(key) == rdd_id:
-                m.get(key).rdd().unpersist(False)
-                return
-
-    if eager_checkpoint and checkpoint_mode == "disk":
-        import tempfile
-
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(tempfile.mkdtemp(prefix="cc_ckpt_"))
-        # resolved dir includes the session UUID subdir; strip a file: scheme
-        # for os-level listing/cleanup (local mode — on a cluster the eager
-        # cleanup would go through the Hadoop FS API instead)
-        ckpt_dir = sc._jsc.sc().getCheckpointDir().get()
-        if ckpt_dir.startswith("file:"):
-            ckpt_dir = ckpt_dir[len("file:"):]
-
-    def _round_checkpoint(df: DataFrame, state: dict) -> DataFrame:
-        """Materialize this round's labels, then reclaim the superseded
-        round's storage per checkpoint_mode."""
-        if not eager_checkpoint:
-            return df.cache()
-        if checkpoint_mode == "disk":
-            import os
-            import shutil
-
-            before = set(os.listdir(ckpt_dir)) if os.path.isdir(ckpt_dir) else set()
-            out = df.checkpoint(eager=True)
-            new_files = set(os.listdir(ckpt_dir)) - before
-            for stale in state.pop("files", set()):
-                shutil.rmtree(os.path.join(ckpt_dir, stale), ignore_errors=True)
-            state["files"] = new_files
-            return out
-        if checkpoint_mode == "local_unpersist":
-            before = _persistent_ids()
-            out = df.localCheckpoint(eager=True)
-            new_ids = _persistent_ids() - before
-            for stale in state.pop("ids", set()):
-                _unpersist_by_id(stale)
-            state["ids"] = new_ids
-            return out
-        return df.localCheckpoint(eager=True)  # "local": r4 baseline
-
-    ckpt_state: dict = {}
+def _min_label_rounds(und: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
+    """The distributed loop of :func:`connected_components` over the
+    checkpointed both-orientations edge list: (the final round's
+    checkpointed (node, label) frame, rounds run)."""
     # No materialized round-0 labels: the identity label map makes round 1's
     # hop computable straight from the edge list (see the fusion below), so
     # the node-set distinct (a full shuffle of the undirected list) and the
     # round-0 checkpoint are both skipped (r6; guide §2.3 "shuffle fewer
     # bytes", §2.4 "remove shuffles outright").
     labels = None
-
-    converged = False
-    rounds = 0
     # Convergence detection: labels are node-ids and every update is a min
     # over (self ∪ neighbors ∪ label-of-label), so per-node labels are
     # MONOTONICALLY non-increasing — sum(label) is strictly decreasing
@@ -193,8 +135,7 @@ def connected_components(
     # new ⋈ old change-join (2 extra shuffles per round). No overflow:
     # sum ≤ n_nodes · max_id ≪ 2^63 for any realistic id space.
     prev_sum = None
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, max_iter + 1):
         # 1) candidate labels arriving over edges (one hop)
         if labels is None:
             # Round-1 fusion: with identity labels, min(self ∪ neighbor
@@ -225,38 +166,25 @@ def connected_components(
         new_labels = (
             hop.join(lmap, hop.label == F.col("_ln"), "left")
             .select("node", F.coalesce(F.col("_ll"), F.col("label")).alias("label"))
+            .localCheckpoint(eager=True)
         )
-        if eager_checkpoint:
-            # materializes the round AND eagerly reclaims the superseded
-            # round's storage (mode-dependent, see docstring) — without
-            # reclamation a big graph accumulates O(rounds × nodes) dead
-            # blocks in one JVM and GC-thrashes (observed at 20M edges /
-            # 22M nodes; the r4 gc.collect() nudge only helped when the
-            # ContextCleaner happened to run — BENCH_FULL cc_scale shows
-            # the measured difference)
-            new_labels = _round_checkpoint(new_labels, ckpt_state)
-        cur_sum = new_labels.agg(F.sum("label")).collect()[0][0]
+        # the superseded round is dead once the new one is materialized —
+        # without freeing it a big graph accumulates O(rounds × nodes) dead
+        # blocks in one JVM and GC-thrashes (observed at 20M edges / 22M
+        # nodes before r5)
+        if labels is not None:
+            release(labels)
         labels = new_labels
+        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
-            converged = True
-            break
+            return labels, rounds
         prev_sum = cur_sum
-        if eager_checkpoint and checkpoint_mode == "local":
-            # r4 baseline: best-effort Python GC nudge so the
-            # ContextCleaner can reap superseded blocks eventually
-            import gc
-
-            del hop, lmap, new_labels  # (round 1 has no msgs frame)
-            gc.collect()
-
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"(component diameter would have to exceed 2^{max_iter})"
-        )
-    if stats_out is not None:
-        stats_out["rounds"] = rounds
-    return labels.select("node", F.col("label").alias("component"))
+    if labels is not None:
+        release(labels)
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} rounds "
+        f"(component diameter would have to exceed 2^{max_iter})"
+    )
 
 
 def pair_edges_from_groups(df: DataFrame, group_col: str, member_col: str) -> DataFrame:

@@ -17,6 +17,7 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import release
 from . import smallgraph
 
 
@@ -44,7 +45,10 @@ def bfs_reachable(
 
     Distributed loop: the edge list is undirected + deduplicated once and
     checkpointed; each hop joins it against the frontier and anti-joins
-    the visited set — both checkpointed so plans stay flat.
+    the visited set — both checkpointed so plans stay flat. Each
+    superseded checkpoint, and the edge checkpoint at the end, is freed
+    with :func:`~..session.release`; the one persisted RDD left is the
+    returned ``visited`` frame's.
 
     r6 join strategy (guide §3.1): the frontier and visited sets have
     EXACT known counts (each hop counts them anyway), so while they stay
@@ -93,11 +97,19 @@ def bfs_reachable(
         nxt = nxt.localCheckpoint(eager=True)
         n_frontier = nxt.count()
         if n_frontier == 0:
+            release(nxt)
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        grown = visited.unionByName(nxt).localCheckpoint(eager=True)
+        # each superseded checkpoint is dead once its successor exists
+        if frontier is not visited:
+            release(frontier)
+        release(visited)
+        visited, frontier = grown, nxt
         n_visited += n_frontier
-        frontier = nxt
 
+    if frontier is not visited:
+        release(frontier)
+    release(e)
     return visited
 
 

@@ -45,14 +45,6 @@ def _signature_from_base(base: Column, num_perm: int) -> Column:
     return F.array(*sig)
 
 
-def minhash_signature(shingles: Column, num_perm: int = 32) -> Column:
-    """array<string> shingles → array<long> MinHash signature. NOTE: inline
-    composition duplicates the shingle expression num_perm times — prefer
-    the staged plan in :func:`lsh_candidate_pairs` for anything hot."""
-    base = F.transform(shingles, lambda s: F.abs(F.xxhash64(s)))
-    return _signature_from_base(base, num_perm)
-
-
 def band_hashes(sig: Column, num_bands: int, rows_per_band: int) -> Column:
     """Signature → array<long> of per-band hashes.
 

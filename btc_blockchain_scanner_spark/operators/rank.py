@@ -30,14 +30,9 @@ only caveat and are vanishingly improbable (2^-64 birthday scale here).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
-
-
-def md5_bucket(key: Column, prefix_len: int = 2) -> Column:
-    """Integer value of the first ``prefix_len`` hex chars of md5(key)."""
-    return F.conv(F.substring(F.md5(key), 1, prefix_len), 16, 10).cast("int")
 
 
 def ranked_by_md5(

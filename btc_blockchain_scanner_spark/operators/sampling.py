@@ -1,7 +1,7 @@
 """Deterministic sampling / dataset-split operators.
 
-Training-data pipelines need reproducible corpus splits and per-stratum
-samples that do not depend on row order, partitioning, or a seed stream —
+Training-data pipelines need reproducible corpus splits and samples that
+do not depend on row order, partitioning, or a seed stream —
 the same determinism contract as the id assignment (operators/rank.py):
 every decision is a pure function of the row's KEY.
 
@@ -118,21 +118,3 @@ def per_key_cap(
     )
     return ok.unionByName(fb).drop("_rn", "_f", "_cnt")
 
-
-def stratified_sample(
-    df: DataFrame, key_col: str, stratum_col: str, fractions: dict, salt: str = "strat"
-) -> DataFrame:
-    """Per-stratum deterministic sampling: ``fractions`` maps stratum value
-    → keep fraction (strata absent from the map are dropped). The hash
-    draw includes the stratum so one key appearing under two strata gets
-    independent decisions."""
-    h = F.xxhash64(F.col(key_col).cast("string"), F.col(stratum_col).cast("string"), F.lit(salt))
-    u = (
-        F.shiftrightunsigned(h, 1).cast("double") * 2.0 + (h.bitwiseAND(F.lit(1))).cast("double")
-    ) / _UNIT_DENOM / 2.0
-    frac = None
-    for value, f in fractions.items():
-        cond = F.col(stratum_col) == F.lit(value)
-        frac = F.when(cond, F.lit(float(f))) if frac is None else frac.when(cond, F.lit(float(f)))
-    frac = frac.otherwise(F.lit(0.0)) if frac is not None else F.lit(0.0)
-    return df.where(u < frac)

@@ -1,7 +1,7 @@
 """Driver-verified curation-layer queries (VERDICT r4 item 1).
 
-The r4 round added the corpus-curation operators (operators/curate.py,
-operators/sampling.py, dedup.cross_contamination) with pytest-only
+The r4 round added the corpus-curation operators (operators/sampling.py,
+dedup.cross_contamination) with pytest-only
 evidence; these rows put the two oracle-expressible stages under the
 driver's DuckDB gate, the same way the reference runs its audit queries
 against live data instead of trusting the library (DbQueryWallet.java:48-70):

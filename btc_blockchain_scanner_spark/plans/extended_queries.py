@@ -57,15 +57,6 @@ def a07_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.cube("l_returnflag", "l_linestatus").agg(F.count("*").alias("n"))
 
 
-def a08_cube_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over (o_orderstatus, o_orderpriority) — library function with a
-    DuckDB-equivalence pytest (tests/test_pipeline.py). Not separately
-    registered: the a07 grouping-sets row already drives the full cube
-    lattice through the driver's oracle gate."""
-    o = load(spark, sf_dir, "orders")
-    return o.cube("o_orderstatus", "o_orderpriority").agg(F.count("*").alias("n"))
-
-
 @query(
     "o04_pivot_flag_status",
     oracle="""

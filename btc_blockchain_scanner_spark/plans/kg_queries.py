@@ -428,7 +428,8 @@ def kg11_transcript_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     linked, entities, _ = link.link_mentions(mentions, link.default_alias_dict(spark), spark=spark)
     edges = canonicalize.comention_edges(linked)
     # connected_components materializes eagerly inside canon_map, so every
-    # consumer of the mention cache has run by the time it returns
+    # consumer of the mention cache has run by the time it returns; the
+    # entities checkpoint is kept, because the returned frame reads it
     out = canonicalize.canon_map(entities, edges)
     mentions.unpersist()
     return out

@@ -94,26 +94,6 @@ def a01_lines_per_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def p03_nonempty_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P3 non-empty filter (reference: `.filter(tx -> tx.getNInputs() != 0)`,
-    RunUpdateWallets2.java:158).
-
-    NOT registered with the driver since r4 (50-row cap): the shape is
-    fully subsumed by p02/a04's evidence (VERDICT r3 item 5 named it the
-    redundant row); its slot went to t07_dedup_groups. Stays a library
-    function with an oracle-snapshot pytest (tests/test_pipeline.py), the
-    same documented rotation as a08/q06/q13."""
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    nonempty = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .groupBy("o_orderkey")
-        .agg(F.count("*").alias("n_lines"))
-        .where(F.col("n_lines") > 0)
-    )
-    return nonempty.agg(F.count("*").alias("n"))
-
-
 @query(
     "a02_last_ids",
     oracle="""
@@ -153,26 +133,6 @@ def a04_multi_supplier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_orderkey")
         .agg(F.countDistinct("l_suppkey").alias("n_supp"))
         .where(F.col("n_supp") > 3)
-    )
-
-
-def a05_distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 distinct over a broadcast-joined projection (reference:
-    DISTINCT wallet sets, tests/RunUpdateWallets.java:77,103).
-
-    NOT registered with the driver since r5 (50-row cap): its two shapes
-    stay driver-covered — DISTINCT by o03 (union DISTINCT), a06 (sorted
-    distinct lists), j06 (per-order distinct) and a01 (countDistinct);
-    the broadcast dim join by j02/j07 (BroadcastHashJoin asserted). Its
-    slot went to the curation layer (c01/c02,
-    plans/curation_queries.py). Pinned by an oracle-snapshot pytest
-    (tests/test_pipeline.py), the p03/a08/q06/q13 rotation pattern."""
-    c = load(spark, sf_dir, "customer")
-    n = load(spark, sf_dir, "nation")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .select("c_mktsegment", "n_name")
-        .distinct()
     )
 
 
@@ -329,23 +289,6 @@ def j03_spent_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         F.when(F.col("l_orderkey").isNotNull(), 1).otherwise(0).alias("has_lines"),
     )
-
-
-def j04_anti_missing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 anti join (reference: missing-wallet audit `NOT IN`,
-    DbQueryWallet.java:48-57). left_anti avoids materializing the non-match
-    side; Catalyst plans a broadcast/SMJ anti join.
-
-    NOT registered with the driver since r5: every testdata customer has
-    an order, so the r4 row passed with 0 rows — green but vacuous
-    (VERDICT r4 items 1+5). Its slot went to the curation layer
-    (c01/c02, plans/curation_queries.py). Stays pinned by an
-    oracle-snapshot pytest that PLANTS an orphan key so the pin proves
-    the anti join discriminates (tests/test_pipeline.py), the
-    p03/a08/q06/q13 rotation pattern."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey")
 
 
 @query(
@@ -609,8 +552,7 @@ def w02_running_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w03_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (lag + cumulative flag-sum) — the batch
-    equivalent of a session window; streaming variant lives in
-    ``streaming/`` (SURVEY.md §2.8)."""
+    equivalent of a session window (SURVEY.md §2.8)."""
     ev = load(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     cum = w.rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -637,8 +579,8 @@ def w03_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e01_hourly_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window rollup over event time — the batch shape of the
-    streaming windowed agg in ``streaming/`` (SURVEY.md §2.8)."""
+    """Tumbling-window rollup over event time — the batch shape of a
+    streaming windowed agg (SURVEY.md §2.8)."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy(
@@ -740,41 +682,6 @@ def q03_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("revenue").desc(), F.col("l_orderkey"))
         .limit(10)
     )
-
-
-# q06/q13 below are kept as library functions + pytest coverage but are NOT
-# registered: the driver emits at most 50 CORRECTNESS rows (r01 dropped the
-# last 5 of 55 registered), and these two TPC-H showcases cover no SURVEY §2
-# operator that q01/q03/j02/p04 don't already evidence.
-def q06_revenue_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape: pure scan-filter-aggregate; every predicate pushes to
-    parquet (range + between), no shuffle beyond the final 1-row agg."""
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= "1997-01-01 00:00:00")
-            & (F.col("l_shipdate") < "1998-01-01 00:00:00")
-            & F.col("l_discount").between(0.02, 0.04)
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            dsum(F.col("l_extendedprice") * F.col("l_discount"), "revenue"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-def q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape: left join + two-level aggregation (count
-    distribution). COUNT(col) null-skips the unmatched side."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("n_orders"))
-    )
-    return per_cust.groupBy("n_orders").agg(F.count("*").alias("n_customers"))
 
 
 @query(

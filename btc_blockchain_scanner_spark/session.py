@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Number of local cores the driver benchmarks with (see bench.py).
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -106,7 +106,17 @@ def get_spark(
     return spark
 
 
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
+def release(frame: DataFrame) -> None:
+    """Free the storage of a ``localCheckpoint``ed frame.
+
+    Unpersists the frame's own checkpoint RDD — the RDD under its
+    ``LogicalRDD`` plan — so it touches nothing another thread persisted.
+    ``clearCache()`` does not reach local checkpoints. Raises ValueError
+    for a frame whose plan is not a ``LogicalRDD`` (anything but the frame
+    ``localCheckpoint`` returned), which has no checkpoint of its own."""
+    plan = frame._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
+        raise ValueError(
+            f"release: expected a localCheckpoint frame, got a {plan.nodeName()} plan"
+        )
+    plan.rdd().unpersist(False)

@@ -308,39 +308,12 @@ def test_ranked_by_md5_auto_path_leaves_no_cached_rdds(spark):
     assert persistent_ids() - before == set()
 
 
-def test_cc_checkpoint_modes_identical_labels(spark):
-    """The three round-storage reclamation strategies (local_unpersist /
-    local / disk — VERDICT r4 item 2 experiments) are physical-plan
-    choices only: labels must be byte-identical, and the two eager-cleanup
-    modes must leave no superseded round blocks in the session."""
-    from pyspark.sql import functions as F
-
-    from btc_blockchain_scanner_spark.operators.cc import connected_components
-
-    # two chains + a star, forced through the distributed loop
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21), (20, 22), (20, 23)],
-        "src long, dst long",
-    )
-    want = None
-    for mode in ("local_unpersist", "local", "disk"):
-        got = {
-            (r.node, r.component)
-            for r in connected_components(
-                e, small_graph_threshold=0, checkpoint_mode=mode
-            ).collect()
-        }
-        if want is None:
-            want = got
-        assert got == want, mode
-    assert want and {c for _, c in want} == {1, 10, 20}
-
-
 def test_cc_local_unpersist_frees_superseded_rounds(spark):
-    """The default reclamation contract: after the loop, the only NEW
-    persistent RDDs are the undirected edge checkpoint and the FINAL
-    round's labels — superseded rounds were unpersisted eagerly, so live
-    storage is O(nodes), never O(rounds x nodes)."""
+    """The reclamation contract: after the loop, the only NEW persistent
+    RDD is the FINAL round's labels, which the returned frame reads —
+    superseded rounds were released eagerly, so live storage is O(nodes),
+    never O(rounds x nodes), and the undirected edge checkpoint was
+    released before return."""
     def persistent_ids():
         jm = spark.sparkContext._jsc.getPersistentRDDs()
         return {int(k) for k in jm.keySet().toArray()}
@@ -352,42 +325,5 @@ def test_cc_local_unpersist_frees_superseded_rounds(spark):
     comp = connected_components(e, small_graph_threshold=0, stats_out=st)
     assert comp.count() == 200 and st["rounds"] >= 3
     leaked = persistent_ids() - before
-    # und + final labels = exactly 2 live checkpoint RDDs
-    assert len(leaked) <= 2, leaked
+    assert len(leaked) == 1, leaked
 
-
-def test_cc_disk_mode_deletes_superseded_checkpoint_files(spark, tmp_path):
-    """Disk mode's eager file GC: at loop end the checkpoint dir holds at
-    most the final round's rdd-* dir (plus none from superseded rounds)."""
-    import os
-
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    try:
-        e = spark.createDataFrame(
-            [(i, i + 1) for i in range(1, 200)], "src long, dst long"
-        )
-        st: dict = {}
-        comp = connected_components(
-            e, small_graph_threshold=0, stats_out=st, checkpoint_mode="disk"
-        )
-        assert comp.count() == 200 and st["rounds"] >= 3
-        resolved = spark.sparkContext._jsc.sc().getCheckpointDir().get()
-        if resolved.startswith("file:"):
-            resolved = resolved[len("file:"):]
-        left = [d for d in os.listdir(resolved) if d.startswith("rdd-")]
-        # one live rdd-* dir (the final labels); superseded rounds deleted
-        assert len(left) <= 1, left
-    finally:
-        # don't leave a checkpoint dir configured for later tests
-        # (scala setter name contains '$' — must go through getattr)
-        getattr(spark.sparkContext._jsc.sc(), "checkpointDir_$eq")(
-            spark.sparkContext._jvm.scala.Option.apply(None)
-        )
-
-
-def test_invalid_checkpoint_mode_raises(spark):
-    import pytest as _pytest
-
-    e = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with _pytest.raises(ValueError, match="checkpoint_mode"):
-        connected_components(e, small_graph_threshold=0, checkpoint_mode="Disk")

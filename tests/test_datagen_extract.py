@@ -85,64 +85,3 @@ def test_synth_materialization_idempotent_and_parity(spark, tmp_path, monkeypatc
     assert os.path.getmtime(os.path.join(path, "_SUCCESS")) == mtime  # no rewrite
     assert m2.count() == len(want)
 
-
-def test_conversational_extraction_resolves_pronouns(spark):
-    """Grouped applyInPandas extractor: pronouns resolve to the most recent
-    canonical mention across TURN boundaries (state a per-turn UDF cannot
-    carry), under stable (conv_id, turn_idx) ordering."""
-    from btc_blockchain_scanner_spark.kg.vocab import ALIASES
-
-    alias, canon = next(iter(ALIASES.items()))
-    rows = [
-        ("c1", 0, "user", f"tell me about {canon}", "", None),
-        ("c1", 1, "assistant", "it is widely used and this matters", "", None),
-        ("c1", 2, "user", f"compare {alias} then", "", None),
-        ("c1", 3, "assistant", "that comparison favors it", "", None),
-        ("c2", 0, "user", "it has no antecedent here", "", None),
-    ]
-    turns = spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
-    got = {
-        (r.conv_id, r.turn_idx, r.pos, r.surface, r.mention_type, r.source_token)
-        for r in extract.extract_conversational(turns).collect()
-    }
-    expect = {
-        ("c1", 0, 3, canon, "exact", None),
-        # turn 1: both pronouns resolve to the canon mentioned in turn 0
-        ("c1", 1, 0, canon, "pronoun", "it"),
-        ("c1", 1, 5, canon, "pronoun", "this"),
-        ("c1", 2, 1, alias, "alias", None),
-        # turn 3: resolves to the ALIAS's canonical form from turn 2
-        ("c1", 3, 0, ALIASES[alias], "pronoun", "that"),
-        ("c1", 3, 3, ALIASES[alias], "pronoun", "it"),
-    }
-    assert got == expect  # c2's dangling pronoun emits nothing
-
-
-def test_conversational_consistent_with_per_turn_and_parallelism(spark):
-    """Non-pronoun rows must equal the per-turn Arrow extractor's mentions
-    on the same transcripts, at any shuffle parallelism."""
-    tr = datagen.transcripts(spark, n_convs=30).cache()
-    per_turn = {
-        (r.conv_id, r.turn_idx, r.pos, r.surface, r.mention_type)
-        for r in extract.mentions_from(extract.extract(tr)).collect()
-    }
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    outs = []
-    try:
-        for parts in ("3", "17"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
-            outs.append(
-                {
-                    tuple(r)
-                    for r in extract.extract_conversational(tr).collect()
-                }
-            )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert outs[0] == outs[1]
-    non_pronoun = {
-        (c, t, p, s, mt) for (c, t, p, s, mt, src) in outs[0] if mt != "pronoun"
-    }
-    assert non_pronoun == per_turn

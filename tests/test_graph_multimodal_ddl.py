@@ -1,9 +1,8 @@
-"""BFS closure vs python oracle, multimodal plumbing, DDL bootstrap."""
+"""BFS closure vs python oracle, multimodal plumbing."""
 
 from pyspark.sql import functions as F
 
 from btc_blockchain_scanner_spark.operators import graph, multimodal, smallgraph
-from btc_blockchain_scanner_spark.sources import ddl
 
 
 # the numpy small-graph kernel (default budget) and the distributed loop
@@ -29,12 +28,21 @@ def test_bfs_matches_python(spark):
                     dist[v] = dist[u] + 1
                     nxt.append(v)
         frontier = nxt
+
+    def persistent_ids():
+        jm = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jm.keySet().toArray()}
+
     for t in PATHS:
+        before = persistent_ids()
         got = {
             (r.node, r.hops)
             for r in graph.bfs_reachable(e, src, max_hops=10, small_graph_threshold=t).collect()
         }
         assert got == set(dist.items()), t
+        # the distributed loop keeps only the checkpoint of the visited
+        # frame it returns; the kernel path checkpoints nothing
+        assert len(persistent_ids() - before) <= (1 if t == 0 else 0), t
 
 
 def test_bfs_respects_max_hops(spark):
@@ -69,15 +77,3 @@ def test_frame_sample_metadata_only(spark):
     plan = fs._jdf.queryExecution().executedPlan().toString()
     assert "payload" not in plan
 
-
-def test_ddl_bootstrap_roundtrip(spark, tmp_path):
-    created = ddl.create_schema(spark, str(tmp_path / "wh"))
-    assert set(created) == set(ddl.PIPELINE_TABLES)
-    # idempotent
-    ddl.create_schema(spark, str(tmp_path / "wh"))
-    cols = [f.name for f in spark.table("entities").schema.fields]
-    assert cols == ["entity_id", "entity_type", "canonical_hash", "display_name"]
-    spark.sql("INSERT INTO entities VALUES (1, 'concept', 'abc', 'spark')")
-    assert spark.table("entities").count() == 1
-    ddl.drop_schema(spark)
-    assert not spark.catalog.tableExists("entities")

@@ -1,7 +1,4 @@
-"""MERGE upsert semantics, winnowing fingerprints, stateful streaming
-sessions."""
-
-import datetime as dt
+"""MERGE upsert semantics and winnowing fingerprints."""
 
 from pyspark.sql import functions as F
 
@@ -153,30 +150,3 @@ def test_winnow_guarantee_with_recurring_kgrams(spark):
     assert sets[1] & sets[2], "recurring-k-gram shared run must still share a fingerprint"
     assert not (sets[1] & sets[3])
 
-
-def test_stateful_sessionize_stream(spark, tmp_path):
-    from btc_blockchain_scanner_spark.streaming import sessionize_stream
-
-    inp, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
-    base = dt.datetime(2024, 1, 1, 12, 0, 0)
-    rows = [
-        # user 7: two sessions separated by a 2h gap
-        (1, base, 7), (2, base + dt.timedelta(minutes=10), 7),
-        (3, base + dt.timedelta(hours=2), 7), (4, base + dt.timedelta(hours=2, minutes=5), 7),
-        # user 9: one session
-        (5, base, 9),
-    ]
-    df = spark.createDataFrame(
-        [(i, t, u, "click", 1.0, "{}") for i, t, u in rows],
-        "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
-    )
-    df.write.mode("append").parquet(inp)
-    q = sessionize_stream(spark, inp, ckpt, query_name="sess_test")
-    q.awaitTermination()
-    got = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("select * from sess_test").collect()
-    }
-    # only user 7's FIRST session is closed by an in-batch gap; open sessions
-    # wait for the processing-time timeout (not fired in availableNow runs)
-    assert (7, base, base + dt.timedelta(minutes=10), 2) in got

@@ -152,142 +152,6 @@ def test_entity_tags_side_tables(spark, run_dir):
     assert got == {some[0]: ["org", "tool"], some[1]: ["org"]}
 
 
-def test_unregistered_cube_still_correct(spark):
-    """a08 left the driver registry in round 3 (50-row cap; kg12 tags query
-    took its slot) but the CUBE grouping-sets op stays correct."""
-    import duckdb
-
-    from btc_blockchain_scanner_spark.plans.extended_queries import a08_cube_priority
-
-    sf = "/root/testdata/sf0.001"
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW orders AS SELECT * FROM '{sf}/orders.parquet'")
-    got = {
-        (r.o_orderstatus, r.o_orderpriority, r.n)
-        for r in a08_cube_priority(spark, sf).collect()
-    }
-    want = set(
-        con.execute(
-            """SELECT o_orderstatus, o_orderpriority, COUNT(*)
-               FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)"""
-        ).fetchall()
-    )
-    assert got == want
-
-
-def test_unregistered_p03_still_correct(spark):
-    """p03 left the driver registry in round 4 (50-row cap; its slot went
-    to t07_dedup_groups — VERDICT r3 item 5 named p03 the redundant row)
-    but the non-empty-filter shape stays correct."""
-    import duckdb
-
-    from btc_blockchain_scanner_spark.plans.relational_queries import p03_nonempty_orders
-
-    sf = "/root/testdata/sf0.001"
-    con = duckdb.connect()
-    for t in ("orders", "lineitem"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    got = p03_nonempty_orders(spark, sf).collect()[0].n
-    want = con.execute(
-        """SELECT COUNT(*) FROM (
-             SELECT o_orderkey FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-             GROUP BY o_orderkey HAVING COUNT(*) > 0)"""
-    ).fetchone()[0]
-    assert got == want
-
-
-def test_unregistered_tpch_queries_still_correct(spark):
-    """q06/q13 left the driver registry (50-row cap) but stay correct."""
-    import duckdb
-
-    from btc_blockchain_scanner_spark.plans.relational_queries import (
-        q06_revenue_forecast,
-        q13_customer_distribution,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    con = duckdb.connect()
-    for t in ("lineitem", "customer", "orders"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-    got6 = q06_revenue_forecast(spark, sf).collect()[0]
-    want6 = con.execute(
-        """SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(28,4))) AS DOUBLE), COUNT(*)
-           FROM lineitem
-           WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-             AND l_discount BETWEEN 0.02 AND 0.04 AND l_quantity < 24"""
-    ).fetchone()
-    assert (got6[0], got6[1]) == (want6[0], want6[1])
-    got13 = {(r.n_orders, r.n_customers) for r in q13_customer_distribution(spark, sf).collect()}
-    want13 = set(
-        con.execute(
-            """SELECT n_orders, COUNT(*) FROM (
-                 SELECT c_custkey, COUNT(o_orderkey) AS n_orders
-                 FROM customer LEFT JOIN orders ON o_custkey = c_custkey GROUP BY c_custkey)
-               GROUP BY n_orders"""
-        ).fetchall()
-    )
-    assert got13 == want13
-
-
-def test_unregistered_j04_a05_still_correct(spark):
-    """j04/a05 left the driver registry in round 5 (50-row cap; slots went
-    to the curation rows c01/c02 — VERDICT r4 items 1+5). j04's pin PLANTS
-    orphan customers (shifted keys that cannot match any order) so the
-    green assertion proves the anti join discriminates — the r4 driver row
-    passed with 0 rows, which proved only agreement on an empty set."""
-    import duckdb
-
-    from btc_blockchain_scanner_spark.plans.relational_queries import (
-        a05_distinct_segments,
-        j04_anti_missing,
-    )
-    from btc_blockchain_scanner_spark.sources.tables import load
-
-    sf = "/root/testdata/sf0.001"
-    con = duckdb.connect()
-    for t in ("customer", "orders", "nation"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
-
-    # baseline testdata: every customer has an order → empty on BOTH sides
-    got = {r.c_custkey for r in j04_anti_missing(spark, sf).collect()}
-    want = {
-        r[0]
-        for r in con.execute(
-            "SELECT c_custkey FROM customer WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)"
-        ).fetchall()
-    }
-    assert got == want == set()
-
-    # planted orphans: re-keyed copies of every 100th customer can't match
-    c = load(spark, sf, "customer")
-    orphans = c.where(F.col("c_custkey") % 100 == 0).withColumn(
-        "c_custkey", F.col("c_custkey") + F.lit(10_000_000)
-    )
-    o = load(spark, sf, "orders")
-    planted = c.unionByName(orphans)
-    got_p = {
-        r.c_custkey
-        for r in planted.join(o, planted.c_custkey == o.o_custkey, "left_anti")
-        .select("c_custkey")
-        .collect()
-    }
-    want_p = {
-        r[0] + 10_000_000
-        for r in con.execute(
-            "SELECT c_custkey FROM customer WHERE c_custkey % 100 = 0"
-        ).fetchall()
-    }
-    assert got_p == want_p and len(got_p) > 0
-
-    got5 = {(r.c_mktsegment, r.n_name) for r in a05_distinct_segments(spark, sf).collect()}
-    want5 = set(
-        con.execute(
-            "SELECT DISTINCT c_mktsegment, n_name FROM customer JOIN nation ON n_nationkey = c_nationkey"
-        ).fetchall()
-    )
-    assert got5 == want5 and len(got5) > 0
-
-
 def test_resume_from_dirty_tail(spark, tmp_path):
     """Kill mid-run (only partitions 0/1 extracted, no manifest), then resume
     → output identical to a clean full run (M4/M5, FIXTURES.md §3)."""
@@ -568,3 +432,22 @@ def test_sink_write_failure_surfaces_when_canon_raises(spark, tmp_path, monkeypa
     with pytest.raises(Exception, match="edges sink failed") as err:
         pipeline.run(spark, tr, str(tmp_path / "kg"), n_parts=2)
     assert "canon failed" in str(err.value.__context__)
+
+
+def test_run_and_incremental_update_leave_no_persisted_rdds(spark, tmp_path):
+    """pipeline.run then incremental_update into its state (the perfbench
+    kg_pipeline op) must release every checkpoint and cache they take:
+    the entities checkpoint link_mentions hands back, and the canon one."""
+    tr = datagen.transcripts(spark, n_convs=16)
+    out = str(tmp_path / "kg")
+
+    def persistent_ids():
+        jm = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in jm.keySet().toArray()}
+
+    # compare ID SETS: the ContextCleaner may reap other tests' RDDs
+    # meanwhile, so only ids this run added count
+    before = persistent_ids()
+    pipeline.run(spark, tr.where(F.col("conv_id") < "conv_00000012"), out, n_parts=2)
+    pipeline.incremental_update(spark, tr.where(F.col("conv_id") >= "conv_00000012"), out)
+    assert persistent_ids() - before == set()

@@ -146,38 +146,6 @@ def test_small_graph_bfs_equals_distributed(spark, edges, sources, max_hops, und
     assert run(10_000) == run(0)
 
 
-kv_strategy = st.lists(
-    st.tuples(st.sampled_from(["hub", "k1", "k2"]), st.integers(min_value=0, max_value=30)),
-    min_size=1,
-    max_size=80,
-)
-
-
-@given(rows=kv_strategy, n_salts=st.sampled_from([1, 3, 16]))
-@settings(**_SETTINGS)
-def test_salted_aggs_equal_plain(spark, rows, n_salts):
-    from btc_blockchain_scanner_spark.operators import salting
-
-    df = spark.createDataFrame(rows, "k string, v long")
-    got_set = {
-        (r.k, tuple(r.v_set))
-        for r in salting.salted_collect_set(df, ["k"], "v", n_salts=n_salts).collect()
-    }
-    want_set = {
-        (r.k, tuple(r.s))
-        for r in df.groupBy("k").agg(F.array_sort(F.collect_set("v")).alias("s")).collect()
-    }
-    assert got_set == want_set
-    got_n = {
-        (r.k, r.v_n_distinct)
-        for r in salting.salted_count_distinct(df, ["k"], "v", n_salts=n_salts).collect()
-    }
-    want_n = {
-        (r.k, r.n) for r in df.groupBy("k").agg(F.count_distinct("v").alias("n")).collect()
-    }
-    assert got_n == want_n
-
-
 edge_batches_strategy = st.lists(
     st.lists(
         st.tuples(st.integers(1, 25), st.integers(1, 25)).filter(lambda p: p[0] != p[1]),

@@ -56,18 +56,6 @@ def test_deterministic_sample_stable_and_nested(spark):
     assert other != s10
 
 
-def test_stratified_sample_per_stratum_fractions(spark):
-    rows = [(f"k{i}", "en" if i % 2 == 0 else "es") for i in range(6000)]
-    df = spark.createDataFrame(rows, "k string, lang string")
-    out = sampling.stratified_sample(df, "k", "lang", {"en": 0.5, "es": 0.1})
-    counts = {r.lang: r.n for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert 0.4 <= counts.get("en", 0) / 3000 <= 0.6
-    assert 0.05 <= counts.get("es", 0) / 3000 <= 0.16
-    # unlisted strata are dropped
-    out2 = sampling.stratified_sample(df, "k", "lang", {"en": 0.5})
-    assert out2.where(F.col("lang") == "es").count() == 0
-
-
 def test_per_key_cap_exact_vs_naive_window(spark):
     """The two-phase (pre-filter + bounded window + fallback) cap must
     equal the naive full-data window cap exactly — including a hot key

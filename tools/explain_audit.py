@@ -19,7 +19,6 @@ CHECKS = {
     "q01_pricing_summary": ["PushedFilters", "HashAggregate"],
     "p04_range_scan": ["PushedFilters: [IsNotNull(l_orderkey), GreaterThanOrEqual(l_orderkey,1000)"],
     "j07_region_revenue": ["BroadcastHashJoin"],
-    "j04_anti_missing": ["LeftAnti"],  # rotated out r5; plan shape still audited
     "j05_semi_urgent": ["LeftSemi"],
     # decontamination: eval-side shingles broadcast under the size guard,
     # candidates come from the shingle equi-join — never a cross join
@@ -71,11 +70,7 @@ def main() -> None:
     import btc_blockchain_scanner_spark.plans as plans
 
     spark = get_spark(master="local[4]", shuffle_partitions=4, app_name="explain")
-    qs = dict(plans.queries())
-    # rotated-out-but-pinned queries keep their plan audit
-    from btc_blockchain_scanner_spark.plans.relational_queries import j04_anti_missing
-
-    qs["j04_anti_missing"] = j04_anti_missing
+    qs = plans.queries()
 
     out = ["# Physical plan audit (explain formatted)\n"]
     failures = []
