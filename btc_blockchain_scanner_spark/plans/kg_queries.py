@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..kg import extract
 from ..kg.vocab import ALIASES
-from ..operators.cc import connected_components, pair_edges_from_groups
+from ..operators.cc import connected_components
 from ..sources.tables import load
 from . import synth
 from .registry import query

@@ -15,6 +15,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def persistent_ids(spark):
+    """Callable returning the ids in the JVM's persistent-RDD registry.
+    Tests compare id SETS, not counts: the ContextCleaner may reap other
+    tests' RDDs meanwhile, so only ids a call added count."""
+
+    def ids() -> set[int]:
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    return ids
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

@@ -32,14 +32,10 @@ def test_small_graph_fast_path_equals_distributed(spark):
     assert fast == slow
 
 
-def test_small_path_leaves_no_persisted_rdds(spark):
+def test_small_path_leaves_no_persisted_rdds(spark, persistent_ids):
     """The kernel paths of CC and BFS cache and checkpoint nothing: the
     JVM's persistent-RDD registry gains no id across a call."""
     from btc_blockchain_scanner_spark.operators.graph import bfs_reachable
-
-    def persistent_ids():
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jm.keySet().toArray()}
 
     e = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
     src = spark.createDataFrame([(1,)], "node long")
@@ -286,17 +282,13 @@ def test_incremental_canon_multi_batch_fold(spark):
     assert _canon_sets(canon) == _canon_sets(full)
 
 
-def test_ranked_by_md5_auto_path_leaves_no_cached_rdds(spark):
+def test_ranked_by_md5_auto_path_leaves_no_cached_rdds(spark, persistent_ids):
     """ADVICE r4 / VERDICT r4 item 6: the auto-size path used to persist
     its input with no release, leaking one cached frame per call into a
     long-lived session. Neither the auto path nor a production-shaped
     kg03 run may leave persistent RDDs behind."""
     from btc_blockchain_scanner_spark.operators.rank import ranked_by_md5
     from btc_blockchain_scanner_spark.plans.kg_queries import kg03_entity_ids
-
-    def persistent_ids() -> set:
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jm.keySet().toArray()}
 
     # compare ID SETS, not counts: the ContextCleaner may reap OTHER
     # tests' stale blocks mid-test (count would flakily shrink); the
@@ -308,16 +300,12 @@ def test_ranked_by_md5_auto_path_leaves_no_cached_rdds(spark):
     assert persistent_ids() - before == set()
 
 
-def test_cc_local_unpersist_frees_superseded_rounds(spark):
+def test_cc_local_unpersist_frees_superseded_rounds(spark, persistent_ids):
     """The reclamation contract: after the loop, the only NEW persistent
     RDD is the FINAL round's labels, which the returned frame reads —
     superseded rounds were released eagerly, so live storage is O(nodes),
     never O(rounds x nodes), and the undirected edge checkpoint was
     released before return."""
-    def persistent_ids():
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jm.keySet().toArray()}
-
     # 200-node path → several pointer-doubling rounds
     e = spark.createDataFrame([(i, i + 1) for i in range(1, 200)], "src long, dst long")
     before = persistent_ids()

@@ -9,7 +9,7 @@ from btc_blockchain_scanner_spark.operators import graph, multimodal, smallgraph
 PATHS = (smallgraph.SMALL_GRAPH_EDGES, 0)
 
 
-def test_bfs_matches_python(spark):
+def test_bfs_matches_python(spark, persistent_ids):
     edges = [(1, 2), (2, 3), (3, 4), (10, 11), (4, 10), (20, 21)]
     e = spark.createDataFrame(edges, "src long, dst long")
     src = spark.createDataFrame([(1,)], "node long")
@@ -28,11 +28,6 @@ def test_bfs_matches_python(spark):
                     dist[v] = dist[u] + 1
                     nxt.append(v)
         frontier = nxt
-
-    def persistent_ids():
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jm.keySet().toArray()}
-
     for t in PATHS:
         before = persistent_ids()
         got = {

@@ -68,28 +68,23 @@ def test_link_mentions_roundtrip(spark):
     assert {r.match_type for r in surface_to_id.collect()} == {"exact"}
 
 
-def test_link_mentions_persists_only_entity_checkpoint(spark):
+def test_link_mentions_persists_only_entity_checkpoint(spark, persistent_ids):
     """Link materializes its outputs once: the entities checkpoint is the
     only RDD it leaves registered, on the exact fast path and on the LSH
     fuzzy path alike (the surface map is a driver-collected local relation,
     and resolution releases what it persisted)."""
-    jsc = spark.sparkContext._jsc
-
-    def persisted():
-        return {int(k) for k in jsc.getPersistentRDDs().keySet()}
-
     d = link.default_alias_dict(spark)
     for surfaces, kinds in ((["spark", "sprk"], {"exact"}), (["spark", "snowflakee"], {"exact", "fuzzy"})):
         mentions = spark.createDataFrame(
             [("c1", 0, i, s) for i, s in enumerate(surfaces)],
             "conv_id string, turn_idx int, pos int, surface string",
         )
-        before = persisted()
+        before = persistent_ids()
         linked, entities, surface_to_id = link.link_mentions(mentions, d, spark=spark)
-        added = persisted() - before
+        added = persistent_ids() - before
         assert len(added) == 1, kinds
         assert {r.match_type for r in surface_to_id.collect()} == kinds
         # consuming the outputs materializes nothing further
         linked.count()
         entities.count()
-        assert persisted() - before == added
+        assert persistent_ids() - before == added

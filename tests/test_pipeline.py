@@ -434,19 +434,12 @@ def test_sink_write_failure_surfaces_when_canon_raises(spark, tmp_path, monkeypa
     assert "canon failed" in str(err.value.__context__)
 
 
-def test_run_and_incremental_update_leave_no_persisted_rdds(spark, tmp_path):
+def test_run_and_incremental_update_leave_no_persisted_rdds(spark, tmp_path, persistent_ids):
     """pipeline.run then incremental_update into its state (the perfbench
     kg_pipeline op) must release every checkpoint and cache they take:
     the entities checkpoint link_mentions hands back, and the canon one."""
     tr = datagen.transcripts(spark, n_convs=16)
     out = str(tmp_path / "kg")
-
-    def persistent_ids():
-        jm = spark.sparkContext._jsc.getPersistentRDDs()
-        return {int(k) for k in jm.keySet().toArray()}
-
-    # compare ID SETS: the ContextCleaner may reap other tests' RDDs
-    # meanwhile, so only ids this run added count
     before = persistent_ids()
     pipeline.run(spark, tr.where(F.col("conv_id") < "conv_00000012"), out, n_parts=2)
     pipeline.incremental_update(spark, tr.where(F.col("conv_id") >= "conv_00000012"), out)
