@@ -315,3 +315,20 @@ def test_cc_local_unpersist_frees_superseded_rounds(spark, persistent_ids):
     leaked = persistent_ids() - before
     assert len(leaked) == 1, leaked
 
+
+
+def test_release_frees_only_its_own_checkpoint(spark, persistent_ids):
+    """session.release unpersists exactly the checkpoint RDD under a
+    localCheckpoint frame, and refuses a frame derived from it, whose plan
+    is no LogicalRDD (it owns no checkpoint)."""
+    import pytest
+
+    from btc_blockchain_scanner_spark.session import release
+
+    before = persistent_ids()
+    ck = spark.range(10).localCheckpoint(eager=True)
+    assert len(persistent_ids() - before) == 1
+    with pytest.raises(ValueError, match="localCheckpoint"):
+        release(ck.select("id"))
+    release(ck)
+    assert persistent_ids() - before == set()
