@@ -8,7 +8,8 @@ its acknowledged hot spot is hub wallets (SURVEY.md §2.7 M2, §4 skew row).
 
 The physical path is chosen by size. A graph of at most
 ``small_graph_threshold`` undirected edges (default
-``smallgraph.SMALL_GRAPH_EDGES``) is collected once through Arrow and
+``smallgraph.SMALL_GRAPH_EDGES``, the driver budget of
+operators/closure.py in edges) is collected once through Arrow and
 resolved in numpy on the driver (operators/smallgraph.py) — the
 reference's one-box union-find. Every KG entity graph and every registered
 query's graph takes this path. Larger graphs run the distributed loop:

@@ -18,24 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text as TX
-from . import lsh
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the session default parallelism when
-    the input has fewer partitions.
-
-    Python/Arrow stages (shingle UDF, GEMM mapInPandas) parallelize by
-    input split, and a small single-file parquet table opens with only a
-    couple of splits (``spark.sql.files.openCostInBytes`` pads small files
-    to 4 MB, guide §6) — at sf1.0 the 5.7 MB documents table scanned as 2
-    splits, so every downstream Arrow UDF ran on 2 of 32 cores. The
-    repartition shuffles only the narrow projected columns; at cluster
-    scale inputs span many files and this is a no-op."""
-    p = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < p:
-        return df.repartition(p)
-    return df
+from . import closure, lsh
 
 
 # -- exact -------------------------------------------------------------------
@@ -73,9 +56,10 @@ def shingle_docs(
     the operators' ``sh=`` parameter (t06_dedup_recall does).
 
     The (id, text) projection is spread to full parallelism before the
-    Arrow shingle UDF — see :func:`_spread` (r6: the sf1.0 corpus scanned
-    as 2 splits and the UDF pass took 7.2 s on 2 cores vs ~1 s spread)."""
-    return _spread(docs.select(
+    Arrow shingle UDF — see :func:`.closure.spread` (r6: the sf1.0 corpus
+    scanned as 2 splits and the UDF pass took 7.2 s on 2 cores vs ~1 s
+    spread)."""
+    return closure.spread(docs.select(
         F.col(id_col).alias("_id"), F.col(text_col)
     )).select(
         "_id", TX.word_shingles(F.col(text_col), n).alias("_sh")
@@ -90,19 +74,17 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_shingle_freq: int | None = 1000,
     sh: DataFrame | None = None,
-    gemm_max_incidences: int = 32_000_000,
 ) -> DataFrame:
     """(id_a, id_b, jacc) for pairs with word-n-gram Jaccard >= threshold.
 
     Two physically different plans, one contract (parity pytest-pinned):
 
-    * **Postings-GEMM path** (taken when the corpus fits
-      ``gemm_max_incidences`` (doc, shingle) incidences): the shingle
-      frame is collected ONCE, factorized to dense column codes on the
-      driver (string-exact — no hashing, no collision modes), and the
-      postings closure (~12 bytes/incidence + ~20/doc; ~400 MB per
-      Python worker at the 32M default — size the budget to worker
-      memory on smaller hosts) is broadcast; tasks then
+    * **Postings-GEMM path** (taken when the collected side — the raw
+      texts, or the ``sh`` shingle strings — fits the driver budget of
+      :mod:`.closure`): it is collected ONCE through Arrow, factorized
+      to dense column codes on the driver (string-exact — no hashing, no
+      collision modes), and the postings closure (~12 bytes/incidence +
+      ~20/doc) is broadcast; tasks then
       count their doc block's overlaps against the whole corpus with
       cache-resident numpy gathers — the §8-guide "decide with small
       rows" move, and the same size-guarded closure-broadcast pattern as
@@ -132,28 +114,18 @@ def ngram_jaccard_pairs(
     id_type = (
         sh.schema["_id"] if sh is not None else docs.schema[id_col]
     ).dataType.simpleString()
-    if sh is None:
-        # cheap no-UDF eligibility proxy: token count <= chars/5, and a
-        # shingle never outnumbers tokens — an over-estimate only ever
-        # sends an eligible corpus to the (correct, slower) join path
-        pre = docs.agg(F.sum(F.length(text_col)).alias("chars")).collect()[0]
-        if (pre["chars"] or 0) // 5 <= 2 * gemm_max_incidences:
-            post = _try_text_postings(docs, id_col, text_col, n, gemm_max_incidences)
-            if post is not None:
-                return _jaccard_pairs_gemm(
-                    docs.sparkSession, id_type, post, threshold, max_shingle_freq
-                )
-        # join path consumes the shingle frame several times — persist it
-        return _jaccard_pairs_join(
-            shingle_docs(docs, id_col, text_col, n).persist(), threshold, max_shingle_freq
+    post = (
+        _try_text_postings(docs, id_col, text_col, n)
+        if sh is None
+        else _try_shingle_postings(sh)
+    )
+    if post is not None:
+        return _jaccard_pairs_gemm(
+            docs.sparkSession, id_type, post, threshold, max_shingle_freq
         )
-    st = sh.agg(F.sum(F.size("_sh")).alias("inc")).collect()[0]
-    if st["inc"] is not None and st["inc"] <= gemm_max_incidences:
-        post = _try_shingle_postings(sh, gemm_max_incidences)
-        if post is not None:
-            return _jaccard_pairs_gemm(
-                sh.sparkSession, id_type, post, threshold, max_shingle_freq
-            )
+    if sh is None:
+        # the join path consumes the shingle frame several times — persist it
+        sh = shingle_docs(docs, id_col, text_col, n).persist()
     return _jaccard_pairs_join(sh, threshold, max_shingle_freq)
 
 
@@ -162,7 +134,6 @@ def _jaccard_pairs_join(
 ) -> DataFrame:
     """The distributed shared-shingle join plan (see
     :func:`ngram_jaccard_pairs`); unbounded scale, no driver state."""
-    docs = sh  # only the sparkSession is needed from here on
     # _sh is a DISTINCT shingle array, so (id, shingle) rows are unique and
     # the shared-shingle count c per pair equals |A ∩ B| exactly — Jaccard
     # falls out arithmetically: j = c / (|A| + |B| - c). No second pass
@@ -178,24 +149,23 @@ def _jaccard_pairs_join(
         # unpersist sweep can't reach it) and not a literal
         # F.array(*[F.lit(g) ...]) (Catalyst analysis degrades at a few
         # thousand literal expressions, far below any useful cap).
-        hub_rows = (
+        hubs = closure.collect_bounded(
             exploded.groupBy("_g")
             .agg(F.count("*").alias("_df"))
             .where(F.col("_df") > max_shingle_freq)
-            .select("_g")
-            .limit(100_001)
-            .collect()
+            .select("_g"),
+            100_000,
         )
-        n_hubs = len(hub_rows)
-        if n_hubs > 100_000:
+        if hubs is None:
             raise ValueError(
                 "ngram_jaccard_pairs: >100k hub shingles above "
                 f"max_shingle_freq={max_shingle_freq}; raise the cap or use "
                 "minhash_lsh_pairs for this corpus"
             )
+        n_hubs = hubs.num_rows
         exploded_all = exploded
         if n_hubs:
-            hubs = docs.sparkSession.createDataFrame(hub_rows, "_g string")
+            hubs = sh.sparkSession.createDataFrame(hubs)
             exploded = exploded.join(F.broadcast(hubs), "_g", "left_anti")
 
     cand = (
@@ -235,22 +205,26 @@ def _jaccard_pairs_join(
     return cand.select("id_a", "id_b", jacc.alias("jacc")).where(F.col("jacc") >= threshold)
 
 
-def _try_text_postings(
-    docs: DataFrame, id_col: str, text_col: str, n: int, max_incidences: int
-):
-    """Collect the BOUNDED corpus as raw (id, text) — ~8x fewer bytes than
-    the shingle arrays — and shingle on the driver with the shared
-    pure-Python tokenizer (functions.text.shingle_list: identical
-    semantics to the Arrow UDF by construction). Cuts the distributed
-    shingle-UDF pass out of the GEMM path entirely: the corpus must be
-    collected anyway, and 50k docs shingle in ~2 s flat on the driver vs
-    a 3-5 s Python-worker stage. Returns the postings dict or None."""
+def _try_text_postings(docs: DataFrame, id_col: str, text_col: str, n: int):
+    """Collect the corpus as raw (id, text) — ~8x fewer bytes than the
+    shingle arrays — when its bytes fit the closure budget, and shingle on
+    the driver with the shared pure-Python tokenizer
+    (functions.text.shingle_list: identical semantics to the Arrow UDF by
+    construction). Cuts the distributed shingle-UDF pass out of the GEMM
+    path entirely: the corpus must be collected anyway, and 50k docs
+    shingle in ~2 s flat on the driver vs a 3-5 s Python-worker stage.
+    Returns the postings dict, or None over budget or for non-integral
+    ids (then the caller must use the distributed string join)."""
     import numpy as np
 
+    tbl = closure.collect_bounded(
+        docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")),
+        closure.BUDGET_BYTES,
+        weight=F.octet_length("_t") + 8,
+    )
+    if tbl is None:
+        return None
     try:
-        tbl = docs.select(
-            F.col(id_col).alias("_id"), F.col(text_col).alias("_t")
-        ).toArrow()
         ids = np.asarray(tbl.column("_id"), dtype=np.int64)
     except (ValueError, TypeError, OverflowError):
         return None  # non-integral ids — join path handles them
@@ -264,18 +238,24 @@ def _try_text_postings(
     keep = sizes > 0  # mirror shingle_docs' size(_sh) > 0 filter
     if not keep.all():
         ids, sizes = ids[keep], sizes[keep]
-    return _assemble_postings(ids, sizes, flat, max_incidences)
+    return _assemble_postings(ids, sizes, flat)
 
 
-def _try_shingle_postings(sh: DataFrame, max_incidences: int):
+def _try_shingle_postings(sh: DataFrame):
     """Collect an existing (_id, _sh) shingle frame (persisted by the
-    caller — the t06 stage-sharing shape) and build the postings closure.
-    Returns None when the corpus exceeds the incidence budget or ids are
-    not integral (then the caller must use the distributed string join)."""
+    caller — the t06 stage-sharing shape) when its shingle strings fit the
+    closure budget, and build the postings closure. Returns None like
+    :func:`_try_text_postings`."""
     import numpy as np
 
+    tbl = closure.collect_bounded(
+        sh.select("_id", "_sh"),
+        closure.BUDGET_BYTES,
+        weight=F.octet_length(F.array_join("_sh", " ")) + 8,
+    )
+    if tbl is None:
+        return None
     try:
-        tbl = sh.select("_id", "_sh").toArrow()
         ids = np.asarray(tbl.column("_id"), dtype=np.int64)
     except (ValueError, TypeError, OverflowError):
         return None  # non-integral ids — join path handles them
@@ -283,10 +263,10 @@ def _try_shingle_postings(sh: DataFrame, max_incidences: int):
 
     scol = tbl.column("_sh").combine_chunks()
     sizes = np.asarray(pc.list_value_length(scol), dtype=np.int64)
-    return _assemble_postings(ids, sizes, scol.flatten(), max_incidences)
+    return _assemble_postings(ids, sizes, scol.flatten())
 
 
-def _assemble_postings(ids, sizes, flat, max_incidences: int):
+def _assemble_postings(ids, sizes, flat):
     """Common tail of the postings builders: dictionary-encode the flat
     shingle stream (string-exact dense column codes, Arrow C++), reorder
     rows into id order if needed, and build the postings arrays described
@@ -297,7 +277,7 @@ def _assemble_postings(ids, sizes, flat, max_incidences: int):
     import pyarrow.compute as pc
 
     tot = int(sizes.sum())
-    if tot == 0 or tot > max_incidences:
+    if tot == 0:
         return None
     if not isinstance(flat, (pa.Array, pa.ChunkedArray)):
         flat = pa.array(flat, type=pa.string())
@@ -529,7 +509,6 @@ def cross_contamination(
     text_col: str = "text",
     n: int = 3,
     min_shared: int = 8,
-    broadcast_max_shingles: int | None = 5_000_000,
 ) -> DataFrame:
     """Benchmark-decontamination pass: flag training docs sharing at least
     ``min_shared`` distinct word-n-gram shingles with ANY eval doc.
@@ -544,12 +523,11 @@ def cross_contamination(
     for the drop list.
 
     The "eval side is tiny" assumption is CHECKED, not assumed (ADVICE
-    r4): the eval side's postings are built only under
-    ``broadcast_max_shingles`` exploded rows (~12 bytes each); above it —
-    a huge eval suite or very long eval docs — the plan falls back to a
-    shuffle join and lets AQE pick the strategy instead of blowing the
-    driver heap on a forced broadcast.
-    ``broadcast_max_shingles=None`` skips the count and never broadcasts.
+    r4): one aggregate sums the eval texts' bytes first, and the eval side
+    is collected only when that sum fits the driver budget of
+    :mod:`.closure`; above it — a huge eval suite or very long eval docs —
+    the plan is one plain shuffle join and AQE picks the strategy,
+    instead of the driver heap taking the eval set.
 
     r6 plan change: the eligible path is now the postings-GEMM twin of
     :func:`ngram_jaccard_pairs` — eval postings broadcast, train side
@@ -559,20 +537,13 @@ def cross_contamination(
     ~|train shingles ∩ eval vocabulary| join product into a pair groupBy:
     12.8M rows / 22.4 s at sf1.0 → ~5 s).
     """
-    if broadcast_max_shingles is not None:
-        post = _try_text_postings(
-            evalset, id_col, text_col, n, broadcast_max_shingles
-        )
-        if post is not None:
-            return _cross_overlap_gemm(
-                train, id_col, text_col, n, post, min_shared
-            )
+    post = _try_text_postings(evalset, id_col, text_col, n)
+    if post is not None:
+        return _cross_overlap_gemm(train, id_col, text_col, n, post, min_shared)
     tsh = shingle_docs(train, id_col, text_col, n)
     esh = shingle_docs(evalset, id_col, text_col, n)
     ts = tsh.select(F.col("_id").alias("train_id"), F.explode("_sh").alias("_g"))
     es = esh.select(F.col("_id").alias("eval_id"), F.explode("_sh").alias("_g"))
-    if broadcast_max_shingles is not None and es.count() <= broadcast_max_shingles:
-        es = F.broadcast(es)
     # _sh is distinct per doc, so the join-count equals |shingles(train) ∩
     # shingles(eval)| exactly — same arithmetic-overlap trick as Jaccard
     return (
@@ -663,7 +634,7 @@ def _cross_overlap_gemm(
                 )
             )
 
-    stream = _spread(
+    stream = closure.spread(
         train.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
     )
     out = stream.mapInPandas(mapper, "train_id long, eval_id long, shared_shingles long")
@@ -693,8 +664,11 @@ def embedding_dup_pairs(
     Scale path (default): multi-table hyperplane-LSH candidates → exact
     cosine verify — at threshold 0.9 (angle <= 26°) a 6-plane table
     collides with p ~ (1-26/180)^6 ≈ 0.38, OR-amplified over 8 tables to
-    ~0.98 recall. ``exact=True`` switches to the O(n²) broadcast cross
-    join (used by the sf0.01 oracle gate where n=500).
+    ~0.98 recall. ``exact=True`` switches to the O(n²) block GEMM: the
+    corpus, which must fit the driver budget of :mod:`.closure` (else
+    ValueError — use ``exact=False``), is collected once and broadcast,
+    and a ``mapInPandas`` scores each streamed batch against it (used by
+    the sf0.01 oracle gate where n=500).
 
     ``buckets``: optional pre-computed (persisted) ``_multi_table_buckets``
     frame over the same corpus/params — shares the signature GEMM across
@@ -705,16 +679,17 @@ def embedding_dup_pairs(
 
     e = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
     if exact:
-        # calibration baseline: the corpus is bounded by contract, so it is
-        # collected once and closure-broadcast into a numpy-GEMM
-        # mapInPandas — each Arrow batch computes its block row of the
-        # similarity matrix (BLAS) and emits only pairs above threshold.
-        # Measured ~15x over the HOF-fold cross join at 2000x64.
+        # calibration baseline: the bounded corpus is collected once and
+        # closure-broadcast into a numpy-GEMM mapInPandas — each Arrow
+        # batch computes its block row of the similarity matrix (BLAS) and
+        # emits only pairs above threshold. Measured ~15x over the
+        # HOF-fold cross join at 2000x64.
         import numpy as np
 
-        rows = e.collect()
-        ids = np.array([r["_id"] for r in rows], dtype=np.int64)
-        M = np.array([list(r["_v"]) for r in rows], dtype=np.float64)
+        vecs = closure.vectors(e, "_id", "_v", dim)
+        if vecs is None:
+            raise ValueError("embedding_dup_pairs: corpus over closure.BUDGET_BYTES; use exact=False")
+        ids, M = vecs
         mn = np.linalg.norm(M, axis=1)
         thr = float(threshold)
 
@@ -722,8 +697,6 @@ def embedding_dup_pairs(
         mn_safe = np.where(mn == 0, np.inf, mn)
 
         def mapper(batches):
-            import pandas as pd
-
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
@@ -765,9 +738,9 @@ def embedding_dup_pairs(
                     )
                 )
 
-        # _spread: the sf1.0 embeddings table scans as 2 splits — without
+        # spread: the sf1.0 embeddings table scans as 2 splits — without
         # it the block-GEMM runs on 2 of 32 cores (t10: 31.9 s → 3.4 s)
-        return _spread(e).mapInPandas(mapper, "id_a long, id_b long, cos_sim double")
+        return closure.spread(e).mapInPandas(mapper, "id_a long, id_b long, cos_sim double")
     # candidate generation carries ONLY ids through the bucket join and
     # the dedup shuffle (the vectors would multiply shuffle bytes by
     # ~50x); vectors re-attach at the verify stage.
@@ -782,44 +755,8 @@ def embedding_dup_pairs(
         .select(F.col("_id").alias("id_a"), "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    # Verify strategy is size-aware. When the vector table is bounded
-    # (fits a closure broadcast, same contract as the exact path), the
-    # candidates are scored by a gathered row-wise einsum — no vector
-    # shuffle, no per-pair JVM fold (the fold was ~80% of emb_lsh's wall
-    # at weak thresholds where candidates are dense: 16.4 s → 3.9 s at
-    # 2000×64/0.35). Past the bound, vectors + staged norms re-attach via
-    # two narrow equi-joins and the JVM fold scores each pair — the
-    # unbounded-scale path (an attached-pairs pandas verify was tried and
-    # is 2-6x SLOWER there; see cosine()'s measured note). The bound check
-    # is one take() that doubles as the closure collect.
-    closure = similarity._try_vec_closure(e, "_id", "_v", 20_000_000 // max(dim, 1))
-    if closure is not None:
-        scored = similarity._gather_score(pairs, closure, closure, "id_a", "id_b")
-    else:
-        from .similarity import dot, norm
-
-        vecs = e.select("_id", F.col("_v").alias("_vec"), norm(F.col("_v")).alias("_nrm"))
-        cand = pairs.join(
-            vecs.select(
-                F.col("_id").alias("id_a"), F.col("_vec").alias("va"), F.col("_nrm").alias("na")
-            ),
-            "id_a",
-        ).join(
-            vecs.select(
-                F.col("_id").alias("id_b"), F.col("_vec").alias("vb"), F.col("_nrm").alias("nb")
-            ),
-            "id_b",
-        )
-        # norms staged per vector, not recomputed per candidate pair;
-        # nullif → zero-norm cosine is NULL and fails the threshold filter
-        scored = cand.select(
-            "id_a",
-            "id_b",
-            (
-                dot(F.col("va"), F.col("vb"))
-                / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0))
-            ).alias("cos_sim"),
-        )
+    side = (e, "_id", "_v")
+    scored = similarity._verify(pairs, "id_a", "id_b", side, side, dim)
     return scored.where(F.col("cos_sim") >= threshold)
 
 
@@ -976,7 +913,7 @@ def simhash_signatures(
     fixes), while the numpy bit-matrix computes identical signatures in
     one vectorized pass — parity asserted in tests/test_text_ops.py.
     """
-    hashed = _spread(docs.select(F.col(id_col).alias("_id"), F.col(text_col))).select(
+    hashed = closure.spread(docs.select(F.col(id_col).alias("_id"), F.col(text_col))).select(
         "_id",
         F.transform(TX.tokens(F.col(text_col)), lambda t: F.xxhash64(t)).alias("_h"),
     )

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..session import release
-from . import smallgraph
+from . import closure, smallgraph
 
 
 def bfs_reachable(
@@ -118,8 +118,8 @@ def _small_bfs(edges, sources, max_hops, src, dst, undirected, edges_distinct, c
     g = smallgraph.collect_edges(edges, src, dst, cap, edges_distinct, undirected)
     if g is None:
         return None
-    srcs = sources.select(F.col("node").cast("long")).limit(cap + 1).toArrow()
-    if srcs.num_rows > cap:
+    srcs = closure.collect_bounded(sources.select(F.col("node").cast("long")), cap)
+    if srcs is None:
         return None
     srcs = pc.unique(srcs.column(0))  # in Arrow: no shuffle job for a distinct
     nodes, a, b = g

@@ -11,6 +11,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from . import closure
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product in double (deterministic order)."""
@@ -62,10 +64,11 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors (self-matches excluded).
 
-    Scale: the (bounded, by contract) query side is collected once and
-    closure-broadcast into a numpy-GEMM ``mapInPandas`` over the streamed
-    corpus — each Arrow batch computes ``C @ Q.T`` (BLAS) and emits only
-    its per-query top-(k+8) survivors, so driver traffic is
+    Scale: the query side, which must fit the driver budget of
+    :mod:`.closure` (else ValueError — use :func:`lsh_topk`), is collected
+    once and closure-broadcast into a numpy-GEMM ``mapInPandas`` over the
+    streamed corpus — each Arrow batch computes ``C @ Q.T`` (BLAS) and
+    emits only its per-query top-(k+8) survivors, so driver traffic is
     O(|Q| * k * batches), then one tiny window picks the global top-k.
     Exact but O(|Q|x|C|) FLOPs; use :func:`lsh_topk` when both sides are
     large. Measured 15x over the HOF-fold cross join (the fold is
@@ -73,9 +76,12 @@ def brute_force_topk(
     """
     import numpy as np
 
-    qrows = queries.select(F.col(q_id), F.col(q_vec)).collect()
-    qids = np.array([r[0] for r in qrows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
+    # sized for the engine's 64-wide embeddings; wider vectors are
+    # refused by closure.vectors' matrix check
+    vecs = closure.vectors(queries, q_id, q_vec, 64)
+    if vecs is None:
+        raise ValueError("brute_force_topk: queries over closure.BUDGET_BYTES; use lsh_topk")
+    qids, Q = vecs
     qn = np.linalg.norm(Q, axis=1)
     qz = qn == 0  # zero-norm queries have no defined cosine
     keep = k + 8  # tie slack at the per-batch pruning boundary
@@ -109,16 +115,14 @@ def brute_force_topk(
                 out_s.extend(col[idx])
             yield pd.DataFrame({"q_id": out_q, "c_id": out_c, "cos_sim": out_s})
 
-    # _spread: small single-file corpora scan as ~2 splits — the GEMM
+    # spread: small single-file corpora scan as ~2 splits — the GEMM
     # stage would otherwise run on 2 cores (guide §6 / r6). Only worth its
     # repartition when the per-corpus-row work is non-trivial: the query
     # side is already collected, so gate on |Q| (at 50 queries the whole
     # GEMM is ~64M flops and the shuffle would cost more than it saves).
     c = corpus.select(F.col(c_id).alias("_cid"), F.col(c_vec).alias("_cv"))
-    if len(qrows) >= 512:
-        from .dedup import _spread
-
-        c = _spread(c)
+    if len(qids) >= 512:
+        c = closure.spread(c)
     scored = c.mapInPandas(mapper, "q_id long, c_id long, cos_sim double")
     scored = scored.where(~F.col("cos_sim").eqNullSafe(float("-inf")))
     w = W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("c_id").asc())
@@ -197,43 +201,48 @@ def _multi_table_buckets(
                 }
             )
 
-    from .dedup import _spread
-
-    src = _spread(df.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")))
+    src = closure.spread(df.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")))
     return src.mapInPandas(mapper, "_id long, _tbl int, _bucket long")
 
 
-def _closure_from_rows(rows):
-    """(id, vec) rows → closure triple (index dict, matrix, norms) with
-    NaN marking zero norms (→ NaN cos → filtered)."""
+def _verify(pairs: DataFrame, a_col: str, b_col: str, a: tuple, b: tuple, dim: int) -> DataFrame:
+    """Exact cosine (``cos_sim``) per (``a_col``, ``b_col``) id pair, the
+    ids resolved against the vector sides ``a`` and ``b``, each a
+    ``(df, id_col, vec_col)`` tuple (pass the same tuple twice for a
+    self-join: it is collected once).
+
+    Size-aware. When both sides fit the driver budget, one bounded collect
+    per side (:func:`.closure.vectors`) doubles as the closure, and the
+    pairs are scored by a gathered row-wise einsum per Arrow batch — no
+    vector shuffle, no per-pair JVM fold (the fold was ~80% of emb_lsh's
+    wall at weak thresholds where candidates are dense: 16.4 s → 3.9 s at
+    2000×64/0.35). Past the budget, vectors + staged norms re-attach via
+    two narrow equi-joins and the JVM fold scores each pair — the
+    unbounded-scale path (an attached-pairs pandas verify was tried and is
+    2-6x SLOWER there; see :func:`cosine`'s measured note). Zero-norm
+    vectors score NULL (fold) or NaN (gather); callers filter both."""
     import numpy as np
 
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    M = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    nrm = np.linalg.norm(M, axis=1)
-    nrm = np.where(nrm == 0, np.nan, nrm)
-    return {int(i): j for j, i in enumerate(ids)}, M, nrm
+    va = closure.vectors(*a, dim)
+    vb = va if b is a or va is None else closure.vectors(*b, dim)
+    if vb is None:
 
+        def attach(df, id_col, vec_col, col):
+            v = F.col(vec_col)
+            return df.select(F.col(id_col).alias(col), v.alias(col + "_v"), norm(v).alias(col + "_n"))
 
-def _try_vec_closure(vectors: DataFrame, id_col: str, vec_col: str, max_rows: int):
-    """ONE pass: take(max_rows+1). Returns the closure triple if the table
-    fits the bound, else None — the rows double as the collect, so the
-    size check costs no extra lineage evaluation (the count-then-collect
-    shape re-executed unpersisted upstream plans twice)."""
-    rows = vectors.select(F.col(id_col), F.col(vec_col)).take(max_rows + 1)
-    if len(rows) > max_rows:
-        return None
-    return _closure_from_rows(rows)
+        cand = pairs.join(attach(*a, a_col), a_col).join(attach(*b, b_col), b_col)
+        cos = dot(F.col(a_col + "_v"), F.col(b_col + "_v")) / F.nullif(
+            F.col(a_col + "_n") * F.col(b_col + "_n"), F.lit(0.0)
+        )
+        return cand.select(a_col, b_col, cos.alias("cos_sim"))
 
+    def indexed(vecs):
+        ids, M = vecs
+        nrm = np.linalg.norm(M, axis=1)
+        return dict(zip(ids.tolist(), range(len(ids)))), M, np.where(nrm == 0, np.nan, nrm)
 
-def _gather_score(pairs, closure_a, closure_b, a_col, b_col, out_col="cos_sim"):
-    """Score (a, b) id pairs with exact cosine, gathering rows of the two
-    closure-broadcast vector tables per Arrow batch (row-wise einsum).
-    Only id pairs stream through Python; zero-norm vectors score NULL."""
-    import numpy as np
-
-    index_a, Ma, na = closure_a
-    index_b, Mb, nb = closure_b
+    (index_a, Ma, na), (index_b, Mb, nb) = indexed(va), indexed(vb)
 
     def mapper(batches):
         import pandas as pd
@@ -253,9 +262,9 @@ def _gather_score(pairs, closure_a, closure_b, a_col, b_col, out_col="cos_sim"):
             ia = ma.to_numpy(dtype=np.int64)
             ib = mb.to_numpy(dtype=np.int64)
             s = np.einsum("ij,ij->i", Ma[ia], Mb[ib]) / (na[ia] * nb[ib])
-            yield pd.DataFrame({a_col: pdf[a_col], b_col: pdf[b_col], out_col: s})
+            yield pd.DataFrame({a_col: pdf[a_col], b_col: pdf[b_col], "cos_sim": s})
 
-    return pairs.mapInPandas(mapper, f"{a_col} long, {b_col} long, {out_col} double")
+    return pairs.mapInPandas(mapper, f"{a_col} long, {b_col} long, cos_sim double")
 
 
 def lsh_topk(
@@ -318,36 +327,9 @@ def _rank_candidates(
     c_vec: str,
     dim: int,
 ) -> DataFrame:
-    """Shared candidate-verify + top-k rank for the ANN paths (LSH, IVF).
-
-    Size-aware verify (same policy as embedding_dup_pairs): bounded sides →
-    closure-gathered row-wise einsum over id pairs; unbounded → re-attach
-    vectors via equi-joins and score with the JVM fold. The bound check is
-    a single take() per side that doubles as the closure collect — no
-    count-then-collect double evaluation of unpersisted lineages."""
-    max_rows = 20_000_000 // max(dim, 1)  # ~160 MB of float64 per closure
-    qd = queries.select(F.col(q_id).alias("_id"), F.col(q_vec).alias("_v"))
-    cd = corpus.select(F.col(c_id).alias("_id"), F.col(c_vec).alias("_v"))
-    ca = _try_vec_closure(qd, "_id", "_v", max_rows)
-    cb = _try_vec_closure(cd, "_id", "_v", max_rows) if ca is not None else None
-    if ca is not None and cb is not None:
-        scored = _gather_score(pairs, ca, cb, "q_id", "c_id")
-    else:
-        qv = queries.select(
-            F.col(q_id).alias("q_id"), F.col(q_vec).alias("q_vec"), norm(F.col(q_vec)).alias("q_nrm")
-        )
-        cv = corpus.select(
-            F.col(c_id).alias("c_id"), F.col(c_vec).alias("c_vec"), norm(F.col(c_vec)).alias("c_nrm")
-        )
-        cand = pairs.join(qv, "q_id").join(cv, "c_id")
-        scored = cand.select(
-            "q_id",
-            "c_id",
-            (
-                dot(F.col("q_vec"), F.col("c_vec"))
-                / F.nullif(F.col("q_nrm") * F.col("c_nrm"), F.lit(0.0))
-            ).alias("cos_sim"),
-        )
+    """Shared candidate-verify (:func:`_verify`) + top-k rank for the ANN
+    paths (LSH, IVF)."""
+    scored = _verify(pairs, "q_id", "c_id", (queries, q_id, q_vec), (corpus, c_id, c_vec), dim)
     # zero-norm scores surface as NULL (JVM nullif; Arrow maps pandas NaN
     # to null too) or NaN — drop both so they can never rank
     scored = scored.where(F.col("cos_sim").isNotNull() & ~F.isnan("cos_sim"))

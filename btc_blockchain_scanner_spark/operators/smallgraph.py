@@ -7,14 +7,17 @@ The reference resolves wallets with a union-find held in memory on one box
 distributed loop is pure fixed cost: several jobs and checkpoints per
 round. So the operators pick the physical path by size:
 
-* :func:`collect_edges` — ONE bounded ``limit(cap+1).toArrow()`` job over the
-  edge list, node ids compacted to ``0..n-1`` by a vectorized sort
-  (``np.unique``), not a Python dict; None when the graph is over the cap;
+* :func:`collect_edges` — ONE bounded Arrow collect
+  (:func:`.closure.collect_bounded`) of the edge list, node ids compacted
+  to ``0..n-1`` by a vectorized sort (``np.unique``), not a Python dict;
+  None when the graph is over the cap;
 * :func:`components` — min-label hooking plus pointer jumping;
 * :func:`bfs` — CSR adjacency and vectorized frontier expansion.
 
-Over the cap, ``cc.connected_components`` and ``graph.bfs_reachable`` run
-their distributed loops; parity tests pin both paths to each other.
+The cap defaults to :data:`SMALL_GRAPH_EDGES`, the driver budget of
+operators/closure.py counted in edges. Over the cap,
+``cc.connected_components`` and ``graph.bfs_reachable`` run their
+distributed loops; parity tests pin both paths to each other.
 """
 
 from __future__ import annotations
@@ -23,9 +26,11 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Driver budget of the small path, shared by CC and BFS: deduplicated
-# undirected edges, i.e. 4 M int64 pairs = 64 MiB collected.
-SMALL_GRAPH_EDGES = 4_000_000
+from . import closure
+
+# Default edge cap of the small path, shared by CC and BFS: the closure
+# budget in deduplicated undirected edges (two int64 ends each).
+SMALL_GRAPH_EDGES = closure.BUDGET_BYTES // 16
 
 
 def collect_edges(
@@ -51,8 +56,8 @@ def collect_edges(
     )
     if not edges_distinct:
         e = e.distinct()
-    t = e.limit(cap + 1).toArrow()
-    if t.num_rows > cap:
+    t = closure.collect_bounded(e, cap)
+    if t is None:
         return None
     ends = np.concatenate([t.column("a").to_numpy(), t.column("b").to_numpy()])
     nodes, idx = np.unique(ends, return_inverse=True)

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions import text as TX
 from ..operators import dedup, similarity
+from ..session import overlap
 from ..sources.tables import load
 from .registry import query
 
@@ -295,15 +296,12 @@ def t06_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     #
     # r6 scheduling: every family is a short independent job on a 2000-doc
     # subset, so the query's wall was ~13 sequential job latencies
-    # (~0.5-4 s each). Materialization now OVERLAPS independent jobs from
-    # a small thread pool (guide §2.6 — actions are only sequential
-    # because the driver calls them sequentially); each family keeps its
-    # OWN action, so this is NOT the one-big-DAG collect that measured
-    # ~35% slower in r3 (worker churn inside a single DAG) — the r6 A/B:
-    # 28.6 s sequential → ~13 s overlapped at sf1.0. Two waves keep the
-    # shared frames materialized before their dependents probe them.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # (~0.5-4 s each). Materialization now OVERLAPS independent jobs
+    # (session.overlap; guide §2.6 — actions are only sequential because
+    # the driver calls them sequentially); each family keeps its OWN
+    # action, so this is NOT the one-big-DAG collect that measured ~35%
+    # slower in r3 (worker churn inside a single DAG) — the r6 A/B:
+    # 28.6 s sequential → ~13 s overlapped at sf1.0.
     sh3 = dedup.shingle_docs(docs_s, n=3).persist()
     sigs = dedup.simhash_signatures(docs_s).persist()
     eb = similarity._multi_table_buckets(
@@ -315,18 +313,18 @@ def t06_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every pair set is consumed twice (its own count + the match semi-join)
     # and some are expensive O(n²) baselines — persist them all; everything
     # is unpersisted after the 6 result rows materialize below. Builders
-    # run INSIDE the pool: some construct eagerly (the GEMM jacc path
+    # run INSIDE the overlap: some construct eagerly (the GEMM jacc path
     # collects its closure at build time).
     def _eager(df):
         df.count()
         return df
 
-    def _after(fut, build):
-        # dependency chain: materialize the SHARED frame first, then build
-        # the dependent family — the frame's blocks are probed, never
-        # concurrently recomputed
-        fut.result()
-        return build()
+    def _then(frame, *builds):
+        # materialize the SHARED frame first, then its dependent families
+        # (overlapped): the frame's blocks are probed, never concurrently
+        # recomputed, and no family waits on a frame it does not read
+        _eager(frame)
+        return overlap(*builds)
 
     # 12 tables x 3 planes: P(candidate) = 1-(1-p^3)^12 >= 0.94 even at
     # the weak top-1 cosines of this corpus (~0.3-0.5 → p ~0.6) — 0.96.
@@ -337,70 +335,59 @@ def t06_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # on a genuinely clustered corpus 4 probes already exceed 0.95,
     # tests/test_text_ops.py::test_ivf_recall_on_clustered_corpus; LSH is
     # the data-oblivious alternative for corpora like this one).
-    #
-    # r6 scheduling, refined: instead of two barrier waves (dependents
-    # waited for ALL of wave 1 — including the O(n²) exact baselines no
-    # family depends on), each dependent chains on the ONE shared-frame
-    # future it needs.
-    shared = {"sh3": sh3, "sigs": sigs, "eb": eb}
-    # family → (the shared frame it probes, or None; its builder)
-    families = {
-        "winnow": (None, lambda: _eager(
+    (
+        winnow, emb_exact, top_exact, top_ivf,
+        (jacc_exact, minhash), (sim_exact, sim_band), (emb_lsh, top_lsh),
+    ) = overlap(
+        lambda: _eager(
             dedup.winnow_dup_pairs(docs_s, k=5, window=4, min_shared=3).persist()
-        )),
-        "emb_exact": (None, lambda: _eager(
+        ),
+        lambda: _eager(
             dedup.embedding_dup_pairs(emb_s, threshold=0.35, exact=True).persist()
-        )),
-        "top_exact": (None, lambda: _eager(
+        ),
+        lambda: _eager(
             similarity.brute_force_topk(q, emb_s, k=1).select("q_id", "c_id").persist()
-        )),
-        "top_ivf": (None, lambda: _eager(
+        ),
+        lambda: _eager(
             similarity.ivf_topk(q, emb_s, k=1, n_centroids=16, n_probe=10)
             .select("q_id", "c_id").persist()
-        )),
-        "jacc_exact": ("sh3", lambda: _eager(
-            dedup.ngram_jaccard_pairs(docs_s, n=3, threshold=0.5, sh=sh3)
-            .select("id_a", "id_b").persist()
-        )),
-        "minhash": ("sh3", lambda: _eager(
-            dedup.minhash_lsh_pairs(
-                docs_s, n=3, num_perm=32, num_bands=8, threshold=0.5, sh=sh3
-            ).persist()
-        )),
-        "sim_exact": ("sigs", lambda: _eager(
-            dedup.simhash_pairs_exact(docs_s, max_hamming=3, sigs=sigs).persist()
-        )),
-        "sim_band": ("sigs", lambda: _eager(
-            dedup.simhash_dup_pairs(docs_s, max_hamming=3, sigs=sigs).persist()
-        )),
-        "emb_lsh": ("eb", lambda: _eager(
-            dedup.embedding_dup_pairs(
-                emb_s, threshold=0.35, num_tables=12, planes_per_table=3, buckets=eb
-            ).persist()
-        )),
-        "top_lsh": ("eb", lambda: _eager(
-            similarity.lsh_topk(
-                q, emb_s, k=1, num_tables=12, planes_per_table=3,
-                corpus_buckets=eb, query_buckets=eb.where(F.col("_id") < 50),
-            ).select("q_id", "c_id").persist()
-        )),
-    }
-    # One worker per task, sized from the submissions: every task holds a
-    # worker at once, so a dependent blocked in `_after` cannot starve the
-    # shared-frame task it waits on.
-    with ThreadPoolExecutor(max_workers=len(shared) + len(families)) as pool:
-        ready = {name: pool.submit(_eager, df) for name, df in shared.items()}
-        futs = {
-            name: pool.submit(_after, ready[dep], build) if dep else pool.submit(build)
-            for name, (dep, build) in families.items()
-        }
-        for f in ready.values():
-            f.result()
-        fams = {name: f.result() for name, f in futs.items()}
-    jacc_exact, minhash, winnow = fams["jacc_exact"], fams["minhash"], fams["winnow"]
-    sim_exact, sim_band = fams["sim_exact"], fams["sim_band"]
-    emb_exact, emb_lsh = fams["emb_exact"], fams["emb_lsh"]
-    top_exact, top_lsh, top_ivf = fams["top_exact"], fams["top_lsh"], fams["top_ivf"]
+        ),
+        lambda: _then(
+            sh3,
+            lambda: _eager(
+                dedup.ngram_jaccard_pairs(docs_s, n=3, threshold=0.5, sh=sh3)
+                .select("id_a", "id_b").persist()
+            ),
+            lambda: _eager(
+                dedup.minhash_lsh_pairs(
+                    docs_s, n=3, num_perm=32, num_bands=8, threshold=0.5, sh=sh3
+                ).persist()
+            ),
+        ),
+        lambda: _then(
+            sigs,
+            lambda: _eager(
+                dedup.simhash_pairs_exact(docs_s, max_hamming=3, sigs=sigs).persist()
+            ),
+            lambda: _eager(
+                dedup.simhash_dup_pairs(docs_s, max_hamming=3, sigs=sigs).persist()
+            ),
+        ),
+        lambda: _then(
+            eb,
+            lambda: _eager(
+                dedup.embedding_dup_pairs(
+                    emb_s, threshold=0.35, num_tables=12, planes_per_table=3, buckets=eb
+                ).persist()
+            ),
+            lambda: _eager(
+                similarity.lsh_topk(
+                    q, emb_s, k=1, num_tables=12, planes_per_table=3,
+                    corpus_buckets=eb, query_buckets=eb.where(F.col("_id") < 50),
+                ).select("q_id", "c_id").persist()
+            ),
+        ),
+    )
 
     pk = ["id_a", "id_b"]
     out = (

@@ -9,6 +9,7 @@ else (pipelining, backpressure, spill) is the engine's job.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -104,6 +105,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def overlap(*thunks):
+    """Run independent pieces of work concurrently and return their results
+    in argument order (Spark actions are only sequential because the driver
+    calls them sequentially; each keeps its own jobs).
+
+    The pool has one thread per thunk and every thunk runs to completion.
+    Only then is the first failure (in argument order) re-raised, with each
+    later failure chained as the context of the one before — so a failing
+    write surfaces even when another thunk raised too."""
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        for err, later in zip(errors, errors[1:]):
+            err.__context__, err.__suppress_context__ = later, False
+        raise errors[0]
+    return [f.result() for f in futures]
 
 
 def release(frame: DataFrame) -> None:

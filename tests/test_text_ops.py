@@ -4,7 +4,7 @@ Jaccard, SimHash, ANN recall vs brute force."""
 import pytest
 from pyspark.sql import functions as F
 
-from btc_blockchain_scanner_spark.operators import dedup, similarity
+from btc_blockchain_scanner_spark.operators import closure, dedup, similarity
 from btc_blockchain_scanner_spark.sources.tables import load
 
 
@@ -114,32 +114,54 @@ def test_simhash_finds_near_dups(spark):
     assert (1, 4) not in pairs
 
 
-def test_zero_norm_vectors_never_rank(spark):
+ZERO_NORM_ROWS = [
+    (0, [1.0, 0.0, 0.0, 0.0]),
+    (1, [0.9, 0.1, 0.0, 0.0]),
+    (2, [0.0, 0.0, 0.0, 0.0]),  # zero-norm
+    (3, [0.0, 1.0, 0.0, 0.0]),
+]
+
+
+def test_zero_norm_vectors_never_rank(spark, monkeypatch):
     """A zero-norm vector has undefined cosine; it must neither appear as a
     neighbor nor pull in dup pairs (regression: NaN sorts above every double
     in Spark desc windows, so an unguarded 0/0 made zero vectors everyone's
-    top-1)."""
+    top-1). The LSH verifies run at the default budget (gathered einsum)
+    and at budget 0 (JVM fold), and must agree."""
     from btc_blockchain_scanner_spark.operators.dedup import embedding_dup_pairs
     from btc_blockchain_scanner_spark.operators.similarity import brute_force_topk, lsh_topk
 
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0, 0.0]),
-        (2, [0.0, 0.0, 0.0, 0.0]),  # zero-norm
-        (3, [0.0, 1.0, 0.0, 0.0]),
-    ]
-    e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    e = spark.createDataFrame(ZERO_NORM_ROWS, "vec_id long, embedding array<float>")
     top = brute_force_topk(e, e, k=1).collect()
     assert all(r.c_id != 2 for r in top), "zero vector ranked as a neighbor"
     assert all(r.q_id != 2 for r in top), "zero query produced a neighbor"
-    topl = lsh_topk(e, e, k=1, num_tables=4, planes_per_table=2, dim=4).collect()
-    assert all(r.c_id != 2 and r.q_id != 2 for r in topl)
-    for exact in (True, False):
+    pairs = embedding_dup_pairs(e, threshold=0.5, exact=True, dim=4).collect()
+    assert {(r.id_a, r.id_b) for r in pairs} == {(0, 1)}, "exact"
+    verified = []
+    for budget in (closure.BUDGET_BYTES, 0):
+        monkeypatch.setattr(closure, "BUDGET_BYTES", budget)
+        topl = lsh_topk(e, e, k=1, num_tables=4, planes_per_table=2, dim=4).collect()
+        assert all(r.c_id != 2 and r.q_id != 2 for r in topl), budget
         pairs = embedding_dup_pairs(
-            e, threshold=0.5, exact=exact, num_tables=4, planes_per_table=2, dim=4
+            e, threshold=0.5, num_tables=4, planes_per_table=2, dim=4
         ).collect()
-        assert all(2 not in (r.id_a, r.id_b) for r in pairs), f"exact={exact}"
-        assert {(r.id_a, r.id_b) for r in pairs} == {(0, 1)}, f"exact={exact}"
+        assert {(r.id_a, r.id_b) for r in pairs} == {(0, 1)}, budget
+        verified.append((
+            {(r.q_id, r.c_id, round(r.cos_sim, 9)) for r in topl},
+            {(r.id_a, r.id_b, round(r.cos_sim, 9)) for r in pairs},
+        ))
+    assert verified[0] == verified[1]
+
+
+def test_exact_vector_kernels_refuse_over_budget(spark, monkeypatch):
+    """The exact vector kernels collect one side onto the driver; over the
+    closure budget they raise instead of collecting it."""
+    e = spark.createDataFrame(ZERO_NORM_ROWS, "vec_id long, embedding array<float>")
+    monkeypatch.setattr(closure, "BUDGET_BYTES", 0)
+    with pytest.raises(ValueError, match="lsh_topk"):
+        similarity.brute_force_topk(e, e, k=1)
+    with pytest.raises(ValueError, match="exact=False"):
+        dedup.embedding_dup_pairs(e, exact=True, dim=4)
 
 
 def test_ivf_recall_on_clustered_corpus(spark):
@@ -222,10 +244,11 @@ def test_cross_contamination_matches_bruteforce(spark, sf_dir):
     assert got, "fixture should contain at least one contaminated pair"
 
 
-def test_cross_contamination_broadcast_guard(spark, sf_dir):
-    """ADVICE r4: the eval-side broadcast hint must be size-GUARDED. With
-    the threshold forced to 0 the plan falls back to a shuffle join and
-    the result is identical; None skips the sizing count entirely."""
+def test_cross_contamination_broadcast_guard(spark, sf_dir, monkeypatch):
+    """ADVICE r4: the eval side is collected only after its size is
+    checked. With the budget at 0 nothing is collected through Arrow (the
+    eval side is never pulled onto the driver) and the shuffle-join
+    fallback gives the identical result."""
     docs = load(spark, sf_dir, "documents")
     train = docs.where(F.col("doc_id") >= 10)
     evalset = docs.where(F.col("doc_id") < 10)
@@ -233,17 +256,20 @@ def test_cross_contamination_broadcast_guard(spark, sf_dir):
         (r.train_id, r.eval_id, r.shared_shingles)
         for r in dedup.cross_contamination(train, evalset, n=3, min_shared=4).collect()
     }
-    for limit in (0, None):
-        got = {
-            (r.train_id, r.eval_id, r.shared_shingles)
-            for r in dedup.cross_contamination(
-                train, evalset, n=3, min_shared=4, broadcast_max_shingles=limit
-            ).collect()
-        }
-        assert got == want
+
+    def refuse(self):
+        raise AssertionError("toArrow ran over the budget")
+
+    monkeypatch.setattr(closure, "BUDGET_BYTES", 0)
+    monkeypatch.setattr(type(docs), "toArrow", refuse)
+    got = {
+        (r.train_id, r.eval_id, r.shared_shingles)
+        for r in dedup.cross_contamination(train, evalset, n=3, min_shared=4).collect()
+    }
+    assert got == want
 
 
-def test_gemm_and_join_paths_agree(spark):
+def test_gemm_and_join_paths_agree(spark, monkeypatch):
     """r6: ngram_jaccard_pairs grew a postings-GEMM plan (closure-broadcast
     numpy counting) next to the shared-shingle join plan. Same contract,
     two physical plans — pin exact pair-set AND value parity on a corpus
@@ -262,20 +288,21 @@ def test_gemm_and_join_paths_agree(spark):
                 d, threshold=0.2, max_shingle_freq=cap
             ).collect()
         }
-        join = {
-            (r.id_a, r.id_b, round(r.jacc, 12))
-            for r in dedup.ngram_jaccard_pairs(
-                d, threshold=0.2, max_shingle_freq=cap, gemm_max_incidences=0
-            ).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(closure, "BUDGET_BYTES", 0)
+            join = {
+                (r.id_a, r.id_b, round(r.jacc, 12))
+                for r in dedup.ngram_jaccard_pairs(
+                    d, threshold=0.2, max_shingle_freq=cap
+                ).collect()
+            }
         assert gemm == join, (cap, gemm ^ join)
         assert gemm  # non-vacuous: the fixture must actually produce pairs
 
 
-def test_cross_contamination_gemm_and_join_agree(spark):
+def test_cross_contamination_gemm_and_join_agree(spark, monkeypatch):
     """Same two-plan parity pin for cross_contamination: the eval-postings
-    GEMM stream (broadcast_max_shingles generous) vs the exploded shingle
-    join (broadcast_max_shingles=None skips the GEMM eligibility)."""
+    GEMM stream (default budget) vs the exploded shingle join (budget 0)."""
     boiler = "shared benchmark sentence fragment appearing in train and eval splits"
     rows = [(i, f"{boiler} filler {i % 5} more filler tokens {i % 2}") for i in range(40)]
     d = spark.createDataFrame(rows, "doc_id long, text string")
@@ -285,11 +312,10 @@ def test_cross_contamination_gemm_and_join_agree(spark):
         (r.train_id, r.eval_id, r.shared_shingles)
         for r in dedup.cross_contamination(train, evalset, n=3, min_shared=3).collect()
     }
+    monkeypatch.setattr(closure, "BUDGET_BYTES", 0)
     join = {
         (r.train_id, r.eval_id, r.shared_shingles)
-        for r in dedup.cross_contamination(
-            train, evalset, n=3, min_shared=3, broadcast_max_shingles=None
-        ).collect()
+        for r in dedup.cross_contamination(train, evalset, n=3, min_shared=3).collect()
     }
     assert gemm == join
     assert gemm  # non-vacuous
