@@ -16,9 +16,10 @@ from functools import lru_cache
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import text as TX
-from . import closure, lsh
+from . import closure, cooccur, lsh
 
 
 # -- exact -------------------------------------------------------------------
@@ -79,20 +80,22 @@ def ngram_jaccard_pairs(
 
     Two physically different plans, one contract (parity pytest-pinned):
 
-    * **Postings-GEMM path** (taken when the collected side — the raw
-      texts, or the ``sh`` shingle strings — fits the driver budget of
-      :mod:`.closure`): it is collected ONCE through Arrow, factorized
-      to dense column codes on the driver (string-exact — no hashing, no
-      collision modes), and the postings closure (~12 bytes/incidence +
-      ~20/doc) is broadcast; tasks then
-      count their doc block's overlaps against the whole corpus with
-      cache-resident numpy gathers — the §8-guide "decide with small
-      rows" move, and the same size-guarded closure-broadcast pattern as
-      the embedding exact path. ZERO shuffles, one pass over the corpus;
-      the 10^8 co-incidence touches that previously went through a
-      self-join + 120M-group hash aggregate (296 s at sf1.0) stay in
-      numpy blocks (~4 s). Only pairs at or above the threshold leave
-      Python.
+    * **Postings-GEMM path** (taken when the ids are integral and the
+      collected side — the raw texts, or the ``sh`` shingle strings —
+      fits the driver budget of :mod:`.closure`): it is collected ONCE
+      through Arrow, factorized to dense column codes on the driver
+      (string-exact — no hashing, no collision modes), and counted by
+      the one co-occurrence kernel, :func:`.cooccur.pairs`, with
+      cache-resident numpy gathers. Where that kernel runs follows its
+      pair touches (Σ df·(df−1)/2 over the non-hub shingles, known on
+      the driver without a job): within the budget at 8 bytes a touch
+      it runs in the driver process (sf0.1: 1.3 M touches); above it
+      the postings closure (~12 bytes/incidence + ~20/doc) is broadcast
+      and tasks count their doc blocks' overlaps against the whole
+      corpus. ZERO shuffles, one pass over the corpus; the 10^8
+      co-incidence touches of sf1.0 that previously went through a
+      self-join + 120M-group hash aggregate (296 s) stay in numpy blocks
+      (~4 s). Only pairs at or above the threshold leave Python.
     * **Shared-shingle join path** (fallback above the budget or for
       non-integral ids): explode → self-join on the shingle → arithmetic
       pair count, never a full cross join — unbounded-scale, one shuffle
@@ -120,9 +123,14 @@ def ngram_jaccard_pairs(
         else _try_shingle_postings(sh)
     )
     if post is not None:
-        return _jaccard_pairs_gemm(
-            docs.sparkSession, id_type, post, threshold, max_shingle_freq
+        out = cooccur.pairs(
+            docs.sparkSession, post, threshold, max_col_freq=max_shingle_freq
         )
+        return out.select(
+            F.col("id_a").cast(id_type).alias("id_a"),
+            F.col("id_b").cast(id_type).alias("id_b"),
+            _jacc().alias("jacc"),
+        ).where(F.col("jacc") >= threshold)
     if sh is None:
         # the join path consumes the shingle frame several times — persist it
         sh = shingle_docs(docs, id_col, text_col, n).persist()
@@ -201,8 +209,12 @@ def _jaccard_pairs_join(
                 + F.size(F.array_intersect(F.coalesce("_ha", empty), F.coalesce("_hb", empty))),
             )
         )
-    jacc = F.col("_c").cast("double") / (F.col("_na") + F.col("_nb") - F.col("_c")).cast("double")
-    return cand.select("id_a", "id_b", jacc.alias("jacc")).where(F.col("jacc") >= threshold)
+    return cand.select("id_a", "id_b", _jacc().alias("jacc")).where(F.col("jacc") >= threshold)
+
+
+def _jacc() -> Column:
+    """Jaccard from a pair's shared count ``_c`` and set sizes."""
+    return F.col("_c").cast("double") / (F.col("_na") + F.col("_nb") - F.col("_c")).cast("double")
 
 
 def _try_text_postings(docs: DataFrame, id_col: str, text_col: str, n: int):
@@ -214,9 +226,12 @@ def _try_text_postings(docs: DataFrame, id_col: str, text_col: str, n: int):
     path entirely: the corpus must be collected anyway, and 50k docs
     shingle in ~2 s flat on the driver vs a 3-5 s Python-worker stage.
     Returns the postings dict, or None over budget or for non-integral
-    ids (then the caller must use the distributed string join)."""
+    ids (decided from the schema, before any job; then the caller must
+    use the distributed string join)."""
     import numpy as np
 
+    if not isinstance(docs.schema[id_col].dataType, T.IntegralType):
+        return None
     tbl = closure.collect_bounded(
         docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t")),
         closure.BUDGET_BYTES,
@@ -224,10 +239,7 @@ def _try_text_postings(docs: DataFrame, id_col: str, text_col: str, n: int):
     )
     if tbl is None:
         return None
-    try:
-        ids = np.asarray(tbl.column("_id"), dtype=np.int64)
-    except (ValueError, TypeError, OverflowError):
-        return None  # non-integral ids — join path handles them
+    ids = np.asarray(tbl.column("_id"), dtype=np.int64)
     texts = tbl.column("_t").to_pylist()
     flat: list[str] = []
     sizes = np.empty(len(texts), dtype=np.int64)
@@ -238,7 +250,7 @@ def _try_text_postings(docs: DataFrame, id_col: str, text_col: str, n: int):
     keep = sizes > 0  # mirror shingle_docs' size(_sh) > 0 filter
     if not keep.all():
         ids, sizes = ids[keep], sizes[keep]
-    return _assemble_postings(ids, sizes, flat)
+    return cooccur.postings(ids, sizes, flat)
 
 
 def _try_shingle_postings(sh: DataFrame):
@@ -248,6 +260,8 @@ def _try_shingle_postings(sh: DataFrame):
     :func:`_try_text_postings`."""
     import numpy as np
 
+    if not isinstance(sh.schema["_id"].dataType, T.IntegralType):
+        return None
     tbl = closure.collect_bounded(
         sh.select("_id", "_sh"),
         closure.BUDGET_BYTES,
@@ -255,251 +269,12 @@ def _try_shingle_postings(sh: DataFrame):
     )
     if tbl is None:
         return None
-    try:
-        ids = np.asarray(tbl.column("_id"), dtype=np.int64)
-    except (ValueError, TypeError, OverflowError):
-        return None  # non-integral ids — join path handles them
+    ids = np.asarray(tbl.column("_id"), dtype=np.int64)
     import pyarrow.compute as pc
 
     scol = tbl.column("_sh").combine_chunks()
     sizes = np.asarray(pc.list_value_length(scol), dtype=np.int64)
-    return _assemble_postings(ids, sizes, scol.flatten())
-
-
-def _assemble_postings(ids, sizes, flat):
-    """Common tail of the postings builders: dictionary-encode the flat
-    shingle stream (string-exact dense column codes, Arrow C++), reorder
-    rows into id order if needed, and build the postings arrays described
-    in :func:`ngram_jaccard_pairs`. ``flat`` is a pyarrow string Array or
-    a Python list of strings in row-major order."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    tot = int(sizes.sum())
-    if tot == 0:
-        return None
-    if not isinstance(flat, (pa.Array, pa.ChunkedArray)):
-        flat = pa.array(flat, type=pa.string())
-    enc = pc.dictionary_encode(flat)
-    if isinstance(enc, pa.ChunkedArray):
-        enc = enc.combine_chunks()
-    codes_raw = np.asarray(enc.indices, dtype=np.int32)
-    vocab = enc.dictionary.to_numpy(zero_copy_only=False)
-    if len(ids) > 1 and not bool(np.all(ids[:-1] < ids[1:])):
-        # regather rows in id order so doc position order == id order
-        # (skipped on the common already-sorted layout)
-        order = np.argsort(ids, kind="stable")
-        offsets = np.zeros(len(sizes) + 1, dtype=np.int64)
-        np.cumsum(sizes, out=offsets[1:])
-        lens = sizes[order]
-        starts = offsets[:-1][order]
-        csum = np.cumsum(lens)
-        idx = np.repeat(starts, lens) + (
-            np.arange(tot, dtype=np.int64) - np.repeat(csum - lens, lens)
-        )
-        codes_raw = codes_raw[idx]
-        ids, sizes = ids[order], lens
-    inc_codes = codes_raw.astype(np.int32, copy=False)
-    sizes = sizes.astype(np.int32)
-    n_docs = len(ids)
-    row_ptr = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(sizes, out=row_ptr[1:])
-    doc_of_inc = np.repeat(np.arange(n_docs, dtype=np.int64), sizes)
-    porder = np.argsort(inc_codes, kind="stable")
-    post_docs = doc_of_inc[porder].astype(np.int32)
-    inc_pos = np.empty(tot, dtype=np.int32)
-    inc_pos[porder] = np.arange(tot, dtype=np.int32)
-    col_df = np.bincount(inc_codes, minlength=len(vocab))
-    post_ptr = np.zeros(len(vocab) + 1, dtype=np.int64)
-    np.cumsum(col_df, out=post_ptr[1:])
-    return {
-        "ids": ids,
-        "sizes": sizes,
-        "row_ptr": row_ptr,
-        "inc_codes": inc_codes,
-        "inc_pos": inc_pos,
-        "post_docs": post_docs,
-        "post_ptr": post_ptr,
-        "col_df": col_df.astype(np.int32),
-        "vocab": np.asarray(vocab, dtype=object),
-        "n_docs": n_docs,
-    }
-
-
-def _count_sorted(keys):
-    """(unique_keys, counts) via in-place sort + run-length — sequential
-    memory access; np.bincount over the full keyspace thrashed ~100 MB of
-    random writes per block under 32-way task contention."""
-    import numpy as np
-
-    keys.sort()
-    change = np.empty(len(keys), dtype=bool)
-    change[0] = True
-    np.not_equal(keys[1:], keys[:-1], out=change[1:])
-    idx = np.flatnonzero(change)
-    counts = np.diff(np.append(idx, len(keys)))
-    return keys[idx], counts
-
-
-def _jaccard_pairs_gemm(
-    spark, id_type: str, post: dict, threshold: float, max_shingle_freq: int | None
-) -> DataFrame:
-    """Postings-GEMM pair counting (see :func:`ngram_jaccard_pairs`).
-
-    The whole corpus lives in the broadcast closure, so the "stream" side
-    is just ``spark.range(n_blocks)``: each task slices its doc block's
-    row-major incidences out of the broadcast, gathers postings of
-    partners with a LARGER doc position (upper triangle — every unordered
-    pair counted exactly once, and position order is id order so
-    ``id_a < id_b`` holds by construction), and sort-counts
-    (block_row, partner) co-incidences per ~256-row sub-block (cache
-    resident). Hub columns (df > cap) are excluded from the gather —
-    candidacy needs one shared NON-hub shingle, matching the join path —
-    and their exact per-pair overlap is added back from per-doc hub sets
-    before the threshold test.
-    """
-    import numpy as np
-
-    sc = spark.sparkContext
-    n_docs = post["n_docs"]
-
-    hubbed = max_shingle_freq is not None and bool(
-        (post["col_df"] > max_shingle_freq).any()
-    )
-    payload = {
-        k: post[k]
-        for k in ("ids", "sizes", "row_ptr", "inc_codes", "inc_pos",
-                  "post_docs", "post_ptr", "n_docs")
-    }
-    if hubbed:
-        cap = int(max_shingle_freq)
-        hub_col = post["col_df"] > cap
-        nonhub_inc = ~hub_col[post["inc_codes"]]
-        # postings restricted to non-hub columns, plus re-derived own-
-        # position indices (hub incidences get -1 → zero-length slices)
-        porder = np.argsort(post["inc_codes"][nonhub_inc], kind="stable")
-        doc_of_inc = np.repeat(
-            np.arange(n_docs, dtype=np.int64), post["sizes"].astype(np.int64)
-        )
-        nh_docs = doc_of_inc[nonhub_inc][porder].astype(np.int32)
-        nh_pos = np.full(len(post["inc_codes"]), -1, dtype=np.int32)
-        nh_pos[np.flatnonzero(nonhub_inc)[porder]] = np.arange(
-            len(nh_docs), dtype=np.int32
-        )
-        nh_df = np.where(hub_col, 0, post["col_df"]).astype(np.int64)
-        nh_ptr = np.zeros(len(post["col_df"]) + 1, dtype=np.int64)
-        np.cumsum(nh_df, out=nh_ptr[1:])
-        # per-doc hub column sets (sorted codes) for the exact add-back
-        h_docs = doc_of_inc[~nonhub_inc]
-        h_cols = post["inc_codes"][~nonhub_inc]
-        horder = np.argsort(h_docs, kind="stable")
-        hub_vals = h_cols[horder]
-        hub_cnt = np.bincount(h_docs, minlength=n_docs)
-        hub_ptr = np.zeros(n_docs + 1, dtype=np.int64)
-        np.cumsum(hub_cnt, out=hub_ptr[1:])
-        for d in np.flatnonzero(np.diff(hub_ptr) > 1):
-            hub_vals[hub_ptr[d] : hub_ptr[d + 1]].sort()
-        payload.update(post_docs=nh_docs, post_ptr=nh_ptr, inc_pos=nh_pos,
-                       hub_ptr=hub_ptr, hub_vals=hub_vals)
-    else:
-        payload.update(hub_ptr=None, hub_vals=None)
-
-    bc = sc.broadcast(payload)
-    thr = float(threshold)
-    SUB = 256
-    n_blocks = min(max(sc.defaultParallelism * 4, 1), max(n_docs // 16, 1))
-    bounds = np.linspace(0, n_docs, n_blocks + 1).astype(np.int64)
-
-    def mapper(batches):
-        v = bc.value
-        row_ptr, inc_codes, inc_pos = v["row_ptr"], v["inc_codes"], v["inc_pos"]
-        pptr, pdocs = v["post_ptr"], v["post_docs"]
-        ids_s, sizes_s, nd = v["ids"], v["sizes"], v["n_docs"]
-        hub_ptr, hub_vals = v["hub_ptr"], v["hub_vals"]
-        key32 = SUB * nd < 2**31 - 1
-        for pdf in batches:
-            outs = []
-            for blk in pdf["id"].to_numpy():
-                lo, hi = int(bounds[blk]), int(bounds[blk + 1])
-                for s0 in range(lo, hi, SUB):
-                    s1 = min(s0 + SUB, hi)
-                    a, b = row_ptr[s0], row_ptr[s1]
-                    k = inc_codes[a:b].astype(np.int64)
-                    own = inc_pos[a:b].astype(np.int64)
-                    brow = np.repeat(
-                        np.arange(s1 - s0, dtype=np.int64),
-                        sizes_s[s0:s1].astype(np.int64),
-                    )
-                    start = own + 1
-                    lens = np.where(own >= 0, pptr[k + 1] - start, 0)
-                    tot = int(lens.sum())
-                    if tot == 0:
-                        continue
-                    out_rows = np.repeat(brow, lens)
-                    csum = np.cumsum(lens)
-                    within = np.arange(tot, dtype=np.int64) - np.repeat(
-                        csum - lens, lens
-                    )
-                    flat = np.repeat(start, lens) + within
-                    out_docs = pdocs[flat].astype(np.int64)
-                    pk = out_rows * nd + out_docs
-                    uk, c = _count_sorted(pk.astype(np.int32) if key32 else pk)
-                    r = (uk // nd).astype(np.int64) + s0
-                    d = (uk % nd).astype(np.int64)
-                    na = sizes_s[r].astype(np.int64)
-                    nb = sizes_s[d].astype(np.int64)
-                    c = c.astype(np.int64)
-                    if hub_ptr is not None:
-                        ha = hub_ptr[r + 1] - hub_ptr[r]
-                        hb = hub_ptr[d + 1] - hub_ptr[d]
-                        m = np.minimum(ha, hb)
-                        jmax = (c + m).astype(np.float64) / (
-                            na + nb - c - m
-                        ).astype(np.float64)
-                        for i in np.flatnonzero((jmax >= thr) & (m > 0)):
-                            pa, pb = r[i], d[i]
-                            c[i] += np.intersect1d(
-                                hub_vals[hub_ptr[pa] : hub_ptr[pa + 1]],
-                                hub_vals[hub_ptr[pb] : hub_ptr[pb + 1]],
-                                assume_unique=True,
-                            ).size
-                    j = c.astype(np.float64) / (na + nb - c).astype(np.float64)
-                    keep = j >= thr
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "id_a": ids_s[r[keep]],
-                                "id_b": ids_s[d[keep]],
-                                "_c": c[keep],
-                                "_na": na[keep].astype(np.int32),
-                                "_nb": nb[keep].astype(np.int32),
-                            }
-                        )
-                    )
-            yield (
-                pd.concat(outs)
-                if outs
-                else pd.DataFrame(
-                    {"id_a": pd.Series(dtype="int64"),
-                     "id_b": pd.Series(dtype="int64"),
-                     "_c": pd.Series(dtype="int64"),
-                     "_na": pd.Series(dtype="int32"),
-                     "_nb": pd.Series(dtype="int32")}
-                )
-            )
-
-    blocks = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
-    out = blocks.mapInPandas(mapper, "id_a long, id_b long, _c long, _na int, _nb int")
-    jacc = F.col("_c").cast("double") / (
-        F.col("_na") + F.col("_nb") - F.col("_c")
-    ).cast("double")
-    return out.select(
-        F.col("id_a").cast(id_type).alias("id_a"),
-        F.col("id_b").cast(id_type).alias("id_b"),
-        jacc.alias("jacc"),
-    ).where(F.col("jacc") >= threshold)
-
+    return cooccur.postings(ids, sizes, scol.flatten())
 
 
 def cross_contamination(
@@ -612,7 +387,7 @@ def _cross_overlap_gemm(
                 flat_idx = np.repeat(start, lens) + within
                 out_docs = pdocs[flat_idx].astype(np.int64)
                 pk = out_rows * n_docs + out_docs
-                uk, c = _count_sorted(pk.astype(np.int32) if key32 else pk)
+                uk, c = cooccur._count_sorted(pk.astype(np.int32) if key32 else pk)
                 keep = c >= min_c
                 uk, c = uk[keep].astype(np.int64), c[keep]
                 outs.append(

@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 
 from ..sources.tables import load
 from ..functions import scalar
+from ..operators import cooccur
 from .registry import query
 
 DEC = T.DecimalType(28, 4)
@@ -322,11 +323,23 @@ def j06_copart_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalization (reference: co-spent input self-join,
     tests/RunUpdateWallets.java:131-140).
 
-    Scale: instead of a raw self-join (quadratic on hub orders), group by
-    the order key, collect the distinct part set, and pair-expand within
-    each group — SURVEY.md §2.3 J6 calls this out explicitly. Hub groups
-    can additionally be capped/salted (see operators.cc)."""
+    Kernel: when the (order, part) incidences fit the closure budget (16
+    bytes a line), they are collected once and the parts sharing orders
+    are counted by the one co-occurrence kernel
+    (:func:`..operators.cooccur.pair_counts`, the same postings kernel as
+    t05's n-gram Jaccard), on the driver while its pair touches fit that
+    budget too. Fallback above it: instead of a raw self-join (quadratic
+    on hub orders), group by the order key, collect the distinct part
+    set, and pair-expand within each group — SURVEY.md §2.3 J6 calls this
+    out explicitly."""
     li = load(spark, sf_dir, "lineitem")
+    counted = cooccur.pair_counts(li, "l_partkey", "l_orderkey", min_count=2)
+    if counted is not None:
+        return counted.select(
+            F.col("id_a").alias("part_a"),
+            F.col("id_b").alias("part_b"),
+            F.col("n").alias("n_orders"),
+        )
     sets = li.groupBy("l_orderkey").agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
     pairs = sets.select(
         F.explode(

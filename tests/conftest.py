@@ -27,6 +27,22 @@ def persistent_ids(spark):
     return ids
 
 
+@pytest.fixture
+def mapped(spark, monkeypatch):
+    """List that gains one entry per ``mapInPandas`` call: it shows that a
+    kernel was placed on the executors."""
+    calls = []
+    frame = type(spark.range(1))
+    map_in_pandas = frame.mapInPandas
+
+    def spy(self, *args, **kwargs):
+        calls.append(1)
+        return map_in_pandas(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame, "mapInPandas", spy)
+    return calls
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

@@ -1,10 +1,12 @@
 """Text-pipeline operators: exact dedup, MinHash-LSH recall vs exact
 Jaccard, SimHash, ANN recall vs brute force."""
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from btc_blockchain_scanner_spark.operators import closure, dedup, similarity
+from btc_blockchain_scanner_spark.functions import text as TX
+from btc_blockchain_scanner_spark.operators import closure, cooccur, dedup, similarity
 from btc_blockchain_scanner_spark.sources.tables import load
 
 
@@ -269,35 +271,97 @@ def test_cross_contamination_broadcast_guard(spark, sf_dir, monkeypatch):
     assert got == want
 
 
-def test_gemm_and_join_paths_agree(spark, monkeypatch):
+def _kernel_budget(rows, cap):
+    """A closure budget between the corpus's collect weight (text bytes +
+    8 a doc) and the kernel's 8 bytes a pair touch: the texts are
+    collected, and the kernel runs on the executors."""
+    weight = sum(len(t.encode()) + 8 for _, t in rows)
+    sh = [TX.shingle_list(t, 3) for _, t in rows]
+    sizes = np.array([len(x) for x in sh])
+    keep = sizes > 0
+    post = cooccur.postings(
+        np.array([i for i, _ in rows])[keep], sizes[keep], [g for x in sh for g in x]
+    )
+    assert weight < 8 * cooccur.touches(post, cap)  # else the case is vacuous
+    return weight
+
+
+def test_gemm_and_join_paths_agree(spark, monkeypatch, mapped):
     """r6: ngram_jaccard_pairs grew a postings-GEMM plan (closure-broadcast
     numpy counting) next to the shared-shingle join plan. Same contract,
     two physical plans — pin exact pair-set AND value parity on a corpus
     with near-dups, transitive chains, boilerplate hubs and short docs,
-    at a permissive threshold so many pairs qualify."""
+    at a permissive threshold so many pairs qualify. Where the budget
+    leaves room between the collect and the kernel's pair touches, the
+    kernel's executor placement must give exactly the rows of its driver
+    placement."""
     boiler = "common shared preamble text that every single document carries along"
     rows = [
         (i, f"{boiler} item {i % 7} alpha beta gamma delta epsilon word{i % 3}")
         for i in range(30)
     ] + [(100, "tiny doc here"), (101, "tiny doc here"), (102, "unrelated standalone content piece")]
-    d = spark.createDataFrame(rows, "doc_id long, text string")
-    for cap in (None, 5):
-        gemm = {
-            (r.id_a, r.id_b, round(r.jacc, 12))
-            for r in dedup.ngram_jaccard_pairs(
-                d, threshold=0.2, max_shingle_freq=cap
-            ).collect()
-        }
-        with monkeypatch.context() as m:
-            m.setattr(closure, "BUDGET_BYTES", 0)
-            join = {
-                (r.id_a, r.id_b, round(r.jacc, 12))
-                for r in dedup.ngram_jaccard_pairs(
-                    d, threshold=0.2, max_shingle_freq=cap
-                ).collect()
-            }
-        assert gemm == join, (cap, gemm ^ join)
+    # a second corpus whose hub shingles (df 40 > 20) leave that room
+    hubbed = [
+        (i, f"{boiler} topic {i % 3} kappa lambda mu nu xi omicron rho sigma item {i % 5}")
+        for i in range(40)
+    ]
+    for fixture, cap, placements in ((rows, None, True), (rows, 5, False), (hubbed, 20, True)):
+        d = spark.createDataFrame(fixture, "doc_id long, text string")
+
+        def run(budget=None):
+            with monkeypatch.context() as m:
+                if budget is not None:
+                    m.setattr(closure, "BUDGET_BYTES", budget)
+                return {
+                    (r.id_a, r.id_b, r.jacc)
+                    for r in dedup.ngram_jaccard_pairs(
+                        d, threshold=0.2, max_shingle_freq=cap
+                    ).collect()
+                }
+
+        mapped.clear()
+        gemm = run()
+        assert not mapped  # the default budget keeps these kernels in-process
+        join = run(0)
+        rounded = lambda res: {(a, b, round(j, 12)) for a, b, j in res}  # noqa: E731
+        assert rounded(gemm) == rounded(join), (cap, gemm ^ join)
         assert gemm  # non-vacuous: the fixture must actually produce pairs
+        if placements:
+            executors = run(_kernel_budget(fixture, cap))
+            assert mapped, "the executor placement did not run"
+            assert executors == gemm, (cap, executors ^ gemm)
+
+
+def test_string_ids_decided_before_any_collect(spark, monkeypatch):
+    """Ids that are not integral send ngram_jaccard_pairs to the join path
+    from the schema alone: nothing is collected through Arrow first."""
+    rows = [
+        (f"d{i:02d}", f"shared opening words for every doc then topic {i % 4} ends {i % 3}")
+        for i in range(40)
+    ]
+    d = spark.createDataFrame(rows, "doc_id string, text string")
+    collected = []
+    to_arrow = type(d).toArrow
+
+    def spy(self):
+        collected.append(1)
+        return to_arrow(self)
+
+    monkeypatch.setattr(type(d), "toArrow", spy)
+    got = {
+        (r.id_a, r.id_b, round(r.jacc, 12))
+        for r in dedup.ngram_jaccard_pairs(d, threshold=0.5, max_shingle_freq=None).collect()
+    }
+    assert collected == []
+    sh = {i: set(TX.shingle_list(t, 3)) for i, t in rows}
+    want = set()
+    for a in sh:
+        for b in sh:
+            if a < b and sh[a] & sh[b]:
+                j = len(sh[a] & sh[b]) / len(sh[a] | sh[b])
+                if j >= 0.5:
+                    want.add((a, b, round(j, 12)))
+    assert got == want and got
 
 
 def test_cross_contamination_gemm_and_join_agree(spark, monkeypatch):
