@@ -7,16 +7,14 @@ they share, i.e. (AᵀA)[a,b] over a member×key incidence list. Both run
 here on one postings kernel (:func:`_block_pairs`). The postings closure
 is built on the driver from a side collected through :mod:`.closure`;
 where the kernel runs is chosen from a size the driver already holds,
-the pair touches Σ df·(df−1)/2 over the counted columns: within
-``closure.BUDGET_BYTES`` at 8 bytes a touch it runs in-process, above it
-the closure is broadcast and executor tasks run the same kernel per row
-block.
+the bytes the kernel would hold in-process (:func:`footprint`): within
+``closure.BUDGET_BYTES`` it runs in-process, above it the closure is
+broadcast and executor tasks run the same kernel per row block.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -27,6 +25,13 @@ from . import closure
 
 SCHEMA = "id_a long, id_b long, _c long, _na int, _nb int"
 SUB = 256  # rows per sort-count sub-block (cache resident)
+# what the kernel holds in-process (see footprint): a kept pair's row of
+# SCHEMA, and a sub-block's work arrays per pair touch and per incidence
+# (measured peaks stay under the sum, at most 0.96 of it, over corpora of
+# 40-3 000 docs, 3-120 keys a doc, with and without hub columns)
+KEPT_BYTES = 32
+WORK_BYTES = 128
+INC_BYTES = 128
 
 
 def postings(ids, sizes, flat):
@@ -100,13 +105,22 @@ def _count_sorted(keys):
     return keys[idx], counts
 
 
-def touches(post: dict, max_col_freq: int | None = None) -> int:
-    """Pair touches of the kernel over ``post``: Σ df·(df−1)/2 over the
-    columns it gathers (hub columns, df > ``max_col_freq``, are not)."""
-    df = post["col_df"].astype(np.int64)
-    if max_col_freq is not None:
-        df = df[df <= max_col_freq]
-    return int((df * (df - 1) // 2).sum())
+def footprint(v: dict) -> int:
+    """Peak bytes the kernel holds when it runs in-process over the closure
+    ``v`` (see :func:`pairs`): every pair touch may become a kept pair,
+    and the largest SUB-row sub-block holds its work arrays while it
+    counts. Known on the driver without a job."""
+    own = v["inc_pos"].astype(np.int64)
+    lens = np.where(own >= 0, v["post_ptr"][v["inc_codes"] + 1] - own - 1, 0)
+    cs = np.zeros(len(lens) + 1, dtype=np.int64)
+    np.cumsum(lens, out=cs[1:])
+    n = v["n_docs"]
+    at = v["row_ptr"][np.r_[0:n:SUB, n]]
+    return (
+        KEPT_BYTES * int(cs[-1])
+        + WORK_BYTES * int(np.diff(cs[at]).max())
+        + INC_BYTES * int(np.diff(at).max())
+    )
 
 
 def pairs(
@@ -129,63 +143,25 @@ def pairs(
     :func:`.dedup.ngram_jaccard_pairs` — and their exact per-pair overlap
     is added back from per-doc hub sets before the keep test.
 
-    Placement: when ``8 · touches`` fits ``closure.BUDGET_BYTES`` the
-    kernel runs once in this process over all rows and the result enters
-    Spark as an Arrow table; above it the closure is broadcast and
-    ``spark.range(n_blocks).mapInPandas`` runs the same kernel per row
-    block on the executors (t05 at sf1.0: 10^8 touches, ~4 s).
+    Placement: when the kernel's :func:`footprint` fits
+    ``closure.BUDGET_BYTES`` it runs once in this process over all rows
+    and the result enters Spark as an Arrow table (sf0.1: t05 ~1.3 M
+    touches, 56-59 MiB; j06 1.2 M, 41 MiB); above it the closure is
+    broadcast and ``spark.range(n_blocks).mapInPandas`` runs the same
+    kernel per row block on the executors (t05 at sf1.0: 1.3·10^8
+    touches, 3.9 s on 4 cores against 8.1 s in-process). The memory
+    bound binds long before speed would: on 4 cores the in-process run
+    stays the faster one up to ~20 M touches (1.4 s against 2.0 s; at
+    46 M, 2.5 s against 2.1 s).
     """
-    n_docs = post["n_docs"]
-
-    hubbed = max_col_freq is not None and bool(
-        (post["col_df"] > max_col_freq).any()
-    )
-    payload = {
-        k: post[k]
-        for k in ("ids", "sizes", "row_ptr", "inc_codes", "inc_pos",
-                  "post_docs", "post_ptr", "n_docs")
-    }
-    if hubbed:
-        cap = int(max_col_freq)
-        hub_col = post["col_df"] > cap
-        nonhub_inc = ~hub_col[post["inc_codes"]]
-        # postings restricted to non-hub columns, plus re-derived own-
-        # position indices (hub incidences get -1 → zero-length slices)
-        porder = np.argsort(post["inc_codes"][nonhub_inc], kind="stable")
-        doc_of_inc = np.repeat(
-            np.arange(n_docs, dtype=np.int64), post["sizes"].astype(np.int64)
-        )
-        nh_docs = doc_of_inc[nonhub_inc][porder].astype(np.int32)
-        nh_pos = np.full(len(post["inc_codes"]), -1, dtype=np.int32)
-        nh_pos[np.flatnonzero(nonhub_inc)[porder]] = np.arange(
-            len(nh_docs), dtype=np.int32
-        )
-        nh_df = np.where(hub_col, 0, post["col_df"]).astype(np.int64)
-        nh_ptr = np.zeros(len(post["col_df"]) + 1, dtype=np.int64)
-        np.cumsum(nh_df, out=nh_ptr[1:])
-        # per-doc hub column sets (sorted codes) for the exact add-back
-        h_docs = doc_of_inc[~nonhub_inc]
-        h_cols = post["inc_codes"][~nonhub_inc]
-        horder = np.argsort(h_docs, kind="stable")
-        hub_vals = h_cols[horder]
-        hub_cnt = np.bincount(h_docs, minlength=n_docs)
-        hub_ptr = np.zeros(n_docs + 1, dtype=np.int64)
-        np.cumsum(hub_cnt, out=hub_ptr[1:])
-        for d in np.flatnonzero(np.diff(hub_ptr) > 1):
-            hub_vals[hub_ptr[d] : hub_ptr[d + 1]].sort()
-        payload.update(post_docs=nh_docs, post_ptr=nh_ptr, inc_pos=nh_pos,
-                       hub_ptr=hub_ptr, hub_vals=hub_vals)
-    else:
-        payload.update(hub_ptr=None, hub_vals=None)
-
+    v = _closure(post, max_col_freq)
+    n_docs = v["n_docs"]
     thr = float(threshold)
-    if 8 * touches(post, max_col_freq) <= closure.BUDGET_BYTES:
-        return spark.createDataFrame(
-            pa.table(_block_pairs(payload, 0, n_docs, thr, min_count))
-        )
+    if footprint(v) <= closure.BUDGET_BYTES:
+        return spark.createDataFrame(_block_pairs(v, 0, n_docs, thr, min_count))
 
     sc = spark.sparkContext
-    bc = sc.broadcast(payload)
+    bc = sc.broadcast(v)
     n_blocks = min(max(sc.defaultParallelism * 4, 1), max(n_docs // 16, 1))
     bounds = np.linspace(0, n_docs, n_blocks + 1).astype(np.int64)
 
@@ -193,17 +169,64 @@ def pairs(
         v = bc.value
         for pdf in batches:
             for blk in pdf["id"].to_numpy():
-                yield pd.DataFrame(
-                    _block_pairs(v, int(bounds[blk]), int(bounds[blk + 1]), thr, min_count)
-                )
+                yield _block_pairs(
+                    v, int(bounds[blk]), int(bounds[blk + 1]), thr, min_count
+                ).to_pandas()
 
     blocks = spark.range(0, n_blocks, 1, numPartitions=n_blocks)
     return blocks.mapInPandas(mapper, SCHEMA)
 
 
-def _block_pairs(v: dict, lo: int, hi: int, thr: float, min_count: int) -> dict:
+def _closure(post: dict, max_col_freq: int | None) -> dict:
+    """What :func:`_block_pairs` reads of ``post``: with hub columns
+    (df > ``max_col_freq``) present, postings restricted to the non-hub
+    columns plus per-doc hub sets for the exact add-back."""
+    n_docs = post["n_docs"]
+    v = {
+        k: post[k]
+        for k in ("ids", "sizes", "row_ptr", "inc_codes", "inc_pos",
+                  "post_docs", "post_ptr", "n_docs")
+    }
+    if max_col_freq is None or not bool((post["col_df"] > max_col_freq).any()):
+        v.update(hub_ptr=None, hub_vals=None)
+        return v
+    cap = int(max_col_freq)
+    hub_col = post["col_df"] > cap
+    nonhub_inc = ~hub_col[post["inc_codes"]]
+    # postings restricted to non-hub columns, plus re-derived own-
+    # position indices (hub incidences get -1 → zero-length slices)
+    porder = np.argsort(post["inc_codes"][nonhub_inc], kind="stable")
+    doc_of_inc = np.repeat(
+        np.arange(n_docs, dtype=np.int64), post["sizes"].astype(np.int64)
+    )
+    nh_docs = doc_of_inc[nonhub_inc][porder].astype(np.int32)
+    nh_pos = np.full(len(post["inc_codes"]), -1, dtype=np.int32)
+    nh_pos[np.flatnonzero(nonhub_inc)[porder]] = np.arange(
+        len(nh_docs), dtype=np.int32
+    )
+    nh_df = np.where(hub_col, 0, post["col_df"]).astype(np.int64)
+    nh_ptr = np.zeros(len(post["col_df"]) + 1, dtype=np.int64)
+    np.cumsum(nh_df, out=nh_ptr[1:])
+    # per-doc hub column sets (sorted codes) for the exact add-back
+    h_docs = doc_of_inc[~nonhub_inc]
+    h_cols = post["inc_codes"][~nonhub_inc]
+    horder = np.argsort(h_docs, kind="stable")
+    hub_vals = h_cols[horder]
+    hub_cnt = np.bincount(h_docs, minlength=n_docs)
+    hub_ptr = np.zeros(n_docs + 1, dtype=np.int64)
+    np.cumsum(hub_cnt, out=hub_ptr[1:])
+    for d in np.flatnonzero(np.diff(hub_ptr) > 1):
+        hub_vals[hub_ptr[d] : hub_ptr[d + 1]].sort()
+    v.update(post_docs=nh_docs, post_ptr=nh_ptr, inc_pos=nh_pos,
+             hub_ptr=hub_ptr, hub_vals=hub_vals)
+    return v
+
+
+def _block_pairs(v: dict, lo: int, hi: int, thr: float, min_count: int) -> pa.Table:
     """The kernel over doc positions ``[lo, hi)`` of the closure ``v``
-    (see :func:`pairs`): the kept pairs as the columns of :data:`SCHEMA`."""
+    (see :func:`pairs`): the kept pairs as an Arrow table of
+    :data:`SCHEMA`, one chunk a sub-block, so that what it keeps is held
+    once, in its final 32 bytes a pair."""
     row_ptr, inc_codes, inc_pos = v["row_ptr"], v["inc_codes"], v["inc_pos"]
     pptr, pdocs = v["post_ptr"], v["post_docs"]
     ids_s, sizes_s, nd = v["ids"], v["sizes"], v["n_docs"]
@@ -250,18 +273,23 @@ def _block_pairs(v: dict, lo: int, hi: int, thr: float, min_count: int) -> dict:
                 ).size
         j = c.astype(np.float64) / (na + nb - c).astype(np.float64)
         keep = (j >= thr) & (c >= min_count)
-        outs.append((r[keep], d[keep], c[keep], na[keep], nb[keep]))
-    if outs:
-        r, d, c, na, nb = (np.concatenate(x) for x in zip(*outs))
-    else:
-        r = d = c = na = nb = np.empty(0, dtype=np.int64)
-    return {
-        "id_a": ids_s[r],
-        "id_b": ids_s[d],
+        # createDataFrame drops every batch after an empty non-first one
+        if keep.any():
+            outs.append(_pair_table(ids_s, r[keep], d[keep], c[keep], na[keep], nb[keep]))
+    if not outs:
+        e = np.empty(0, dtype=np.int64)
+        outs.append(_pair_table(ids_s, e, e, e, e, e))
+    return pa.concat_tables(outs)
+
+
+def _pair_table(ids, r, d, c, na, nb) -> pa.Table:
+    return pa.table({
+        "id_a": ids[r],
+        "id_b": ids[d],
         "_c": c,
         "_na": na.astype(np.int32),
         "_nb": nb.astype(np.int32),
-    }
+    })
 
 
 def pair_counts(df: DataFrame, member: str, key: str, min_count: int) -> DataFrame | None:

@@ -86,16 +86,16 @@ def ngram_jaccard_pairs(
       through Arrow, factorized to dense column codes on the driver
       (string-exact — no hashing, no collision modes), and counted by
       the one co-occurrence kernel, :func:`.cooccur.pairs`, with
-      cache-resident numpy gathers. Where that kernel runs follows its
-      pair touches (Σ df·(df−1)/2 over the non-hub shingles, known on
-      the driver without a job): within the budget at 8 bytes a touch
-      it runs in the driver process (sf0.1: 1.3 M touches); above it
-      the postings closure (~12 bytes/incidence + ~20/doc) is broadcast
-      and tasks count their doc blocks' overlaps against the whole
-      corpus. ZERO shuffles, one pass over the corpus; the 10^8
-      co-incidence touches of sf1.0 that previously went through a
-      self-join + 120M-group hash aggregate (296 s) stay in numpy blocks
-      (~4 s). Only pairs at or above the threshold leave Python.
+      cache-resident numpy gathers. Where that kernel runs follows the
+      bytes it would hold in-process (:func:`.cooccur.footprint`, from
+      its pair touches over the non-hub shingles, known on the driver
+      without a job): within the budget it runs in the driver process
+      (sf0.1: 1.3 M touches, 56-59 MiB); above it the postings closure
+      (~12 bytes/incidence + ~20/doc) is broadcast and tasks count their
+      doc blocks' overlaps against the whole corpus. ZERO shuffles, one
+      pass over the corpus; the 10^8 co-incidence touches of sf1.0 that
+      previously went through a self-join + 120M-group hash aggregate
+      (296 s) stay in numpy blocks (~4 s). Only pairs at or above the threshold leave Python.
     * **Shared-shingle join path** (fallback above the budget or for
       non-integral ids): explode → self-join on the shingle → arithmetic
       pair count, never a full cross join — unbounded-scale, one shuffle
@@ -130,7 +130,7 @@ def ngram_jaccard_pairs(
             F.col("id_a").cast(id_type).alias("id_a"),
             F.col("id_b").cast(id_type).alias("id_b"),
             _jacc().alias("jacc"),
-        ).where(F.col("jacc") >= threshold)
+        )
     if sh is None:
         # the join path consumes the shingle frame several times — persist it
         sh = shingle_docs(docs, id_col, text_col, n).persist()

@@ -327,8 +327,8 @@ def j06_copart_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes a line), they are collected once and the parts sharing orders
     are counted by the one co-occurrence kernel
     (:func:`..operators.cooccur.pair_counts`, the same postings kernel as
-    t05's n-gram Jaccard), on the driver while its pair touches fit that
-    budget too. Fallback above it: instead of a raw self-join (quadratic
+    t05's n-gram Jaccard), on the driver while the bytes that kernel
+    holds fit that budget too. Fallback above it: instead of a raw self-join (quadratic
     on hub orders), group by the order key, collect the distinct part
     set, and pair-expand within each group — SURVEY.md §2.3 J6 calls this
     out explicitly."""

@@ -273,8 +273,8 @@ def test_cross_contamination_broadcast_guard(spark, sf_dir, monkeypatch):
 
 def _kernel_budget(rows, cap):
     """A closure budget between the corpus's collect weight (text bytes +
-    8 a doc) and the kernel's 8 bytes a pair touch: the texts are
-    collected, and the kernel runs on the executors."""
+    8 a doc) and the bytes the kernel would hold in-process: the texts
+    are collected, and the kernel runs on the executors."""
     weight = sum(len(t.encode()) + 8 for _, t in rows)
     sh = [TX.shingle_list(t, 3) for _, t in rows]
     sizes = np.array([len(x) for x in sh])
@@ -282,7 +282,8 @@ def _kernel_budget(rows, cap):
     post = cooccur.postings(
         np.array([i for i, _ in rows])[keep], sizes[keep], [g for x in sh for g in x]
     )
-    assert weight < 8 * cooccur.touches(post, cap)  # else the case is vacuous
+    # else the case is vacuous
+    assert weight < cooccur.footprint(cooccur._closure(post, cap))
     return weight
 
 
