@@ -122,7 +122,7 @@ def mentions_from(extracted: DataFrame) -> DataFrame:
     )
 
 
-def mention_flags_from(mentions: DataFrame, turns: DataFrame) -> DataFrame:
+def mention_flags_from_extracted(extracted: DataFrame) -> DataFrame:
     """F4 sparse-flags side table (input_special analog: the reference
     stores a TxInputSpecial row ONLY for inputs whose sighash/multisig
     flags differ from the default — DbQueryInputSpecial.java,
@@ -135,30 +135,12 @@ def mention_flags_from(mentions: DataFrame, turns: DataFrame) -> DataFrame:
     * ``flag_caps`` — the ORIGINAL source span is all-caps (extraction
       lowercases; the span offsets let us check the raw text).
 
-    Keyed by (conv_id, turn_idx, pos); join back with
-    :func:`with_flag_defaults`. Pure Column math — no UDF.
-    """
-    m = mentions.join(turns.select("conv_id", "turn_idx", "text"), ["conv_id", "turn_idx"])
-    span = F.expr("substring(text, span_start + 1, span_end - span_start)")
-    flag_caps = (span == F.upper(span)) & (span != F.lower(span))
-    flag_alias = F.col("mention_type") == "alias"
-    return (
-        m.select(
-            "conv_id",
-            "turn_idx",
-            "pos",
-            flag_alias.alias("flag_alias"),
-            flag_caps.alias("flag_caps"),
-        )
-        .where(F.col("flag_alias") | F.col("flag_caps"))
-    )
-
-
-def mention_flags_from_extracted(extracted: DataFrame) -> DataFrame:
-    """Pipeline fast path for :func:`mention_flags_from`: the extraction
-    struct already carries text AND mentions in the same row, so the flags
-    fall out of one explode — no mentions ⋈ turns shuffle join (measured
-    ~11 s → ~3 s at 20 k convs). Emits identical rows (tested)."""
+    Keyed by (conv_id, turn_idx, pos); readers join it back onto the
+    mentions with coalesced false defaults. The extraction struct already
+    carries text AND mentions in the same row, so the flags fall out of
+    one explode — no mentions ⋈ turns shuffle join (measured ~11 s → ~3 s
+    at 20 k convs). Pure Column math — no UDF. Rows equal the join form's
+    (tests/test_datagen_extract.py)."""
     m = extracted.select(
         "conv_id", "turn_idx", "text", F.explode(F.col("ex.mentions")).alias("m")
     )
@@ -174,18 +156,6 @@ def mention_flags_from_extracted(extracted: DataFrame) -> DataFrame:
             flag_caps.alias("flag_caps"),
         )
         .where(F.col("flag_alias") | F.col("flag_caps"))
-    )
-
-
-def with_flag_defaults(mentions: DataFrame, flags: DataFrame) -> DataFrame:
-    """Join the sparse flags table back onto the full mention stream with
-    coalesced defaults (false) — the read-side F8 shape the reference uses
-    when it re-attaches input_special rows on demand."""
-    return mentions.join(flags, ["conv_id", "turn_idx", "pos"], "left").withColumns(
-        {
-            "flag_alias": F.coalesce(F.col("flag_alias"), F.lit(False)),
-            "flag_caps": F.coalesce(F.col("flag_caps"), F.lit(False)),
-        }
     )
 
 

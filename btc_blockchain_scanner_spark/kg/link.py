@@ -109,8 +109,7 @@ def resolve_surfaces(
         F.col("surface").alias("q_surface"),
     )
     both = query_side.select("_id", "_sh").unionByName(dict_side.select("_id", "_sh"))
-    buckets = lsh.band_buckets(both, "_id", "_sh", num_perm, num_bands)
-    cand = lsh.candidate_pairs(buckets)
+    cand = lsh.candidate_pairs(lsh.band_buckets(both, "_id", "_sh", num_perm, num_bands))
     # keep only (query, dict) pairings in either order
     qd = cand.where(
         (F.col("id_a").startswith("q:") & F.col("id_b").startswith("d:"))
@@ -132,8 +131,7 @@ def resolve_surfaces(
         .select(F.col("q_surface").alias("surface"), F.col("entity_key").alias("fuzzy_key"))
     )
 
-    # collected like ``exact`` (same rows), which lets the LSH bucket
-    # table be released before return
+    # collected like ``exact`` (same rows)
     resolved = (
         exact.join(fuzzy, "surface", "left")
         .select(
@@ -146,7 +144,6 @@ def resolve_surfaces(
         )
         .toArrow()
     )
-    buckets.unpersist()
     return spark.createDataFrame(resolved)
 
 

@@ -106,8 +106,8 @@ def run(
             "partition_key", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_parts)).cast("string")
         )
         # F4 sparse-flags side table (input_special analog): rows exist ONLY
-        # for non-default mentions; readers re-attach via
-        # extract.with_flag_defaults (coalesced defaults). Computed from the
+        # for non-default mentions; readers re-attach them with coalesced
+        # defaults (tests/test_pipeline.py). Computed from the
         # persisted extraction struct directly — no mentions ⋈ turns join.
         flags = extract.mention_flags_from_extracted(extracted).withColumn(
             "partition_key", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_parts)).cast("string")

@@ -7,7 +7,7 @@ external curated lists and joined onto objects at read time. Same shape
 here: a deterministic tag dimension, an ``entity_tag`` link table, and a
 read-side join that decorates nodes with a (possibly empty) tag array —
 objects without tags pay nothing, exactly like the sparse-flags table
-(extract.mention_flags_from).
+(extract.mention_flags_from_extracted).
 """
 
 from __future__ import annotations
@@ -44,7 +44,7 @@ def tag_entities(entities: DataFrame, rules: DataFrame, tags: DataFrame) -> Data
 
 def tagged_nodes(nodes: DataFrame, entity_tag: DataFrame, tags: DataFrame) -> DataFrame:
     """Read-side join-back: nodes + sorted tag-name array (empty array
-    default — F8 coalesce shape, same as with_flag_defaults)."""
+    default — F8 coalesce shape, as readers of the mention flags use)."""
     per_node = (
         entity_tag.join(F.broadcast(tags), "tag_id")
         .groupBy(F.col("entity_id").cast("long").alias("node_id"))

@@ -10,6 +10,11 @@ where the kernel runs is chosen from a size the driver already holds,
 the bytes the kernel would hold in-process (:func:`footprint`): within
 ``closure.BUDGET_BYTES`` it runs in-process, above it the closure is
 broadcast and executor tasks run the same kernel per row block.
+
+The kernel's inner step, one numpy gather of posting runs plus a
+sort-count (:func:`gather_counts`), is also c01's: the decontamination
+stream (:func:`.dedup.cross_contamination`) counts each train sub-block
+against the broadcast eval postings with it.
 """
 
 from __future__ import annotations
@@ -58,12 +63,7 @@ def postings(ids, sizes, flat):
         offsets = np.zeros(len(sizes) + 1, dtype=np.int64)
         np.cumsum(sizes, out=offsets[1:])
         lens = sizes[order]
-        starts = offsets[:-1][order]
-        csum = np.cumsum(lens)
-        idx = np.repeat(starts, lens) + (
-            np.arange(tot, dtype=np.int64) - np.repeat(csum - lens, lens)
-        )
-        codes_raw = codes_raw[idx]
+        codes_raw = codes_raw[_runs(offsets[:-1][order], lens)]
         ids, sizes = ids[order], lens
     inc_codes = codes_raw.astype(np.int32, copy=False)
     sizes = sizes.astype(np.int32)
@@ -90,6 +90,34 @@ def postings(ids, sizes, flat):
         "vocab": np.asarray(vocab, dtype=object),
         "n_docs": n_docs,
     }
+
+
+def _runs(start, lens):
+    """Flat indices of the runs ``[start[i], start[i] + lens[i])``, in
+    order."""
+    csum = np.cumsum(lens)
+    return np.repeat(start - csum + lens, lens) + np.arange(csum[-1], dtype=np.int64)
+
+
+def gather_counts(rows, start, lens, post_docs, n_cols):
+    """The one gather-count: row ``rows[i]`` meets every column of the
+    posting run ``post_docs[start[i] : start[i] + lens[i]]``, and the
+    (row, column) meetings are sort-counted. Returns int64 arrays (row,
+    column, count), one entry per distinct pair in (row, column) order.
+    The pair key ``row * n_cols + column`` is sorted as int32 when it fits
+    (half the bytes to sort), else as int64. :func:`_block_pairs` calls it
+    with the upper-triangle runs of a sub-block, c01's stream
+    (:func:`.dedup.cross_contamination`) with whole eval posting lists."""
+    if not lens.any():
+        e = np.empty(0, dtype=np.int64)
+        return e, e, e
+    pk = np.repeat(rows, lens).astype(np.int64, copy=False) * n_cols
+    pk += post_docs[_runs(start, lens)]
+    if (int(rows.max()) + 1) * n_cols <= 2**31:
+        pk = pk.astype(np.int32)
+    uk, c = _count_sorted(pk)
+    uk = uk.astype(np.int64)
+    return uk // n_cols, uk % n_cols, c
 
 
 def _count_sorted(keys):
@@ -231,7 +259,6 @@ def _block_pairs(v: dict, lo: int, hi: int, thr: float, min_count: int) -> pa.Ta
     pptr, pdocs = v["post_ptr"], v["post_docs"]
     ids_s, sizes_s, nd = v["ids"], v["sizes"], v["n_docs"]
     hub_ptr, hub_vals = v["hub_ptr"], v["hub_vals"]
-    key32 = SUB * nd < 2**31 - 1
     outs = []
     for s0 in range(lo, hi, SUB):
         s1 = min(s0 + SUB, hi)
@@ -244,21 +271,12 @@ def _block_pairs(v: dict, lo: int, hi: int, thr: float, min_count: int) -> pa.Ta
         )
         start = own + 1
         lens = np.where(own >= 0, pptr[k + 1] - start, 0)
-        tot = int(lens.sum())
-        if tot == 0:
+        r, d, c = gather_counts(brow, start, lens, pdocs, nd)
+        if len(c) == 0:
             continue
-        out_rows = np.repeat(brow, lens)
-        csum = np.cumsum(lens)
-        within = np.arange(tot, dtype=np.int64) - np.repeat(csum - lens, lens)
-        flat = np.repeat(start, lens) + within
-        out_docs = pdocs[flat].astype(np.int64)
-        pk = out_rows * nd + out_docs
-        uk, c = _count_sorted(pk.astype(np.int32) if key32 else pk)
-        r = (uk // nd).astype(np.int64) + s0
-        d = (uk % nd).astype(np.int64)
+        r += s0
         na = sizes_s[r].astype(np.int64)
         nb = sizes_s[d].astype(np.int64)
-        c = c.astype(np.int64)
         if hub_ptr is not None:
             ha = hub_ptr[r + 1] - hub_ptr[r]
             hb = hub_ptr[d + 1] - hub_ptr[d]

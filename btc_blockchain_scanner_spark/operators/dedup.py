@@ -36,15 +36,6 @@ def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
     )
 
 
-def dedup_exact(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep one row (min id) per distinct text. row_number over the content
-    hash — the standard pre-write compaction."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(TX.content_hash(F.col(text_col))).orderBy(F.col(id_col))
-    return docs.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-
-
 # -- n-gram Jaccard ----------------------------------------------------------
 
 
@@ -54,7 +45,10 @@ def shingle_docs(
     """Standard (_id, _sh) shingle frame — the shared first stage of the
     Jaccard/MinHash family. Callers that run several dedup operators over
     the same corpus should build this ONCE, persist it, and pass it via
-    the operators' ``sh=`` parameter (t06_dedup_recall does).
+    the operators' ``sh=`` parameter (t06_dedup_recall does). The
+    operators persist nothing themselves (nothing could release it inside
+    their lazy results): without ``sh`` each branch that reads the
+    shingles computes them.
 
     The (id, text) projection is spread to full parallelism before the
     Arrow shingle UDF — see :func:`.closure.spread` (r6: the sf1.0 corpus
@@ -132,8 +126,7 @@ def ngram_jaccard_pairs(
             _jacc().alias("jacc"),
         )
     if sh is None:
-        # the join path consumes the shingle frame several times — persist it
-        sh = shingle_docs(docs, id_col, text_col, n).persist()
+        sh = shingle_docs(docs, id_col, text_col, n)
     return _jaccard_pairs_join(sh, threshold, max_shingle_freq)
 
 
@@ -352,19 +345,17 @@ def _cross_overlap_gemm(
     )
     min_c = int(min_shared)
     ngram = int(n)
-    SUB = 256
+    SUB = cooccur.SUB
 
     def mapper(batches):
         v = bc.value
         vocab_index = pd.Index(v["vocab"])
         pptr, pdocs = v["post_ptr"], v["post_docs"]
         eids, n_docs = v["ids"], v["n_docs"]
-        key32 = SUB * n_docs < 2**31 - 1
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
             bids_all = pdf["_id"].to_numpy()
-            outs = []
+            outs = [pd.DataFrame({"train_id": bids_all[:0], "eval_id": eids[:0],
+                                  "shared_shingles": eids[:0]})]
             for s0 in range(0, len(pdf), SUB):
                 texts = pdf["_t"].iloc[s0 : s0 + SUB]
                 bl = [TX.shingle_list(t, ngram) for t in texts]
@@ -376,38 +367,18 @@ def _cross_overlap_gemm(
                 k = vocab_index.get_indexer(np.asarray(flat, dtype=object))
                 ok = k >= 0  # train shingles absent from eval drop here
                 brow, k = brow[ok], k[ok]
-                start = pptr[k]
-                lens = pptr[k + 1] - start
-                tot = int(lens.sum())
-                if tot == 0:
-                    continue
-                out_rows = np.repeat(brow, lens)
-                csum = np.cumsum(lens)
-                within = np.arange(tot, dtype=np.int64) - np.repeat(csum - lens, lens)
-                flat_idx = np.repeat(start, lens) + within
-                out_docs = pdocs[flat_idx].astype(np.int64)
-                pk = out_rows * n_docs + out_docs
-                uk, c = cooccur._count_sorted(pk.astype(np.int32) if key32 else pk)
+                r, d, c = cooccur.gather_counts(brow, pptr[k], pptr[k + 1] - pptr[k], pdocs, n_docs)
                 keep = c >= min_c
-                uk, c = uk[keep].astype(np.int64), c[keep]
                 outs.append(
                     pd.DataFrame(
                         {
-                            "train_id": bids_all[s0 : s0 + SUB][uk // n_docs],
-                            "eval_id": eids[uk % n_docs],
-                            "shared_shingles": c.astype(np.int64),
+                            "train_id": bids_all[s0 : s0 + SUB][r[keep]],
+                            "eval_id": eids[d[keep]],
+                            "shared_shingles": c[keep],
                         }
                     )
                 )
-            yield (
-                pd.concat(outs)
-                if outs
-                else pd.DataFrame(
-                    {"train_id": pd.Series(dtype="int64"),
-                     "eval_id": pd.Series(dtype="int64"),
-                     "shared_shingles": pd.Series(dtype="int64")}
-                )
-            )
+            yield pd.concat(outs)
 
     stream = closure.spread(
         train.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
@@ -626,9 +597,8 @@ def minhash_lsh_pairs(
     false positives, not from banding alone.
     """
     if sh is None:
-        # feeds signature generation + both verify joins
-        sh = shingle_docs(docs, id_col, text_col, n).persist()
-    cand = lsh.lsh_candidate_pairs(sh, "_id", "_sh", num_perm, num_bands)
+        sh = shingle_docs(docs, id_col, text_col, n)
+    cand = lsh.candidate_pairs(lsh.band_buckets(sh, "_id", "_sh", num_perm, num_bands))
     verified = (
         cand.join(sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a")
         .join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
@@ -639,41 +609,6 @@ def minhash_lsh_pairs(
 
 
 # -- SimHash -----------------------------------------------------------------
-
-
-def simhash(text_col: Column, bits: int = 64) -> Column:
-    """64-bit SimHash over word tokens: bit k of the signature is the sign
-    of sum over tokens of (+1/-1 by bit k of xxhash64(token)).
-
-    Pure higher-order-function implementation (no UDF). NOTE: composing
-    this inline duplicates the tokenization into all 64 bit-votes — the
-    hot path (:func:`simhash_dup_pairs`) stages token hashes behind an
-    exchange and calls :func:`simhash_from_hashes`.
-    """
-    toks = TX.tokens(text_col)
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    return simhash_from_hashes(hashes, bits)
-
-
-def simhash_from_hashes(hashes: Column, bits: int = 64) -> Column:
-    """SimHash from a pre-computed array<long> of token hashes."""
-    # Per bit k (python-level loop — shift amounts must be literals): the
-    # vote is (#tokens with bit set) - (#tokens with bit clear).
-    # bit-test via mask (shift functions reject lambda variables); a closure
-    # factory keeps the lambda binary — PySpark derives HOF arity from the
-    # Python signature, so a `m=mask` default would break it.
-    def vote_fn(m: int):
-        return lambda acc, h: acc + F.when(
-            h.bitwiseAND(F.lit(m).cast("long")) != 0, 1
-        ).otherwise(-1)
-
-    sig = F.lit(0).cast("long")
-    for k in range(bits):
-        # bit 63 is the sign bit of a signed long → two's-complement literal
-        mask = -(1 << 63) if k == 63 else (1 << k)
-        vote = F.aggregate(hashes, F.lit(0).cast("long"), vote_fn(mask))
-        sig = sig + F.when(vote > 0, F.lit(mask).cast("long")).otherwise(F.lit(0).cast("long"))
-    return sig
 
 
 def simhash_signatures(
@@ -713,7 +648,7 @@ def _simhash_arrow_udf():
             ones = ((H[:, None] >> shifts) & np.uint64(1)).sum(axis=0)
             # vote_k = (+1 per set bit, -1 per clear bit) = 2*ones - n;
             # signature bit k set iff vote > 0 — identical to the Column
-            # spec in simhash_from_hashes
+            # spec in tests/test_text_ops.py
             out[i] = weights[(2 * ones) > len(H)].sum()
         return pd.Series(out.view(np.int64))
 
@@ -754,7 +689,9 @@ def simhash_dup_pairs(
     signature into max_hamming+1 16-bit blocks; any pair within distance
     max_hamming agrees exactly on >=1 block (pigeonhole), so candidates
     come from a groupBy on (block_idx, block_value), then popcount
-    verifies. No quadratic pass.
+    verifies. No quadratic pass. Pass a persisted ``sigs`` to compute the
+    signatures once (t06 shares them with :func:`simhash_pairs_exact`);
+    without it each join side computes them.
     """
     n_blocks = max_hamming + 1
     width = 64 // n_blocks
@@ -774,7 +711,6 @@ def simhash_dup_pairs(
             )
         ).alias("_blk_idx", "_blk"),
     )
-    blocks = blocks.persist()  # self-joined below; avoid recomputing signatures
     cand = (
         blocks.alias("a")
         .join(

@@ -33,26 +33,6 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Sequential-fold cosine — bit-reproducible against a DuckDB
-    ``list_sum(list_transform(...))`` oracle (same accumulation order).
-
-    Measured note: an Arrow-batched numpy replacement for the LSH verify
-    stages was TRIED and reverted — shipping (vec, vec) pairs through a
-    Python stage after the bucket join broke pipelining and ran 2-6x
-    SLOWER than this fold (emb_lsh 26 s -> 60 s at sf0.1). Vectorized
-    cosine only wins where a matrix is closure-broadcast and GEMM'd
-    against streamed batches (brute_force_topk / the exact-pairs
-    baseline), not per-pair post-join.
-
-    Zero-norm guard: nullif on the divisor — a zero vector's cosine is
-    NULL (undefined), which fails every threshold filter and sorts LAST in
-    desc windows; without it ANSI double division yields NaN, which Spark
-    orders ABOVE every number and would rank a zero vector as everyone's
-    top neighbor."""
-    return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
-
-
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -218,9 +198,14 @@ def _verify(pairs: DataFrame, a_col: str, b_col: str, a: tuple, b: tuple, dim: i
     wall at weak thresholds where candidates are dense: 16.4 s → 3.9 s at
     2000×64/0.35). Past the budget, vectors + staged norms re-attach via
     two narrow equi-joins and the JVM fold scores each pair — the
-    unbounded-scale path (an attached-pairs pandas verify was tried and is
-    2-6x SLOWER there; see :func:`cosine`'s measured note). Zero-norm
-    vectors score NULL (fold) or NaN (gather); callers filter both."""
+    unbounded-scale path. Measured there: an Arrow-batched numpy verify of
+    the attached (vec, vec) pairs was tried and reverted — shipping them
+    through a Python stage after the bucket join broke pipelining and ran
+    2-6x SLOWER than the fold (emb_lsh 26 s -> 60 s at sf0.1); vectorized
+    cosine only wins where a matrix is collected once and GEMM'd against
+    streamed batches, not per pair after a join. Zero-norm vectors score
+    NULL (fold, via ``nullif`` on the divisor) or NaN (gather); callers
+    filter both."""
     import numpy as np
 
     va = closure.vectors(*a, dim)

@@ -239,8 +239,8 @@ def f02_mention_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     Here: per-(doc, surface) mention flags (repeated >= 2, lead position
     <= 2) materialized sparsely, then LEFT-joined back onto the full
     mention aggregate with coalesced FALSE defaults. The transcript
-    pipeline twin is kg/extract.py::mention_flags_from (tested in
-    tests/test_pipeline.py)."""
+    pipeline twin is kg/extract.py::mention_flags_from_extracted (its
+    join-back tested in tests/test_pipeline.py)."""
     t = _doc_tokens(spark, sf_dir)
     m = t.select("doc_id", F.posexplode("toks").alias("pos", "surface")).where(
         F.col("surface").isin(*DOC_ENTITIES)

@@ -1,5 +1,6 @@
 """The one co-occurrence pair-count kernel (``operators/cooccur.py``):
-its placement gate, and j06's kernel against its distributed fallback."""
+its gather-count, its placement gate, and j06's kernel against its
+distributed fallback."""
 
 import tracemalloc
 
@@ -7,6 +8,44 @@ import numpy as np
 
 from btc_blockchain_scanner_spark.operators import closure, cooccur
 from btc_blockchain_scanner_spark.plans.relational_queries import j06_copart_pairs
+
+
+def _brute_counts(rows, start, lens, post_docs):
+    pairs = {}
+    for r, s, n in zip(rows, start, lens):
+        for col in post_docs[s : s + n]:
+            pairs[(int(r), int(col))] = pairs.get((int(r), int(col)), 0) + 1
+    return sorted((r, col, c) for (r, col), c in pairs.items())
+
+
+def test_gather_counts_matches_brute_force(monkeypatch):
+    """gather_counts equals a loop over every run on random triples with
+    zero-length runs among them, returns nothing for a sub-block whose
+    runs are all empty, and sorts int32 keys exactly while row × column
+    codes fit them, int64 keys past that."""
+    keys = []
+    count_sorted = cooccur._count_sorted
+
+    def spy(k):
+        keys.append(k.dtype)
+        return count_sorted(k)
+
+    monkeypatch.setattr(cooccur, "_count_sorted", spy)
+    rng = np.random.default_rng(7)
+    post_docs = rng.integers(0, 50, 400).astype(np.int32)
+    for n_cols, dtype in ((50, np.int32), (2**31 // 8, np.int32), (2**31 // 8 + 1, np.int64)):
+        rows = rng.integers(0, 8, 300)
+        rows[0] = 7  # the largest row sets the key width
+        start = rng.integers(0, 390, 300)
+        lens = rng.integers(0, 10, 300)
+        lens[::3] = 0
+        r, col, c = cooccur.gather_counts(rows, start, lens, post_docs, n_cols)
+        assert list(zip(r.tolist(), col.tolist(), c.tolist())) == _brute_counts(
+            rows, start, lens, post_docs
+        )
+        assert keys.pop() == dtype
+    empty = cooccur.gather_counts(np.arange(4), np.arange(4), np.zeros(4, int), post_docs, 50)
+    assert [len(x) for x in empty] == [0, 0, 0] and keys == []
 
 
 def test_placement_gate_boundary(spark, monkeypatch, mapped):

@@ -4,9 +4,31 @@ Covers FIXTURES.md §1 invariants: order-deterministic generation at any
 parallelism, per-turn text pass-through (F2 analog), extraction == oracle.
 """
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from btc_blockchain_scanner_spark.kg import datagen, extract, oracle
+
+
+def mention_flags_from(mentions: DataFrame, turns: DataFrame) -> DataFrame:
+    """The sparse mention flags (semantics in
+    ``extract.mention_flags_from_extracted``) computed read-side, over
+    mentions ⋈ turns: the reference the pipeline's one-explode form is
+    checked against."""
+    m = mentions.join(turns.select("conv_id", "turn_idx", "text"), ["conv_id", "turn_idx"])
+    span = F.expr("substring(text, span_start + 1, span_end - span_start)")
+    flag_caps = (span == F.upper(span)) & (span != F.lower(span))
+    flag_alias = F.col("mention_type") == "alias"
+    return (
+        m.select(
+            "conv_id",
+            "turn_idx",
+            "pos",
+            flag_alias.alias("flag_alias"),
+            flag_caps.alias("flag_caps"),
+        )
+        .where(F.col("flag_alias") | F.col("flag_caps"))
+    )
 
 
 def test_datagen_parallelism_independent(spark):
@@ -61,7 +83,7 @@ def test_flags_fast_path_equals_join_path(spark):
     fast = {tuple(r) for r in extract.mention_flags_from_extracted(ex).collect()}
     joined = {
         tuple(r)
-        for r in extract.mention_flags_from(extract.mentions_from(ex), tr).collect()
+        for r in mention_flags_from(extract.mentions_from(ex), tr).collect()
     }
     ex.unpersist()
     assert fast == joined and len(fast) > 0

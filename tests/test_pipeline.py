@@ -4,6 +4,7 @@ resume-from-dirty-tail, and parallelism determinism."""
 import shutil
 
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from btc_blockchain_scanner_spark.kg import canonicalize, datagen, oracle, pipeline
@@ -97,11 +98,21 @@ def test_invariants(spark, run_dir):
     ).count() == 0
 
 
+def with_flag_defaults(mentions: DataFrame, flags: DataFrame) -> DataFrame:
+    """Join the sparse flags table back onto the full mention stream with
+    coalesced defaults (false) — the read-side F8 shape the reference uses
+    when it re-attaches input_special rows on demand."""
+    return mentions.join(flags, ["conv_id", "turn_idx", "pos"], "left").withColumns(
+        {
+            "flag_alias": F.coalesce(F.col("flag_alias"), F.lit(False)),
+            "flag_caps": F.coalesce(F.col("flag_caps"), F.lit(False)),
+        }
+    )
+
+
 def test_mention_flags_sparse_side_table(spark, run_dir):
     """F4 (input_special analog): the flags table holds ONLY non-default
     rows; joining back with defaults covers every mention exactly once."""
-    from btc_blockchain_scanner_spark.kg import extract
-
     out, res, o = run_dir
     mentions = pipeline.read_table(spark, out, "mentions")
     flags = pipeline.read_table(spark, out, "mention_flags")
@@ -114,9 +125,7 @@ def test_mention_flags_sparse_side_table(spark, run_dir):
     assert n_f == mentions.where(F.col("mention_type") == "alias").count()
 
     # join-back with coalesced defaults: same cardinality, flags total match
-    full = extract.with_flag_defaults(
-        mentions, flags.drop("partition_key")
-    )
+    full = with_flag_defaults(mentions, flags.drop("partition_key"))
     assert full.count() == n_m
     assert full.where("flag_alias").count() == n_f
 

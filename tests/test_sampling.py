@@ -1,59 +1,8 @@
-"""Deterministic split/sample operators: partition-independence, exactness
-of the split partition (disjoint + complete), and fraction sanity."""
+"""The per-key cap: exactly the naive window's rows, at any parallelism."""
 
 from pyspark.sql import functions as F
 
 from btc_blockchain_scanner_spark.operators import sampling
-
-
-def _keys(df, extra=()):
-    return {tuple(r) for r in df.select("k", *extra).collect()}
-
-
-def test_hash_split_disjoint_complete_and_deterministic(spark):
-    df = spark.createDataFrame([(f"k{i}",) for i in range(5000)], "k string")
-    fr = {"train": 0.8, "val": 0.1, "test": 0.1}
-    out = sampling.hash_split(df, "k", fr)
-    got = _keys(out, ("split",))
-    # complete + disjoint: exactly one split per key
-    assert len(got) == 5000
-    assert {k for k, _ in got} == {f"k{i}" for i in range(5000)}
-    # deterministic across parallelism
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "3")
-        again = _keys(sampling.hash_split(df.repartition(13), "k", fr), ("split",))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    assert got == again
-    # fractions roughly honored (hash-uniform; 5000 draws)
-    counts = {s: 0 for s in fr}
-    for _, s in got:
-        counts[s] += 1
-    assert 0.75 <= counts["train"] / 5000 <= 0.85
-    assert 0.06 <= counts["val"] / 5000 <= 0.14
-    assert 0.06 <= counts["test"] / 5000 <= 0.14
-
-
-def test_hash_split_rejects_bad_fractions(spark):
-    import pytest
-
-    df = spark.createDataFrame([("a",)], "k string")
-    with pytest.raises(ValueError, match="sum to 1"):
-        sampling.hash_split(df, "k", {"train": 0.5, "val": 0.1})
-
-
-def test_deterministic_sample_stable_and_nested(spark):
-    df = spark.createDataFrame([(f"k{i}",) for i in range(4000)], "k string")
-    s10 = _keys(sampling.deterministic_sample(df, "k", 0.10))
-    s20 = _keys(sampling.deterministic_sample(df, "k", 0.20))
-    # same salt → smaller fraction is a SUBSET of the larger (threshold
-    # sampling) — lets pipelines grow a sample without resampling
-    assert s10 <= s20
-    assert 0.05 <= len(s10) / 4000 <= 0.15
-    # independent draw under a different salt
-    other = _keys(sampling.deterministic_sample(df, "k", 0.10, salt="other"))
-    assert other != s10
 
 
 def test_per_key_cap_exact_vs_naive_window(spark):

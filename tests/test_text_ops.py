@@ -3,6 +3,7 @@ Jaccard, SimHash, ANN recall vs brute force."""
 
 import numpy as np
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from btc_blockchain_scanner_spark.functions import text as TX
@@ -31,9 +32,6 @@ def test_exact_dedup(spark):
     d = docs_df(spark)
     groups = dedup.exact_dup_groups(d).collect()
     assert len(groups) == 1 and groups[0].n_docs == 2 and groups[0].keep_id == 1
-    kept = dedup.dedup_exact(d)
-    assert kept.count() == 5
-    assert kept.where(F.col("doc_id") == 2).count() == 0
 
 
 def test_ngram_hub_cap_keeps_jaccard_exact(spark):
@@ -87,6 +85,50 @@ def test_minhash_lsh_recall_vs_exact(spark):
         assert recall >= 0.9, (recall, len(exact))
 
 
+def test_dedup_operators_leave_nothing_persisted(spark, persistent_ids):
+    """Collecting a dedup operator's result leaves no persisted RDD behind:
+    nothing releases what an operator persists inside its lazy result
+    (MinHash's shingles and LSH buckets, SimHash's band blocks, the n-gram
+    join path's shingles). A caller that shares a stage persists it and
+    passes it in (t06)."""
+    rows = [(i, f"persist check {i % 3} alpha beta gamma delta {i % 2}") for i in range(12)]
+    d = spark.createDataFrame(rows, "doc_id long, text string")
+    s = spark.createDataFrame([(str(i), t) for i, t in rows], "doc_id string, text string")
+    ops = {
+        "minhash": lambda: dedup.minhash_lsh_pairs(d, threshold=0.5),
+        "simhash": lambda: dedup.simhash_dup_pairs(d, max_hamming=3),
+        "ngram_join": lambda: dedup.ngram_jaccard_pairs(s, threshold=0.5),
+    }
+    for name, op in ops.items():
+        before = persistent_ids()
+        assert op().collect(), name
+        assert persistent_ids() - before == set(), name
+
+
+def simhash_from_hashes(hashes: Column, bits: int = 64) -> Column:
+    """SimHash from an array<long> of token hashes in Column math, the
+    reference ``dedup.simhash_signatures``' Arrow bit-vote is checked
+    against: bit k of the signature is the sign of the sum over tokens of
+    (+1/-1 by bit k of the token's xxhash64)."""
+    # Per bit k (python-level loop — shift amounts must be literals): the
+    # vote is (#tokens with bit set) - (#tokens with bit clear).
+    # bit-test via mask (shift functions reject lambda variables); a closure
+    # factory keeps the lambda binary — PySpark derives HOF arity from the
+    # Python signature, so a `m=mask` default would break it.
+    def vote_fn(m: int):
+        return lambda acc, h: acc + F.when(
+            h.bitwiseAND(F.lit(m).cast("long")) != 0, 1
+        ).otherwise(-1)
+
+    sig = F.lit(0).cast("long")
+    for k in range(bits):
+        # bit 63 is the sign bit of a signed long → two's-complement literal
+        mask = -(1 << 63) if k == 63 else (1 << k)
+        vote = F.aggregate(hashes, F.lit(0).cast("long"), vote_fn(mask))
+        sig = sig + F.when(vote > 0, F.lit(mask).cast("long")).otherwise(F.lit(0).cast("long"))
+    return sig
+
+
 def test_simhash_arrow_matches_column_spec(spark):
     """The Arrow bit-vote signature must be BIT-identical to the Column
     reference implementation (simhash_from_hashes) on real and edge-case
@@ -103,7 +145,7 @@ def test_simhash_arrow_matches_column_spec(spark):
     ).repartition("_id")
     want = {
         (r._id, r._sig)
-        for r in hashed.select("_id", dedup.simhash_from_hashes(F.col("_h")).alias("_sig")).collect()
+        for r in hashed.select("_id", simhash_from_hashes(F.col("_h")).alias("_sig")).collect()
     }
     assert got == want
 
