@@ -167,7 +167,7 @@ def get_or_create_entities(
     from ..operators.rank import ranked_by_md5
 
     new_entities = ranked_by_md5(
-        new, "entity_key", "entity_id", offset=int(max_id), prefix_len=2
+        new, "entity_key", "entity_id", offset=int(max_id)
     ).select(
         F.col("entity_id").cast("int").alias("entity_id"),
         F.lit("concept").alias("entity_type"),

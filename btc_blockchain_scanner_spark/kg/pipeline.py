@@ -99,19 +99,13 @@ def run(
         extracted = extract.extract(batch)
         # One pass over the UDF output for both tables: persist the struct.
         extracted = extracted.persist()
-        mentions = extract.mentions_from(extracted).withColumn(
-            "partition_key", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_parts)).cast("string")
-        )
-        triples = extract.triples_from(extracted).withColumn(
-            "partition_key", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_parts)).cast("string")
-        )
+        mentions = with_partition_key(extract.mentions_from(extracted), n_parts)
+        triples = with_partition_key(extract.triples_from(extracted), n_parts)
         # F4 sparse-flags side table (input_special analog): rows exist ONLY
         # for non-default mentions; readers re-attach them with coalesced
         # defaults (tests/test_pipeline.py). Computed from the
         # persisted extraction struct directly — no mentions ⋈ turns join.
-        flags = extract.mention_flags_from_extracted(extracted).withColumn(
-            "partition_key", F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_parts)).cast("string")
-        )
+        flags = with_partition_key(extract.mention_flags_from_extracted(extracted), n_parts)
         # The three sink jobs all branch off the SAME persisted extraction
         # and write to disjoint paths — overlap them.
         overlap(

@@ -24,7 +24,7 @@ def tag_dim(spark: SparkSession, names: list[str]) -> DataFrame:
     re-load (the reference ships tag ids in its curated CSV; we derive
     them from the names instead of trusting load order)."""
     df = spark.createDataFrame([(n,) for n in sorted(set(names))], "name string")
-    return ranked_by_md5(df, "name", "tag_id", prefix_len=2).select(
+    return ranked_by_md5(df, "name", "tag_id").select(
         F.col("tag_id").cast("int").alias("tag_id"), "name"
     )
 

@@ -68,8 +68,8 @@ def connected_components(
     distributed loop (tests and the bench's at-scale CC section do).
 
     ``stats_out`` (optional dict) receives run evidence: ``path``
-    ("driver" for the kernel | "distributed"), ``undirected_edges``, and
-    for the distributed loop ``rounds``.
+    ("driver" for the kernel | "distributed") and, for the distributed
+    loop, ``rounds``.
 
     Storage on the distributed loop: the undirected edge list and every
     round's labels are ``localCheckpoint(eager=True)``ed, and each
@@ -91,7 +91,7 @@ def connected_components(
         if g is not None:
             nodes, a, b = g
             if stats_out is not None:
-                stats_out.update(undirected_edges=len(a), path="driver")
+                stats_out["path"] = "driver"
             comp = nodes[smallgraph.components(len(nodes), a, b)]
             return spark.createDataFrame(pa.table({"node": nodes, "component": comp}))
 
@@ -108,13 +108,11 @@ def connected_components(
         und = und.distinct()
     und = und.localCheckpoint(eager=True)
     try:
-        if stats_out is not None:
-            stats_out.update(undirected_edges=und.count() // 2, path="distributed")
         labels, rounds = _min_label_rounds(und, max_iter)
     finally:
         release(und)
     if stats_out is not None:
-        stats_out["rounds"] = rounds
+        stats_out.update(path="distributed", rounds=rounds)
     return labels.select("node", F.col("label").alias("component"))
 
 

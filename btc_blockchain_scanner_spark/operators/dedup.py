@@ -1,8 +1,10 @@
 """Deduplication operators for large-scale training-data pipelines.
 
-Exact (hash-groupBy), n-gram Jaccard, MinHash+LSH, SimHash, and
-embedding-cosine near-dup. Everything except candidate *verification* is a
-single shuffle; nothing is quadratic in the corpus.
+Text and set dedup: exact (hash-groupBy), n-gram Jaccard, benchmark
+decontamination, winnowing, MinHash+LSH and SimHash. Everything except
+candidate *verification* is a single shuffle; nothing is quadratic in the
+corpus. Embedding-cosine near-dup pairs live with the rest of the
+embedding family in :mod:`.similarity`.
 
 Reference analog: in-queue dup checks before writes (DbUpdateAddressOne
 addMap containment) and the dedup write of graph nodes (SURVEY.md §2.1
@@ -75,9 +77,9 @@ def ngram_jaccard_pairs(
     Two physically different plans, one contract (parity pytest-pinned):
 
     * **Postings-GEMM path** (taken when the ids are integral and the
-      collected side — the raw texts, or the ``sh`` shingle strings —
-      fits the driver budget of :mod:`.closure`): it is collected ONCE
-      through Arrow, factorized to dense column codes on the driver
+      raw texts fit the driver budget of :mod:`.closure`): they are
+      collected ONCE through Arrow, shingled on the driver
+      (:func:`_try_text_postings`), factorized to dense column codes on the driver
       (string-exact — no hashing, no collision modes), and counted by
       the one co-occurrence kernel, :func:`.cooccur.pairs`, with
       cache-resident numpy gathers. Where that kernel runs follows the
@@ -107,16 +109,12 @@ def ngram_jaccard_pairs(
     CCNet/Gopher-style dedup convention, identical on both paths.
 
     ``max_shingle_freq=None`` disables the cap (pure arithmetic path).
+    ``sh``: a persisted :func:`shingle_docs` frame of ``docs`` that the
+    join path reads instead of shingling again.
     """
-    id_type = (
-        sh.schema["_id"] if sh is not None else docs.schema[id_col]
-    ).dataType.simpleString()
-    post = (
-        _try_text_postings(docs, id_col, text_col, n)
-        if sh is None
-        else _try_shingle_postings(sh)
-    )
+    post = _try_text_postings(docs, id_col, text_col, n)
     if post is not None:
+        id_type = docs.schema[id_col].dataType.simpleString()
         out = cooccur.pairs(
             docs.sparkSession, post, threshold, max_col_freq=max_shingle_freq
         )
@@ -246,30 +244,6 @@ def _try_text_postings(docs: DataFrame, id_col: str, text_col: str, n: int):
     return cooccur.postings(ids, sizes, flat)
 
 
-def _try_shingle_postings(sh: DataFrame):
-    """Collect an existing (_id, _sh) shingle frame (persisted by the
-    caller — the t06 stage-sharing shape) when its shingle strings fit the
-    closure budget, and build the postings closure. Returns None like
-    :func:`_try_text_postings`."""
-    import numpy as np
-
-    if not isinstance(sh.schema["_id"].dataType, T.IntegralType):
-        return None
-    tbl = closure.collect_bounded(
-        sh.select("_id", "_sh"),
-        closure.BUDGET_BYTES,
-        weight=F.octet_length(F.array_join("_sh", " ")) + 8,
-    )
-    if tbl is None:
-        return None
-    ids = np.asarray(tbl.column("_id"), dtype=np.int64)
-    import pyarrow.compute as pc
-
-    scol = tbl.column("_sh").combine_chunks()
-    sizes = np.asarray(pc.list_value_length(scol), dtype=np.int64)
-    return cooccur.postings(ids, sizes, scol.flatten())
-
-
 def cross_contamination(
     train: DataFrame,
     evalset: DataFrame,
@@ -389,121 +363,6 @@ def _cross_overlap_gemm(
         F.col("eval_id").cast(train_id_type).alias("eval_id"),
         F.col("shared_shingles"),
     )
-
-
-# -- embedding-cosine near-dup -------------------------------------------------
-
-
-def embedding_dup_pairs(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    num_tables: int = 8,
-    planes_per_table: int = 6,
-    dim: int = 64,
-    exact: bool = False,
-    buckets: DataFrame | None = None,
-) -> DataFrame:
-    """(id_a, id_b, cos_sim) pairs with cosine >= threshold.
-
-    Scale path (default): multi-table hyperplane-LSH candidates → exact
-    cosine verify — at threshold 0.9 (angle <= 26°) a 6-plane table
-    collides with p ~ (1-26/180)^6 ≈ 0.38, OR-amplified over 8 tables to
-    ~0.98 recall. ``exact=True`` switches to the O(n²) block GEMM: the
-    corpus, which must fit the driver budget of :mod:`.closure` (else
-    ValueError — use ``exact=False``), is collected once and broadcast,
-    and a ``mapInPandas`` scores each streamed batch against it (used by
-    the sf0.01 oracle gate where n=500).
-
-    ``buckets``: optional pre-computed (persisted) ``_multi_table_buckets``
-    frame over the same corpus/params — shares the signature GEMM across
-    operators AND across this function's own self-join sides (an
-    unpersisted frame would re-run the GEMM once per side).
-    """
-    from . import similarity
-
-    e = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-    if exact:
-        # calibration baseline: the bounded corpus is collected once and
-        # closure-broadcast into a numpy-GEMM mapInPandas — each Arrow
-        # batch computes its block row of the similarity matrix (BLAS) and
-        # emits only pairs above threshold. Measured ~15x over the
-        # HOF-fold cross join at 2000x64.
-        import numpy as np
-
-        vecs = closure.vectors(e, "_id", "_v", dim)
-        if vecs is None:
-            raise ValueError("embedding_dup_pairs: corpus over closure.BUDGET_BYTES; use exact=False")
-        ids, M = vecs
-        mn = np.linalg.norm(M, axis=1)
-        thr = float(threshold)
-
-        MT = np.ascontiguousarray(M.T)
-        mn_safe = np.where(mn == 0, np.inf, mn)
-
-        def mapper(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                C = np.array(list(pdf["_v"]), dtype=np.float64)
-                cids = pdf["_id"].to_numpy()
-                cn = np.linalg.norm(C, axis=1)
-                cn_safe = np.where(cn == 0, np.inf, cn)
-                # corpus-axis chunking: a full C @ M.T block was ~100 MB of
-                # float64 per task (x32 concurrent tasks = GBs of transient
-                # allocations — measured as in-bench drag); 2048-column
-                # chunks stay cache-resident (r6). zero-norm guard: inf
-                # divisor → cos 0, which cleanly fails the threshold
-                # instead of producing NaN (NaN >= t is False in numpy but
-                # poisons any later ordering).
-                CHUNK = 2048
-                outs = []
-                for c0 in range(0, MT.shape[1], CHUNK):
-                    S = (C @ MT[:, c0 : c0 + CHUNK]) / np.outer(
-                        cn_safe, mn_safe[c0 : c0 + CHUNK]
-                    )
-                    mask = (S >= thr) & (cids[:, None] < ids[None, c0 : c0 + CHUNK])
-                    ai, bj = np.nonzero(mask)
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "id_a": cids[ai],
-                                "id_b": ids[c0 + bj],
-                                "cos_sim": S[ai, bj],
-                            }
-                        )
-                    )
-                yield (
-                    pd.concat(outs)
-                    if outs
-                    else pd.DataFrame(
-                        {"id_a": pd.Series(dtype="int64"),
-                         "id_b": pd.Series(dtype="int64"),
-                         "cos_sim": pd.Series(dtype="float64")}
-                    )
-                )
-
-        # spread: the sf1.0 embeddings table scans as 2 splits — without
-        # it the block-GEMM runs on 2 of 32 cores (t10: 31.9 s → 3.4 s)
-        return closure.spread(e).mapInPandas(mapper, "id_a long, id_b long, cos_sim double")
-    # candidate generation carries ONLY ids through the bucket join and
-    # the dedup shuffle (the vectors would multiply shuffle bytes by
-    # ~50x); vectors re-attach at the verify stage.
-    if buckets is None:
-        buckets = similarity._multi_table_buckets(e, "_id", "_v", num_tables, planes_per_table, dim)
-    ids = buckets.select("_id", "_tbl", "_bucket")
-    pairs = (
-        ids.join(
-            ids.select(F.col("_id").alias("id_b"), "_tbl", "_bucket"), ["_tbl", "_bucket"]
-        )
-        .where(F.col("_id") < F.col("id_b"))
-        .select(F.col("_id").alias("id_a"), "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    side = (e, "_id", "_v")
-    scored = similarity._verify(pairs, "id_a", "id_b", side, side, dim)
-    return scored.where(F.col("cos_sim") >= threshold)
 
 
 # -- winnowing fingerprints ---------------------------------------------------

@@ -9,10 +9,10 @@ anti-pattern flagged in VERDICT.md ("single-partition global windows").
 
 Two-phase design that yields BYTE-IDENTICAL ids to the global rank:
 
-1. bucket = integer value of the first ``prefix_len`` hex chars of
-   md5(key) — 256 buckets at prefix_len=2. Because hex-string ordering is
-   most-significant-prefix-first, *global* ORDER BY md5 is exactly
-   (bucket ASC, md5 ASC) — the bucket split loses nothing.
+1. bucket = integer value of the first 2 hex chars of md5(key) — 256
+   buckets. Because hex-string ordering is most-significant-prefix-first,
+   *global* ORDER BY md5 is exactly (bucket ASC, md5 ASC) — the bucket
+   split loses nothing.
 2. ``row_number() over (partition by bucket order by md5)`` — a parallel
    window, 1/256th of the data per task.
 3. exclusive cumulative bucket counts (a ≤256-row aggregate, broadcast
@@ -40,7 +40,6 @@ def ranked_by_md5(
     key_col: str,
     id_col: str = "entity_id",
     offset: int = 0,
-    prefix_len: int | None = None,
 ) -> DataFrame:
     """Append ``id_col`` = offset + rank of md5(key_col) among all rows.
 
@@ -48,36 +47,15 @@ def ranked_by_md5(
     and identical to ``row_number() over (order by md5(key_col))`` — but
     computed with no single-partition exchange (see module docstring).
     ``id_col`` is LONG; callers cast down if they store int.
-
-    ``prefix_len=None`` (default) picks the bucket width from the key
-    count: 2 hex chars (256 buckets) below 10 M keys, 3 (4096) below 1 B,
-    4 above — at the reference's 650 M-address scale that bounds a bucket
-    task to ~160 k rows instead of ~2.5 M. The id SPEC is identical at any
-    width (property-tested), so oracles never change; only the physical
-    fan-out does. The sizing count is one cheap aggregate over the (already
-    distinct) key set — noise next to the rank's own shuffle.
     """
-    if prefix_len is None:
-        # the sizing count is an extra action, so the auto path pays one
-        # extra execution of the upstream lineage (narrowed to key_col).
-        # r4 cached df here instead, but the persist could never be
-        # released: the function returns a LAZY frame, so the cached
-        # blocks outlived every call in a long-lived session (ADVICE r4 —
-        # each registered-query run leaked a cached frame). Hot callers
-        # (all five production sites: kg03/kg12/tag_dim/link/materialize,
-        # which rank small DISTINCT key sets) now pass prefix_len and
-        # never reach this branch; the auto path stays a convenience for
-        # exploratory use where one extra key-column scan is noise.
-        n = df.select(key_col).count()
-        prefix_len = 2 if n < 10_000_000 else (3 if n < 1_000_000_000 else 4)
     d = df.withColumn("_m", F.md5(F.col(key_col))).withColumn(
-        "_b", F.conv(F.substring(F.col("_m"), 1, prefix_len), 16, 10).cast("int")
+        "_b", F.conv(F.substring(F.col("_m"), 1, 2), 16, 10).cast("int")
     )
     w = W.partitionBy("_b").orderBy("_m")
     ranked = d.withColumn("_rn", F.row_number().over(w))
     counts = ranked.groupBy("_b").agg(F.count("*").alias("_c"))
-    # Exclusive prefix-sum over <= 16^prefix_len rows — the only global
-    # window left, and it runs on the tiny bucket-count table, not the data.
+    # Exclusive prefix-sum over <= 256 rows — the only global window left,
+    # and it runs on the tiny bucket-count table, not the data.
     woff = W.orderBy("_b").rowsBetween(W.unboundedPreceding, -1)
     offs = counts.withColumn("_off", F.coalesce(F.sum("_c").over(woff), F.lit(0)))
     return (

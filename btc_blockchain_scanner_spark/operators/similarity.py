@@ -1,12 +1,23 @@
-"""Similarity search over embedding columns (array<float>).
+"""Embedding similarity over array<float> columns: top-k neighbours and
+near-duplicate pairs.
 
-Brute-force cosine top-k as the exact baseline; LSH-bucketed (random
-hyperplane / SimHash-for-vectors) as the scale path. Dot products are
-higher-order-function folds (JVM codegen) — no Python in the hot path.
+* Exact: :func:`brute_force_topk` and :func:`brute_force_dup_pairs`
+  collect one side once (:func:`.closure.vectors`) and stream the other
+  against it through one numpy block kernel, :func:`_cosine_blocks` — a
+  matrix-multiplication join, BLAS on Arrow batches. Each supplies only
+  its keep step.
+* Approximate: :func:`lsh_topk` / :func:`lsh_dup_pairs` (multi-table
+  hyperplane LSH) and :func:`ivf_topk` (inverted lists) generate id-only
+  candidate pairs and score each with exact cosine (:func:`_verify`).
+
+A zero vector has no cosine, so on every path it scores nothing: it is
+never a neighbour, never has one, and never pairs.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -33,6 +44,75 @@ def norm(a: Column) -> Column:
     )
 
 
+def _cosine_blocks(stream: tuple, collected: tuple, keep, schema: str) -> DataFrame:
+    """Exact cosine of every (streamed row, collected row) pair, reduced
+    per block by ``keep``. Each side is a ``(df, id_col, vec_col)`` tuple.
+
+    The collected side must fit the driver budget of :mod:`.closure`
+    (else ValueError — use :func:`lsh_topk` / :func:`lsh_dup_pairs`); it
+    is collected once, sized for the engine's 64-wide embeddings (wider
+    vectors are refused by the matrix check), and closure-broadcast. Each
+    Arrow batch of the streamed side then scores its block row against it
+    in 2 048-column chunks, so a chunk stays cache-sized however large the
+    collected side is: dot (``C @ M.T``, BLAS), then a divide by the norm
+    product. A zero norm is NaN, so a zero vector's cosines are NaN, which
+    no keep step ranks or passes. ``keep(S, row_ids, col_ids)`` turns one
+    chunk into a pandas frame of ``schema``. Measured ~15x over the
+    HOF-fold cross join at 2000x64 (the fold is interpreted per element).
+    """
+    vecs = closure.vectors(*collected, 64)
+    if vecs is None:
+        raise ValueError(
+            "exact cosine: collected side over closure.BUDGET_BYTES; "
+            "use lsh_topk or lsh_dup_pairs"
+        )
+    ids, M = vecs
+    MT = np.ascontiguousarray(M.T)
+    mn = np.linalg.norm(M, axis=1)
+    mn[mn == 0] = np.nan
+    CHUNK = 2048
+
+    def mapper(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            C = np.array(list(pdf["_v"]), dtype=np.float64)
+            cids = pdf["_i"].to_numpy()
+            cn = np.linalg.norm(C, axis=1)
+            cn[cn == 0] = np.nan
+            for c0 in range(0, len(ids), CHUNK):
+                S = (C @ MT[:, c0 : c0 + CHUNK]) / np.outer(cn, mn[c0 : c0 + CHUNK])
+                out = keep(S, cids, ids[c0 : c0 + CHUNK])
+                if len(out):
+                    yield out
+
+    df, id_col, vec_col = stream
+    src = df.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v"))
+    # spread: a small single-file table scans as ~2 splits, and the GEMM
+    # stage would run on 2 cores (guide §6 / r6: t10 31.9 s → 3.4 s at
+    # sf1.0). Worth its repartition only when a streamed row's work is
+    # non-trivial, so gate on the collected side: at 50 queries (t08) the
+    # whole GEMM is ~64M flops and the shuffle would cost more than it saves.
+    if len(ids) >= 512:
+        src = closure.spread(src)
+    return src.mapInPandas(mapper, schema)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The rank tail of every top-k operator: drop what has no cosine
+    (zero-norm scores surface as NaN, or as NULL — the JVM fold's
+    ``nullif``, and Arrow maps pandas NaN to null too; Spark would order
+    NaN above every double), then the ``k`` best per query, ties broken by
+    the smaller ``c_id``."""
+    scored = scored.where(F.col("cos_sim").isNotNull() & ~F.isnan("cos_sim"))
+    w = W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("c_id").asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("q_id", "c_id", "cos_sim", "rank")
+    )
+
+
 def brute_force_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -44,73 +124,49 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors (self-matches excluded).
 
-    Scale: the query side, which must fit the driver budget of
-    :mod:`.closure` (else ValueError — use :func:`lsh_topk`), is collected
-    once and closure-broadcast into a numpy-GEMM ``mapInPandas`` over the
-    streamed corpus — each Arrow batch computes ``C @ Q.T`` (BLAS) and
-    emits only its per-query top-(k+8) survivors, so driver traffic is
-    O(|Q| * k * batches), then one tiny window picks the global top-k.
+    The query side is the collected side of :func:`_cosine_blocks`; the
+    corpus streams. Each chunk keeps only its per-query top-(k+8) (tie
+    slack at the per-batch pruning boundary), so driver traffic is
+    O(|Q| * k * batches), then one small window picks the global top-k.
     Exact but O(|Q|x|C|) FLOPs; use :func:`lsh_topk` when both sides are
-    large. Measured 15x over the HOF-fold cross join (the fold is
-    interpreted per element; GEMM is vectorized).
+    large.
     """
-    import numpy as np
+    m = k + 8
 
-    # sized for the engine's 64-wide embeddings; wider vectors are
-    # refused by closure.vectors' matrix check
-    vecs = closure.vectors(queries, q_id, q_vec, 64)
-    if vecs is None:
-        raise ValueError("brute_force_topk: queries over closure.BUDGET_BYTES; use lsh_topk")
-    qids, Q = vecs
-    qn = np.linalg.norm(Q, axis=1)
-    qz = qn == 0  # zero-norm queries have no defined cosine
-    keep = k + 8  # tie slack at the per-batch pruning boundary
+    def top(S, cids, qids):
+        S[cids[:, None] == qids[None, :]] = np.nan  # self-match
+        n = min(m, len(S))
+        rows = np.argpartition(-S, n - 1, axis=0)[:n]
+        cols = np.broadcast_to(np.arange(S.shape[1]), rows.shape)
+        return pd.DataFrame(
+            {"q_id": qids[cols].ravel(), "c_id": cids[rows].ravel(), "cos_sim": S[rows, cols].ravel()}
+        )
 
-    def mapper(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.array(list(pdf["_cv"]), dtype=np.float64)
-            cids = pdf["_cid"].to_numpy()
-            cn = np.linalg.norm(C, axis=1)
-            cz = cn == 0
-            # zero-norm guard: 0/0 is NaN, and Spark orders NaN ABOVE every
-            # double in a desc window — a zero vector would become everyone's
-            # top-1. Mask those rows/cols to -inf (dropped like self-matches).
-            S = (C @ Q.T) / np.outer(np.where(cz, np.inf, cn), np.where(qz, np.inf, qn))
-            S[cz, :] = -np.inf
-            S[:, qz] = -np.inf
-            S[cids[:, None] == qids[None, :]] = -np.inf  # self-match
-            m = min(keep, S.shape[0])
-            out_q, out_c, out_s = [], [], []
-            for j in range(S.shape[1]):
-                col = S[:, j]
-                idx = np.argpartition(-col, m - 1)[:m] if S.shape[0] > m else np.arange(S.shape[0])
-                # deterministic order inside the batch: cos desc, c_id asc
-                idx = idx[np.lexsort((cids[idx], -col[idx]))]
-                out_q.extend([qids[j]] * len(idx))
-                out_c.extend(cids[idx])
-                out_s.extend(col[idx])
-            yield pd.DataFrame({"q_id": out_q, "c_id": out_c, "cos_sim": out_s})
-
-    # spread: small single-file corpora scan as ~2 splits — the GEMM
-    # stage would otherwise run on 2 cores (guide §6 / r6). Only worth its
-    # repartition when the per-corpus-row work is non-trivial: the query
-    # side is already collected, so gate on |Q| (at 50 queries the whole
-    # GEMM is ~64M flops and the shuffle would cost more than it saves).
-    c = corpus.select(F.col(c_id).alias("_cid"), F.col(c_vec).alias("_cv"))
-    if len(qids) >= 512:
-        c = closure.spread(c)
-    scored = c.mapInPandas(mapper, "q_id long, c_id long, cos_sim double")
-    scored = scored.where(~F.col("cos_sim").eqNullSafe(float("-inf")))
-    w = W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "cos_sim", "rank")
+    scored = _cosine_blocks(
+        (corpus, c_id, c_vec), (queries, q_id, q_vec), top, "q_id long, c_id long, cos_sim double"
     )
+    return _top_k(scored, k)
+
+
+def brute_force_dup_pairs(
+    embeddings: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.9,
+) -> DataFrame:
+    """(id_a, id_b, cos_sim) pairs with ``id_a < id_b`` and cosine >=
+    ``threshold``, exact: the O(n²) baseline :func:`lsh_dup_pairs` is
+    measured against. The corpus is both sides of :func:`_cosine_blocks`,
+    collected once and streamed; each chunk keeps only the pairs above the
+    threshold."""
+    thr = float(threshold)
+
+    def above(S, a, b):
+        ai, bj = np.nonzero((S >= thr) & (a[:, None] < b[None, :]))
+        return pd.DataFrame({"id_a": a[ai], "id_b": b[bj], "cos_sim": S[ai, bj]})
+
+    side = (embeddings, id_col, vec_col)
+    return _cosine_blocks(side, side, above, "id_a long, id_b long, cos_sim double")
 
 
 def _plane_matrix(dim: int, num_tables: int, planes_per_table: int) -> "np.ndarray":
@@ -120,8 +176,6 @@ def _plane_matrix(dim: int, num_tables: int, planes_per_table: int) -> "np.ndarr
     — a pure function with no RNG state, so every executor materializes the
     identical matrix from the closure (same determinism argument as
     kg/datagen.py)."""
-    import numpy as np
-
     U = np.uint64
     tt, pp, ii = np.meshgrid(
         np.arange(num_tables, dtype=np.int64),
@@ -156,15 +210,11 @@ def _multi_table_buckets(
     interpreted per element, it was ~90% of emb_lsh's wall (16.4 s → 1.3 s
     for 2000×64 at 12×3). Only (id, table, bucket) leaves the stage —
     vectors never enter the bucket-join shuffle."""
-    import numpy as np
-
     R = _plane_matrix(dim, num_tables, planes_per_table)  # (T*P, dim)
     n_tables, n_planes = num_tables, planes_per_table
     shifts = np.left_shift(np.ones(n_planes, dtype=np.int64), np.arange(n_planes, dtype=np.int64))
 
     def mapper(batches):
-        import pandas as pd
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -206,8 +256,6 @@ def _verify(pairs: DataFrame, a_col: str, b_col: str, a: tuple, b: tuple, dim: i
     streamed batches, not per pair after a join. Zero-norm vectors score
     NULL (fold, via ``nullif`` on the divisor) or NaN (gather); callers
     filter both."""
-    import numpy as np
-
     va = closure.vectors(*a, dim)
     vb = va if b is a or va is None else closure.vectors(*b, dim)
     if vb is None:
@@ -230,8 +278,6 @@ def _verify(pairs: DataFrame, a_col: str, b_col: str, a: tuple, b: tuple, dim: i
     (index_a, Ma, na), (index_b, Mb, nb) = indexed(va), indexed(vb)
 
     def mapper(batches):
-        import pandas as pd
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -298,32 +344,48 @@ def lsh_topk(
         .select(F.col("_id").alias("q_id"), "c_id")
         .dropDuplicates(["q_id", "c_id"])
     )
-    return _rank_candidates(pairs, queries, corpus, k, q_id, q_vec, c_id, c_vec, dim)
-
-
-def _rank_candidates(
-    pairs: DataFrame,
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    q_id: str,
-    q_vec: str,
-    c_id: str,
-    c_vec: str,
-    dim: int,
-) -> DataFrame:
-    """Shared candidate-verify (:func:`_verify`) + top-k rank for the ANN
-    paths (LSH, IVF)."""
     scored = _verify(pairs, "q_id", "c_id", (queries, q_id, q_vec), (corpus, c_id, c_vec), dim)
-    # zero-norm scores surface as NULL (JVM nullif; Arrow maps pandas NaN
-    # to null too) or NaN — drop both so they can never rank
-    scored = scored.where(F.col("cos_sim").isNotNull() & ~F.isnan("cos_sim"))
-    w = W.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("c_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("q_id", "c_id", "cos_sim", "rank")
+    return _top_k(scored, k)
+
+
+def lsh_dup_pairs(
+    embeddings: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.9,
+    num_tables: int = 8,
+    planes_per_table: int = 6,
+    dim: int = 64,
+    buckets: DataFrame | None = None,
+) -> DataFrame:
+    """(id_a, id_b, cos_sim) pairs with ``id_a < id_b`` and cosine >=
+    ``threshold``, approximate: multi-table hyperplane-LSH candidates, then
+    exact cosine (:func:`_verify`). At threshold 0.9 (angle <= 26°) a
+    6-plane table collides with p ~ (1-26/180)^6 ≈ 0.38, OR-amplified over
+    8 tables to ~0.98 recall against :func:`brute_force_dup_pairs`.
+
+    ``buckets``: optional pre-computed (persisted) ``_multi_table_buckets``
+    frame over the same corpus/params — shares the signature GEMM across
+    operators AND across this function's own self-join sides (an
+    unpersisted frame would re-run the GEMM once per side).
+    """
+    e = embeddings.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+    # candidate generation carries ONLY ids through the bucket join and
+    # the dedup shuffle (the vectors would multiply shuffle bytes by
+    # ~50x); vectors re-attach at the verify stage.
+    if buckets is None:
+        buckets = _multi_table_buckets(e, "_id", "_v", num_tables, planes_per_table, dim)
+    ids = buckets.select("_id", "_tbl", "_bucket")
+    pairs = (
+        ids.join(
+            ids.select(F.col("_id").alias("id_b"), "_tbl", "_bucket"), ["_tbl", "_bucket"]
+        )
+        .where(F.col("_id") < F.col("id_b"))
+        .select(F.col("_id").alias("id_a"), "id_b")
+        .dropDuplicates(["id_a", "id_b"])
     )
+    side = (e, "_id", "_v")
+    return _verify(pairs, "id_a", "id_b", side, side, dim).where(F.col("cos_sim") >= threshold)
 
 
 # -- IVF (inverted-file) ANN ---------------------------------------------------
@@ -335,13 +397,9 @@ def _assign_clusters(
     """(id, vec) → (id, cluster) rows for each of the ``n_probe`` nearest
     centroids (L2). One GEMM per Arrow batch against the closure-broadcast
     centroid matrix — the IVF coarse quantizer."""
-    import numpy as np
-
     c_sq = (C * C).sum(axis=1)
 
     def mapper(batches):
-        import pandas as pd
-
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -383,8 +441,6 @@ def ivf_centroids(
     loop over data. The centroid matrix itself stays tiny
     (n_centroids × dim) and lives driver-side, like the reference's
     in-memory caches."""
-    import numpy as np
-
     seed_rows = (
         corpus.select(F.col(c_id).alias("_i"), F.col(c_vec).alias("_v"))
         .withColumn("_m", F.md5(F.col("_i").cast("string")))
@@ -471,4 +527,5 @@ def ivf_topk(
         # corpus vectors live in exactly ONE list, so probe unions cannot
         # duplicate a pair — no dropDuplicates shuffle needed
     )
-    return _rank_candidates(pairs, queries, corpus, k, q_id, q_vec, c_id, c_vec, dim)
+    scored = _verify(pairs, "q_id", "c_id", (queries, q_id, q_vec), (corpus, c_id, c_vec), dim)
+    return _top_k(scored, k)

@@ -18,6 +18,8 @@ provided documents table): entities and predicates below.
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -137,7 +139,7 @@ def kg03_entity_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("surface").isin(*DOC_ENTITIES))
         .distinct()
     )
-    return ranked_by_md5(surfaces, "surface", "entity_id", prefix_len=2).select(
+    return ranked_by_md5(surfaces, "surface", "entity_id").select(
         "surface", F.col("entity_id").cast("int").alias("entity_id")
     )
 
@@ -169,22 +171,21 @@ def kg04_canonical_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent WITH RECURSIVE transitive closure."""
     from ..operators.rank import ranked_by_md5
 
-    tr = _doc_triples(spark, sf_dir)
-    surfaces = (
-        tr.select(F.col("subj").alias("surface"))
-        .unionByName(tr.select(F.col("obj").alias("surface")))
-        .distinct()
-    )
-    ids = ranked_by_md5(surfaces, "surface", "id", prefix_len=2).select("surface", "id")
-    # The id map is bounded by the DOC_ENTITIES dictionary: materialize it
-    # once, so neither the edges nor the final join re-runs the rank.
-    ids = spark.createDataFrame(ids.toArrow())
+    # The documents are read once: the distinct (subj, obj) pairs are
+    # bounded by len(DOC_ENTITIES)^2 = 100 rows, so they come back through
+    # Arrow, and the surfaces and the CC edges are built from that table on
+    # the driver; only the id rank and CC run as Spark plans.
+    tr = _doc_triples(spark, sf_dir).select("subj", "obj").distinct().toArrow()
+    surfaces = pa.chunked_array(tr["subj"].chunks + tr["obj"].chunks, pa.string()).unique()
+    ids = ranked_by_md5(
+        spark.createDataFrame(pa.table({"surface": surfaces})), "surface", "id"
+    ).select("surface", "id").toArrow().combine_chunks()
+    end = lambda col: pc.take(ids["id"], pc.index_in(tr[col], ids["surface"]))  # noqa: E731
     # CC drops the self-loops and deduplicates the (least, greatest) pairs
-    edges = (
-        tr.join(ids.withColumnRenamed("surface", "subj").withColumnRenamed("id", "src"), "subj")
-        .join(ids.withColumnRenamed("surface", "obj").withColumnRenamed("id", "dst"), "obj")
-        .select("src", "dst")
+    edges = spark.createDataFrame(
+        pa.table({"src": end("subj"), "dst": end("obj")}).combine_chunks()
     )
+    ids = spark.createDataFrame(ids)
     comp = connected_components(edges, "src", "dst")
     return ids.join(comp, ids.id == comp.node, "left").select(
         "surface",
@@ -321,7 +322,7 @@ def kg12_tagged_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("surface").isin(*DOC_ENTITIES))
         .distinct()
     )
-    nodes = ranked_by_md5(surfaces, "surface", "node_id", prefix_len=2).select("node_id", "surface")
+    nodes = ranked_by_md5(surfaces, "surface", "node_id").select("node_id", "surface")
     tagd = tagmod.tag_dim(spark, list(_TAG_NAMES))
     rules = spark.createDataFrame(list(_TAG_RULES), "display_name string, name string")
     entities = nodes.select(

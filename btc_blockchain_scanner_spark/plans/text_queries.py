@@ -343,7 +343,7 @@ def t06_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             dedup.winnow_dup_pairs(docs_s, k=5, window=4, min_shared=3).persist()
         ),
         lambda: _eager(
-            dedup.embedding_dup_pairs(emb_s, threshold=0.35, exact=True).persist()
+            similarity.brute_force_dup_pairs(emb_s, threshold=0.35).persist()
         ),
         lambda: _eager(
             similarity.brute_force_topk(q, emb_s, k=1).select("q_id", "c_id").persist()
@@ -376,7 +376,7 @@ def t06_dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _then(
             eb,
             lambda: _eager(
-                dedup.embedding_dup_pairs(
+                similarity.lsh_dup_pairs(
                     emb_s, threshold=0.35, num_tables=12, planes_per_table=3, buckets=eb
                 ).persist()
             ),
@@ -457,11 +457,12 @@ def t08_emb_top1_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def t10_emb_dup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup pairs, exact (broadcast cross join) — the
-    baseline the LSH variant (t11) is measured against. Threshold 0.35 is
+    """Embedding-cosine near-dup pairs, exact (the corpus collected once
+    and streamed against itself in cosine blocks) — the baseline the LSH
+    pairs in t06's ``emb_lsh`` row are measured against. Threshold 0.35 is
     calibrated to this corpus (max pairwise cosine ~0.51)."""
     emb = load(spark, sf_dir, "embeddings")
-    return dedup.embedding_dup_pairs(emb, threshold=0.35, exact=True).select("id_a", "id_b")
+    return similarity.brute_force_dup_pairs(emb, threshold=0.35).select("id_a", "id_b")
 
 
 # NOTE: the former t07/t09/t11/t12 rows-only registrations (simhash pairs,

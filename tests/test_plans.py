@@ -40,6 +40,10 @@ REQUIRED = {
     "a07_grouping_sets": ["Expand", "HashAggregate"],
     # t05's pair stage is not a cross join (banned below)
     "t05_ngram_jaccard_dups": [],
+    # exact cosine: the streamed side runs the numpy block kernel against
+    # the collected side, never a cross join
+    "t08_emb_top1_neighbor": ["MapInPandas"],
+    "t10_emb_dup_exact": ["MapInPandas"],
 }
 
 # a row_number window sitting on a single-partition exchange
@@ -54,6 +58,8 @@ FORBIDDEN = {
     # pair candidates never degenerate to a cross join
     "t05_ngram_jaccard_dups": ["CartesianProduct"],
     "c01_decontamination": ["CartesianProduct"],
+    "t08_emb_top1_neighbor": ["CartesianProduct"],
+    "t10_emb_dup_exact": ["CartesianProduct"],
     # row-at-a-time Python would be the slow path
     "kg10_transcript_triples": ["BatchEvalPython"],
 }

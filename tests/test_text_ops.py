@@ -172,21 +172,25 @@ def test_zero_norm_vectors_never_rank(spark, monkeypatch):
     in Spark desc windows, so an unguarded 0/0 made zero vectors everyone's
     top-1). The LSH verifies run at the default budget (gathered einsum)
     and at budget 0 (JVM fold), and must agree."""
-    from btc_blockchain_scanner_spark.operators.dedup import embedding_dup_pairs
-    from btc_blockchain_scanner_spark.operators.similarity import brute_force_topk, lsh_topk
+    from btc_blockchain_scanner_spark.operators.similarity import (
+        brute_force_dup_pairs,
+        brute_force_topk,
+        lsh_dup_pairs,
+        lsh_topk,
+    )
 
     e = spark.createDataFrame(ZERO_NORM_ROWS, "vec_id long, embedding array<float>")
     top = brute_force_topk(e, e, k=1).collect()
     assert all(r.c_id != 2 for r in top), "zero vector ranked as a neighbor"
     assert all(r.q_id != 2 for r in top), "zero query produced a neighbor"
-    pairs = embedding_dup_pairs(e, threshold=0.5, exact=True, dim=4).collect()
+    pairs = brute_force_dup_pairs(e, threshold=0.5).collect()
     assert {(r.id_a, r.id_b) for r in pairs} == {(0, 1)}, "exact"
     verified = []
     for budget in (closure.BUDGET_BYTES, 0):
         monkeypatch.setattr(closure, "BUDGET_BYTES", budget)
         topl = lsh_topk(e, e, k=1, num_tables=4, planes_per_table=2, dim=4).collect()
         assert all(r.c_id != 2 and r.q_id != 2 for r in topl), budget
-        pairs = embedding_dup_pairs(
+        pairs = lsh_dup_pairs(
             e, threshold=0.5, num_tables=4, planes_per_table=2, dim=4
         ).collect()
         assert {(r.id_a, r.id_b) for r in pairs} == {(0, 1)}, budget
@@ -204,8 +208,47 @@ def test_exact_vector_kernels_refuse_over_budget(spark, monkeypatch):
     monkeypatch.setattr(closure, "BUDGET_BYTES", 0)
     with pytest.raises(ValueError, match="lsh_topk"):
         similarity.brute_force_topk(e, e, k=1)
-    with pytest.raises(ValueError, match="exact=False"):
-        dedup.embedding_dup_pairs(e, exact=True, dim=4)
+    with pytest.raises(ValueError, match="lsh_dup_pairs"):
+        similarity.brute_force_dup_pairs(e)
+
+
+def test_exact_cosine_blocks_match_numpy_across_chunks(spark):
+    """Both exact operators stream against a collected side of 2 500 rows,
+    more than one 2 048-column chunk of the cosine block kernel: their
+    top-k rows and dup pairs equal a numpy reference over the whole matrix.
+    Small-integer entries make every dot product exact, so the cosines must
+    match to the bit whatever order BLAS sums in. A zero vector scores
+    nothing, and an exact duplicate ties with its original."""
+    rng = np.random.default_rng(7)
+    M = rng.integers(-4, 5, size=(2500, 64)).astype(np.float32)
+    M[11] = 0.0
+    M[2400] = M[7]  # a duplicate on the far side of the chunk boundary
+    e = spark.createDataFrame(
+        [(i, M[i].tolist()) for i in range(len(M))], "vec_id long, embedding array<float>"
+    )
+    X = M.astype(np.float64)
+    nrm = np.linalg.norm(X, axis=1)
+    nrm[nrm == 0] = np.nan
+    S = (X @ X.T) / np.outer(nrm, nrm)
+    np.fill_diagonal(S, np.nan)
+    ok = ~np.isnan(S)
+
+    k = 3
+    want_top = set()
+    for q in range(len(M)):
+        c = np.flatnonzero(ok[q])
+        c = c[np.lexsort((c, -S[q, c]))][:k]
+        want_top |= {(q, int(j), r + 1) for r, j in enumerate(c)}
+    top = similarity.brute_force_topk(e, e, k=k).collect()
+    assert {(r.q_id, r.c_id, r.rank) for r in top} == want_top
+    assert all(r.cos_sim == S[r.q_id, r.c_id] for r in top)
+
+    thr = 0.4
+    a, b = np.nonzero(np.triu(ok, 1) & (np.nan_to_num(S, nan=-2.0) >= thr))
+    pairs = similarity.brute_force_dup_pairs(e, threshold=thr).collect()
+    assert {(r.id_a, r.id_b) for r in pairs} == set(zip(a.tolist(), b.tolist()))
+    assert (7, 2400) in {(r.id_a, r.id_b) for r in pairs}
+    assert all(r.cos_sim == S[r.id_a, r.id_b] for r in pairs)
 
 
 def test_ivf_recall_on_clustered_corpus(spark):
