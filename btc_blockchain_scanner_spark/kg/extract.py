@@ -106,14 +106,19 @@ def extract(turns: DataFrame, repartition_on_conv: bool = True) -> DataFrame:
     return turns.withColumn("ex", extract_udf(F.col("text")))
 
 
+def _row_keys(extracted: DataFrame) -> list[str]:
+    """The turn key, plus the pipeline's sink ``partition_key`` when the
+    turns carry one: the flattened tables keep the partitioning of the
+    extraction, so their partitioned writes need no exchange of their own."""
+    return ["conv_id", "turn_idx"] + [c for c in ("partition_key",) if c in extracted.columns]
+
+
 def mentions_from(extracted: DataFrame) -> DataFrame:
     """Flatten to the mentions table (FIXTURES.md §2)."""
-    m = extracted.select(
-        "conv_id", "turn_idx", F.explode(F.col("ex.mentions")).alias("m")
-    )
+    keys = _row_keys(extracted)
+    m = extracted.select(*keys, F.explode(F.col("ex.mentions")).alias("m"))
     return m.select(
-        "conv_id",
-        "turn_idx",
+        *keys,
         F.col("m.pos").alias("pos"),
         F.col("m.surface").alias("surface"),
         F.col("m.span_start").alias("span_start"),
@@ -141,16 +146,14 @@ def mention_flags_from_extracted(extracted: DataFrame) -> DataFrame:
     one explode — no mentions ⋈ turns shuffle join (measured ~11 s → ~3 s
     at 20 k convs). Pure Column math — no UDF. Rows equal the join form's
     (tests/test_datagen_extract.py)."""
-    m = extracted.select(
-        "conv_id", "turn_idx", "text", F.explode(F.col("ex.mentions")).alias("m")
-    )
+    keys = _row_keys(extracted)
+    m = extracted.select(*keys, "text", F.explode(F.col("ex.mentions")).alias("m"))
     span = F.expr("substring(text, m.span_start + 1, m.span_end - m.span_start)")
     flag_caps = (span == F.upper(span)) & (span != F.lower(span))
     flag_alias = F.col("m.mention_type") == "alias"
     return (
         m.select(
-            "conv_id",
-            "turn_idx",
+            *keys,
             F.col("m.pos").alias("pos"),
             flag_alias.alias("flag_alias"),
             flag_caps.alias("flag_caps"),
@@ -161,10 +164,10 @@ def mention_flags_from_extracted(extracted: DataFrame) -> DataFrame:
 
 def triples_from(extracted: DataFrame) -> DataFrame:
     """Flatten to the raw (surface-level) triples table."""
-    t = extracted.select("conv_id", "turn_idx", F.explode(F.col("ex.triples")).alias("t"))
+    keys = _row_keys(extracted)
+    t = extracted.select(*keys, F.explode(F.col("ex.triples")).alias("t"))
     return t.select(
-        "conv_id",
-        "turn_idx",
+        *keys,
         F.col("t.subj_surface").alias("subj_surface"),
         F.col("t.pred").alias("pred"),
         F.col("t.obj_surface").alias("obj_surface"),

@@ -9,17 +9,21 @@ sequence (SURVEY.md §3) as one orchestrated Spark job graph:
     triples+entities ──materialize──▶ nodes, edges               [global]
     counters ──▶ checkpoints manifest                            [per-partition]
 
-Link hands back its outputs materialized once (entities checkpointed, the
-surface → entity map collected — it is the broadcast side of the mention
-join, so the driver holds it anyway and it needs no budget of its own);
-the triples resolve through that map and CC and the sinks never re-run
-resolution or the md5 rank. The run's counters come from what was written:
-the per-partition rows recorded in the manifest and the footers of the
-written tables.
+Link runs on the driver: it collects the distinct surfaces once and holds
+them, the alias dictionary and, in an incremental batch, the entities-state
+rows whose key the batch resolved (link.py). It hands back the entity rows
+it created and the surface → entity map as local relations, so the triples
+resolve through that map, and neither CC nor the sinks re-run resolution,
+the md5 rank or any read of the entities state. The run's counters come
+from what was written: the per-partition rows recorded in the manifest and
+the footers of the written tables.
 
 Partitioning: partition_key = pmod(xxhash64(conv_id), n_parts) — the
-conv_id-range analog of the reference's block-height batches. The
-extraction stage writes mentions/triples with dynamic partition overwrite,
+conv_id-range analog of the reference's block-height batches. The turns
+are shuffled once, on partition_key, before the extraction UDF; the
+mentions, triples and flags keep that partitioning, so each partition dir
+gets one file with no exchange per sink. The extraction stage writes
+mentions/triples with dynamic partition overwrite,
 so a killed run resumes by recomputing only partitions missing from the
 manifest and yields byte-identical output (M4/M5 semantics; tested in
 tests/test_pipeline.py).
@@ -30,6 +34,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,9 +57,10 @@ class PipelineResult:
 
 
 def _write_partitioned(df: DataFrame, path: str) -> None:
+    """Dynamic-overwrite ``df`` by ``partition_key``; ``df`` must already be
+    hash-partitioned on it, so each partition dir gets one file."""
     (
-        df.repartition("partition_key")
-        .write.mode("overwrite")
+        df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("partition_key")
         .parquet(path)
@@ -66,7 +72,7 @@ def run(
     transcripts: DataFrame,
     out_dir: str,
     n_parts: int = 8,
-    alias_dict: DataFrame | None = None,
+    alias_dict: pa.Table | None = None,
     fail_after_extract_partitions: set[str] | None = None,
 ) -> PipelineResult:
     """Run (or resume) the pipeline.
@@ -75,7 +81,7 @@ def run(
     FIXTURES.md §3): when set, extraction only covers those partitions and
     the run aborts before linking — simulating a mid-job kill.
     """
-    alias_dict = alias_dict if alias_dict is not None else link.default_alias_dict(spark)
+    alias_dict = alias_dict if alias_dict is not None else link.default_alias_dict()
     manifest = Manifest(f"{out_dir}/checkpoints")
     turns = with_partition_key(transcripts, n_parts)
 
@@ -95,17 +101,18 @@ def run(
         pending = sorted(set(pending) & fail_after_extract_partitions, key=int)
 
     if pending:
-        batch = turns.where(F.col("partition_key").isin(pending))
-        extracted = extract.extract(batch)
-        # One pass over the UDF output for both tables: persist the struct.
-        extracted = extracted.persist()
-        mentions = with_partition_key(extract.mentions_from(extracted), n_parts)
-        triples = with_partition_key(extract.triples_from(extracted), n_parts)
+        # the one shuffle of the extraction: on the sink key, so every
+        # table below inherits the partitioning its write needs
+        batch = turns.where(F.col("partition_key").isin(pending)).repartition("partition_key")
+        # One pass over the UDF output for all tables: persist the struct.
+        extracted = extract.extract(batch, repartition_on_conv=False).persist()
+        mentions = extract.mentions_from(extracted)
+        triples = extract.triples_from(extracted)
         # F4 sparse-flags side table (input_special analog): rows exist ONLY
         # for non-default mentions; readers re-attach them with coalesced
         # defaults (tests/test_pipeline.py). Computed from the
         # persisted extraction struct directly — no mentions ⋈ turns join.
-        flags = with_partition_key(extract.mention_flags_from_extracted(extracted), n_parts)
+        flags = extract.mention_flags_from_extracted(extracted)
         # The three sink jobs all branch off the SAME persisted extraction
         # and write to disjoint paths — overlap them.
         overlap(
@@ -150,8 +157,8 @@ def run(
     mentions_all = spark.read.parquet(mentions_path)
     triples_all = spark.read.parquet(triples_path)
 
-    # entities and the surface map come back materialized (link.py), so
-    # neither the sinks nor CC below re-run resolution or the md5 rank
+    # entities and the surface map come back as local relations (link.py),
+    # so neither the sinks nor CC below re-run resolution or the md5 rank
     linked_mentions, entities, surface_to_id = link.link_mentions(
         mentions_all, alias_dict, spark=spark
     )
@@ -182,8 +189,7 @@ def run(
             lambda: nodes.write.mode("overwrite").parquet(f"{out_dir}/nodes"),
         )
     finally:
-        # every reader of the two checkpoints has returned
-        release(entities)
+        # every reader of the canon checkpoint has returned
         if canon is not None:
             release(canon)
 
@@ -204,7 +210,7 @@ def incremental_update(
     spark: SparkSession,
     new_transcripts: DataFrame,
     state_dir: str,
-    alias_dict: DataFrame | None = None,
+    alias_dict: pa.Table | None = None,
 ) -> dict:
     """One incremental KG batch — the ``update_wallets`` per-batch loop body
     (RunUpdateWallets2.java:107-133: fetch the next tx batch, resolve
@@ -214,14 +220,18 @@ def incremental_update(
 
     1. extract mentions (Arrow UDF — batch only, not the corpus);
     2. link against the persisted ``entities`` state table — get-or-create
-       keeps ids stable across batches (M1 watermark semantics);
+       keeps ids stable across batches (M1 watermark semantics). Link reads
+       from that state only the rows whose key the batch resolved, plus the
+       watermark, in one job; the driver holds those rows;
     3. derive co-mention star edges for the batch;
     4. merge them into the persisted ``canon_map`` via
        :func:`canonicalize.incremental_canon_update` — CC runs over the
        CONTRACTED batch graph only, never the full edge history;
     5. upsert both state tables through the MERGE sink (atomic swap,
-       crash-recoverable) and re-attach singleton entities so the canon
-       map stays total over the entities table.
+       crash-recoverable): the entities state gets only the rows link
+       created (entity rows never change after creation), and the new
+       singletons get canon rows of their own, so the canon map stays
+       total over the entities table.
 
     Equivalent canonical STRUCTURE to a full recompute over all batches
     (property-tested); entity ids depend on arrival order, exactly like
@@ -245,20 +255,18 @@ def incremental_update(
             "local-POSIX merge sink (sources/merge.py docstring); pass a "
             "plain local path or swap in an Iceberg MERGE sink"
         )
-    alias_dict = alias_dict if alias_dict is not None else link.default_alias_dict(spark)
+    alias_dict = alias_dict if alias_dict is not None else link.default_alias_dict()
     ents_path = f"{state_dir}/entities"
     canon_path = f"{state_dir}/canon_map"
 
     existing_ents = spark.read.parquet(ents_path) if os.path.isdir(ents_path) else None
     extracted = extract.extract(new_transcripts).persist()
-    entities = canon = None
+    canon = None
     try:
         mentions = extract.mentions_from(extracted)
-        # entities comes back localCheckpointed, which cuts its lineage to
-        # the state paths: both upserts below atomically swap the very
-        # parquet dirs it was read from — a lazy plan evaluated after the
-        # first swap would chase deleted files
-        linked, entities, _ = link.link_mentions(
+        # ``created`` is a local relation: the entities merge below swaps
+        # the state dir link read, and nothing reads that dir afterwards
+        linked, created, _ = link.link_mentions(
             mentions, alias_dict, entities=existing_ents, spark=spark
         )
         # The batch edge list is consumed TWICE: connected_components
@@ -274,32 +282,32 @@ def incremental_update(
         if os.path.isdir(canon_path):
             merged = canonmod.incremental_canon_update(spark.read.parquet(canon_path), edges)
         else:
-            merged = canonmod.canon_map(entities, edges)
-        # total-ize over the (updated) entities table: batch singletons and
-        # never-edged entities canonicalize to themselves — the same
-        # read-time coalesce canon_map performs
-        canon = (
-            entities.select("entity_id")
-            .join(merged, "entity_id", "left")
-            .select(
-                "entity_id",
-                F.coalesce(F.col("canon_id"), F.col("entity_id")).cast("int").alias("canon_id"),
-            )
-        ).localCheckpoint(eager=True)  # same swap-safety as entities above
+            # no canon state yet: label every entity, stored or created
+            ids = created.select("entity_id")
+            if existing_ents is not None:
+                ids = existing_ents.select("entity_id").unionByName(ids)
+            merged = canonmod.canon_map(ids, edges)
+        # total-ize: every stored entity already has a canon row, so only
+        # created entities no edge reached (batch singletons) are missing
+        # — they canonicalize to themselves, the coalesce canon_map performs
+        singletons = created.select("entity_id").join(merged, "entity_id", "left_anti")
+        canon = merged.unionByName(
+            singletons.select("entity_id", F.col("entity_id").alias("canon_id"))
+        ).localCheckpoint(eager=True)  # cuts the lineage to the canon state it swaps
         edges.unpersist()
 
-        # Both state frames are fully materialized (localCheckpoint above),
-        # so neither merge holds a lazy reference to the other's target dir
-        # — the two upserts touch disjoint paths and can overlap (~0.7 s of
-        # the smaller merge's job latency hidden per batch, measured r6).
+        # Both state frames are fully materialized (a local relation and
+        # the checkpoint above), so neither merge holds a lazy reference to
+        # the other's target dir — the two upserts touch disjoint paths and
+        # can overlap (~0.7 s of the smaller merge's job latency hidden per
+        # batch, measured r6).
         ents_stats, canon_stats = overlap(
-            lambda: merge_upsert(spark, ents_path, entities, ["entity_id"]),
+            lambda: merge_upsert(spark, ents_path, created, ["entity_id"]),
             lambda: merge_upsert(spark, canon_path, canon, ["entity_id"]),
         )
     finally:
-        # both merges have returned: nothing reads the checkpoints any more
-        for frame in (entities, canon):
-            if frame is not None:
-                release(frame)
+        # both merges have returned: nothing reads the checkpoint any more
+        if canon is not None:
+            release(canon)
         extracted.unpersist()
     return {"entities": ents_stats, "canon_map": canon_stats}

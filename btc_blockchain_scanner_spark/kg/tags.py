@@ -12,10 +12,11 @@ objects without tags pay nothing, exactly like the sparse-flags table
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.rank import ranked_by_md5
+from ..operators.rank import md5_rank
 
 
 def tag_dim(spark: SparkSession, names: list[str]) -> DataFrame:
@@ -23,9 +24,9 @@ def tag_dim(spark: SparkSession, names: list[str]) -> DataFrame:
     dimension is deterministic at any parallelism and stable under
     re-load (the reference ships tag ids in its curated CSV; we derive
     them from the names instead of trusting load order)."""
-    df = spark.createDataFrame([(n,) for n in sorted(set(names))], "name string")
-    return ranked_by_md5(df, "name", "tag_id").select(
-        F.col("tag_id").cast("int").alias("tag_id"), "name"
+    names = pa.array(sorted(set(names)), pa.string())
+    return spark.createDataFrame(
+        pa.table({"tag_id": md5_rank(names).cast(pa.int32()), "name": names})
     )
 
 

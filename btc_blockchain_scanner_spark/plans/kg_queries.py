@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..kg import extract
 from ..kg.vocab import ALIASES
 from ..operators.cc import connected_components
+from ..operators.rank import md5_rank
 from ..sources.tables import load
 from . import synth
 from .registry import query
@@ -42,6 +43,18 @@ def _doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     toks = F.filter(F.split(F.lower(F.col("text")), "[^a-z0-9]+"), lambda t: t != "")
     return d.select("doc_id", toks.alias("toks"))
+
+
+def _doc_surfaces(spark: SparkSession, sf_dir: str) -> pa.Array:
+    """The distinct DOC_ENTITIES surfaces the documents mention, collected:
+    at most len(DOC_ENTITIES) rows."""
+    t = _doc_tokens(spark, sf_dir)
+    surfaces = (
+        t.select(F.explode("toks").alias("surface"))
+        .where(F.col("surface").isin(*DOC_ENTITIES))
+        .distinct()
+    )
+    return surfaces.toArrow()["surface"].combine_chunks()
 
 
 def _doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -127,20 +140,13 @@ def kg02_doc_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 def kg03_entity_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic dense entity-id assignment: rank-of-md5(key) — the
     get-or-create id rule (M1, DbCachedAddressOne.java:91-115) with no
-    monotonically_increasing_id anywhere. Computed by the bucketed
-    two-phase rank (operators/rank.py) — byte-identical ids to the
-    oracle's global ``dense_rank() OVER (ORDER BY md5(surface))`` but with
-    no single-partition exchange."""
-    from ..operators.rank import ranked_by_md5
-
-    t = _doc_tokens(spark, sf_dir)
-    surfaces = (
-        t.select(F.explode("toks").alias("surface"))
-        .where(F.col("surface").isin(*DOC_ENTITIES))
-        .distinct()
-    )
-    return ranked_by_md5(surfaces, "surface", "entity_id").select(
-        "surface", F.col("entity_id").cast("int").alias("entity_id")
+    monotonically_increasing_id anywhere. The <= len(DOC_ENTITIES)
+    distinct surfaces are collected and ranked on the driver
+    (operators/rank.py) — byte-identical ids to the oracle's global
+    ``dense_rank() OVER (ORDER BY md5(surface))``."""
+    surfaces = _doc_surfaces(spark, sf_dir)
+    return spark.createDataFrame(
+        pa.table({"surface": surfaces, "entity_id": md5_rank(surfaces).cast(pa.int32())})
     )
 
 
@@ -169,17 +175,13 @@ def kg04_canonical_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph, label = min entity id (M2 merge-into-min rule). The Spark side is
     operators/cc.py (its small-graph kernel at this size); the oracle is an
     independent WITH RECURSIVE transitive closure."""
-    from ..operators.rank import ranked_by_md5
-
     # The documents are read once: the distinct (subj, obj) pairs are
     # bounded by len(DOC_ENTITIES)^2 = 100 rows, so they come back through
-    # Arrow, and the surfaces and the CC edges are built from that table on
-    # the driver; only the id rank and CC run as Spark plans.
+    # Arrow, and the surfaces, their id rank and the CC edges are built
+    # from that table on the driver; only CC runs as a Spark plan.
     tr = _doc_triples(spark, sf_dir).select("subj", "obj").distinct().toArrow()
     surfaces = pa.chunked_array(tr["subj"].chunks + tr["obj"].chunks, pa.string()).unique()
-    ids = ranked_by_md5(
-        spark.createDataFrame(pa.table({"surface": surfaces})), "surface", "id"
-    ).select("surface", "id").toArrow().combine_chunks()
+    ids = pa.table({"surface": surfaces, "id": md5_rank(surfaces)})
     end = lambda col: pc.take(ids["id"], pc.index_in(tr[col], ids["surface"]))  # noqa: E731
     # CC drops the self-loops and deduplicates the (least, greatest) pairs
     edges = spark.createDataFrame(
@@ -314,15 +316,9 @@ def kg12_tagged_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     (plans/relational_queries.py), applied identically on the oracle side
     with array_to_string + COALESCE('') for the empty default."""
     from ..kg import tags as tagmod
-    from ..operators.rank import ranked_by_md5
 
-    t = _doc_tokens(spark, sf_dir)
-    surfaces = (
-        t.select(F.explode("toks").alias("surface"))
-        .where(F.col("surface").isin(*DOC_ENTITIES))
-        .distinct()
-    )
-    nodes = ranked_by_md5(surfaces, "surface", "node_id").select("node_id", "surface")
+    surfaces = _doc_surfaces(spark, sf_dir)
+    nodes = spark.createDataFrame(pa.table({"node_id": md5_rank(surfaces), "surface": surfaces}))
     tagd = tagmod.tag_dim(spark, list(_TAG_NAMES))
     rules = spark.createDataFrame(list(_TAG_RULES), "display_name string, name string")
     entities = nodes.select(
@@ -422,15 +418,14 @@ def kg11_transcript_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist the flattened mentions: linking, co-mention edges, and CC all
     # branch from it — without this the Arrow extraction re-runs per action
     mentions = extract.mentions_from(extract.extract(tr)).persist()
-    # link returns entities already materialized (a localCheckpoint of the
-    # tiny distinct-surface table), which lets the mention cache be RELEASED
-    # before return — r4 leaked it into the driver's shared 50-query session
-    # (the kg11 in-bench 2.9x mover, VERDICT r4 item 3)
-    linked, entities, _ = link.link_mentions(mentions, link.default_alias_dict(spark), spark=spark)
+    # link returns entities as a local relation built on the driver, which
+    # lets the mention cache be RELEASED before return — r4 leaked it into
+    # the driver's shared 50-query session (the kg11 in-bench 2.9x mover,
+    # VERDICT r4 item 3)
+    linked, entities, _ = link.link_mentions(mentions, link.default_alias_dict(), spark=spark)
     edges = canonicalize.comention_edges(linked)
     # connected_components materializes eagerly inside canon_map, so every
-    # consumer of the mention cache has run by the time it returns; the
-    # entities checkpoint is kept, because the returned frame reads it
+    # consumer of the mention cache has run by the time it returns
     out = canonicalize.canon_map(entities, edges)
     mentions.unpersist()
     return out

@@ -69,7 +69,10 @@ def merge_upsert(
        [, WHEN NOT MATCHED BY SOURCE THEN DELETE].
 
     Updates must be unique per key (enforced). Returns op counters
-    (inserted/updated/deleted/kept) — the DbUpdate.printStats analog.
+    (inserted/updated/deleted/kept) — the DbUpdate.printStats analog. A
+    matched key counts as updated only when the merge changes one of its
+    values (null-safe); otherwise it is kept, as MySQL counts affected
+    rows for ``ON DUPLICATE KEY UPDATE`` (the reference's sink, S10).
     """
     if "://" in target_path or target_path.startswith("file:"):
         # this sink's existence probe / atomic swap are os.path/os.rename —
@@ -96,15 +99,20 @@ def merge_upsert(
 
     t_key = F.col(f"t.{key_cols[0]}")
     u_key = F.col(f"u.{key_cols[0]}")
+    values = {c: F.coalesce(F.col(f"u.{c}"), F.col(f"t.{c}")) for c in val_cols}
+    same = F.lit(True)
+    for c, v in values.items():
+        same = same & v.eqNullSafe(F.col(f"t.{c}"))
     op = (
         F.when(t_key.isNull(), F.lit("insert"))
         .when(u_key.isNull(), F.lit("delete") if delete_missing else F.lit("keep"))
+        .when(same, F.lit("same"))
         .otherwise(F.lit("update"))
     )
     merged = joined.select(
         op.alias("_op"),
         *[F.coalesce(F.col(f"u.{k}"), F.col(f"t.{k}")).alias(k) for k in key_cols],
-        *[F.coalesce(F.col(f"u.{c}"), F.col(f"t.{c}")).alias(c) for c in val_cols],
+        *[v.alias(c) for c, v in values.items()],
     ).persist()
 
     try:
@@ -121,15 +129,22 @@ def _op_counters(merged: DataFrame, key_cols: list[str]) -> dict:
     the unique-update-key check, in ONE aggregate; raises before the caller
     writes anything.
 
-    Rows carried by an update (insert/update) must have distinct keys. The
+    Rows carried by an update (insert/update/same — a matched key whose
+    values the merge leaves as they are) must have distinct keys. The
     distinct count sees every other row as one null group, so its shuffle
     scales with the updates, not the target."""
-    ops = {"insert": "inserted", "update": "updated", "delete": "deleted", "keep": "kept"}
-    from_updates = F.col("_op").isin("insert", "update")
+    ops = {
+        "inserted": ["insert"],
+        "updated": ["update"],
+        "deleted": ["delete"],
+        "kept": ["keep", "same"],
+    }
+    from_updates = F.col("_op").isin("insert", "update", "same")
     r = merged.agg(
-        *[F.count(F.when(F.col("_op") == op, 1)).alias(name) for op, name in ops.items()],
+        *[F.count(F.when(F.col("_op").isin(*o), 1)).alias(name) for name, o in ops.items()],
+        F.count(F.when(from_updates, 1)).alias("_rows"),
         F.count_distinct(F.when(from_updates, F.struct(*key_cols))).alias("_keys"),
     ).collect()[0]
-    if r["inserted"] + r["updated"] != r["_keys"]:
+    if r["_rows"] != r["_keys"]:
         raise ValueError("updates contain duplicate keys — dedup before merging")
-    return {name: r[name] for name in ops.values()}
+    return {name: r[name] for name in ops}

@@ -148,28 +148,23 @@ def test_hub_group_star_converges_fast(spark):
     assert comp.agg(F.min("component")).first()[0] == 101
 
 
-def test_ranked_by_md5_matches_global_window(spark, persistent_ids):
-    # the bucketed two-phase rank must be BYTE-identical to the
-    # single-partition global rank it replaces (same id spec, new plan),
-    # and it persists nothing: its result is lazy, so nothing could free it
+def test_ranked_by_md5_matches_global_window(spark):
+    # the driver rank must be BYTE-identical to Spark's single-partition
+    # global rank over md5(key), offset included (the id spec the oracles use)
+    import pyarrow as pa
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    from btc_blockchain_scanner_spark.operators.rank import ranked_by_md5
+    from btc_blockchain_scanner_spark.operators.rank import md5_rank
 
-    keys = [(f"key-{i:04d}",) for i in range(937)]
-    df = spark.createDataFrame(keys, "k string")
-    before = persistent_ids()
-    got = {
-        (r.k, r.entity_id)
-        for r in ranked_by_md5(df, "k", "entity_id", offset=100).collect()
-    }
-    assert persistent_ids() - before == set()
+    keys = [f"key-{i:04d}" for i in range(937)]
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+    got = set(zip(keys, md5_rank(pa.array(keys), offset=100).to_pylist()))
     w = W.orderBy(F.md5(F.col("k")))
     want = {
         (r.k, r.entity_id)
         for r in df.select(
-            "k", (F.row_number().over(w) + F.lit(100)).cast("long").alias("entity_id")
+            "k", (F.dense_rank().over(w) + F.lit(100)).cast("long").alias("entity_id")
         ).collect()
     }
     assert got == want

@@ -1,14 +1,24 @@
 """Entity linking: exact dict hits, LSH fuzzy matches, deterministic
 get-or-create ids across batches (M1 semantics)."""
 
+import hashlib
+
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from btc_blockchain_scanner_spark.kg import link, oracle
-from btc_blockchain_scanner_spark.kg.vocab import ALIASES
+
+MENTIONS = "conv_id string, turn_idx int, pos int, surface string"
+
+
+def _mentions(spark, surfaces):
+    return spark.createDataFrame(
+        [("c1", 0, i, s) for i, s in enumerate(surfaces)], MENTIONS
+    )
 
 
 def test_exact_and_alias_resolution(spark):
-    d = link.default_alias_dict(spark)
+    d = link.default_alias_dict()
     surfaces = spark.createDataFrame(
         [("spark",), ("sprk",), ("postgresql",), ("neo4j",)], "surface string"
     )
@@ -21,7 +31,7 @@ def test_exact_and_alias_resolution(spark):
 
 def test_fuzzy_lsh_resolution(spark):
     # typos NOT in the alias dict → must fuzzy-match via LSH char shingles
-    d = link.default_alias_dict(spark)
+    d = link.default_alias_dict()
     surfaces = spark.createDataFrame(
         [("snowflakee",), ("cassandraa",), ("zzqqxx",)], "surface string"
     )
@@ -32,26 +42,25 @@ def test_fuzzy_lsh_resolution(spark):
 
 
 def test_get_or_create_deterministic_and_incremental(spark):
-    keys1 = spark.createDataFrame([("spark",), ("kafka",), ("hive",)], "entity_key string")
-    ents1 = link.get_or_create_entities(spark, keys1, None)
-    ids1 = {r.display_name: r.entity_id for r in ents1.collect()}
+    ids1, created1 = link.get_or_create_entities(pa.array(["spark", "kafka", "hive"]), None)
     # matches the oracle's md5-ordered dense assignment
-    assert ids1 == oracle.assign_ids({"spark", "kafka", "hive"})
+    want = oracle.assign_ids({"spark", "kafka", "hive"})
+    assert dict(zip(*ids1.to_pydict().values())) == want
+    assert dict(zip(created1["display_name"].to_pylist(), created1["entity_id"].to_pylist())) == want
 
-    # second batch: existing keys keep ids, new keys extend past watermark
-    keys2 = spark.createDataFrame([("spark",), ("trino",)], "entity_key string")
-    ents2 = link.get_or_create_entities(spark, keys2, ents1)
-    ids2 = {r.display_name: r.entity_id for r in ents2.collect()}
-    assert ids2["spark"] == ids1["spark"]
-    assert ids2["trino"] == 4
-    assert len(ids2) == 4
+    # second batch: existing keys keep ids, only new keys are created,
+    # past the watermark
+    ids2, created2 = link.get_or_create_entities(
+        pa.array(["spark", "trino"]), spark.createDataFrame(created1)
+    )
+    assert dict(zip(*ids2.to_pydict().values())) == {"spark": want["spark"], "trino": 4}
+    assert created2["display_name"].to_pylist() == ["trino"]
 
 
 def test_link_mentions_roundtrip(spark):
-    d = link.default_alias_dict(spark)
+    d = link.default_alias_dict()
     mentions = spark.createDataFrame(
-        [("c1", 0, 1, "spark"), ("c1", 0, 3, "sprk"), ("c2", 1, 0, "kafka")],
-        "conv_id string, turn_idx int, pos int, surface string",
+        [("c1", 0, 1, "spark"), ("c1", 0, 3, "sprk"), ("c2", 1, 0, "kafka")], MENTIONS
     )
     linked, entities, surface_to_id = link.link_mentions(mentions, d, spark=spark)
     rows = linked.select("surface", "entity_id").collect()
@@ -68,23 +77,73 @@ def test_link_mentions_roundtrip(spark):
     assert {r.match_type for r in surface_to_id.collect()} == {"exact"}
 
 
-def test_link_mentions_persists_only_entity_checkpoint(spark, persistent_ids):
-    """Link materializes its outputs once: the entities checkpoint is the
-    only RDD it leaves registered, on the exact fast path and on the LSH
-    fuzzy path alike (the surface map is a driver-collected local relation,
-    and resolution releases what it persisted)."""
-    d = link.default_alias_dict(spark)
+def test_link_parity_into_existing_entities(spark):
+    """Exact, alias, fuzzy and new surfaces linked into an existing
+    entities table: stored keys keep their ids, new keys get the oracle's
+    md5-ordered ids offset by the table's watermark, and only new keys
+    become entity rows."""
+    stored = spark.createDataFrame(
+        [(7, "concept", "x", "spark"), (3, "concept", "y", "kafka")],
+        "entity_id int, entity_type string, canonical_hash string, display_name string",
+    )
+    surfaces = ["spark", "sprk", "hive", "postgresql", "snowflakee", "zzqqxx"]
+    linked, created, surface_to_id = link.link_mentions(
+        _mentions(spark, surfaces), link.default_alias_dict(), entities=stored, spark=spark
+    )
+    new = {k: 7 + i for k, i in oracle.assign_ids({"hive", "postgres", "snowflake", "zzqqxx"}).items()}
+    key = {"spark": "spark", "sprk": "spark", "hive": "hive", "postgresql": "postgres",
+           "snowflakee": "snowflake", "zzqqxx": "zzqqxx"}
+    ids = {"spark": 7, **new}
+    kinds = {"spark": "exact", "sprk": "exact", "hive": "exact", "postgresql": "exact",
+             "snowflakee": "fuzzy", "zzqqxx": "new"}
+    assert {tuple(r) for r in surface_to_id.collect()} == {
+        (s, ids[key[s]], kinds[s]) for s in surfaces
+    }
+    assert {tuple(r) for r in created.collect()} == {
+        (i, "concept", hashlib.md5(k.encode()).hexdigest(), k) for k, i in new.items()
+    }
+    assert {(r.pos, r.entity_id) for r in linked.collect()} == {
+        (i, ids[key[s]]) for i, s in enumerate(surfaces)
+    }
+
+
+def test_link_leaves_no_persisted_rdd(spark, persistent_ids):
+    """Link's outputs are local relations: it leaves no RDD registered, on
+    the exact fast path and on the LSH fuzzy path alike, and consuming
+    its outputs persists nothing either."""
+    d = link.default_alias_dict()
     for surfaces, kinds in ((["spark", "sprk"], {"exact"}), (["spark", "snowflakee"], {"exact", "fuzzy"})):
-        mentions = spark.createDataFrame(
-            [("c1", 0, i, s) for i, s in enumerate(surfaces)],
-            "conv_id string, turn_idx int, pos int, surface string",
-        )
         before = persistent_ids()
-        linked, entities, surface_to_id = link.link_mentions(mentions, d, spark=spark)
-        added = persistent_ids() - before
-        assert len(added) == 1, kinds
+        linked, entities, surface_to_id = link.link_mentions(
+            _mentions(spark, surfaces), d, spark=spark
+        )
         assert {r.match_type for r in surface_to_id.collect()} == kinds
-        # consuming the outputs materializes nothing further
         linked.count()
         entities.count()
-        assert persistent_ids() - before == added
+        assert persistent_ids() - before == set(), kinds
+
+
+def test_link_job_budget(spark, tmp_path):
+    """On the exact path link runs at most 2 Spark jobs (the distinct-surface
+    collect), and one more with an existing entities table (its hits and
+    watermark); both counted through statusTracker job groups."""
+    sc = spark.sparkContext
+    _mentions(spark, ["spark", "sprk", "kafka", "postgresql"] * 5).write.parquet(
+        str(tmp_path / "m")
+    )
+    mentions = spark.read.parquet(str(tmp_path / "m"))
+    d = link.default_alias_dict()
+
+    def jobs(group, **kw):
+        sc.setJobGroup(group, "link")
+        try:
+            out = link.link_mentions(mentions, d, spark=spark, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    (_, entities, _), n_first = jobs("link-first")
+    _, n_existing = jobs("link-existing", entities=entities.where(F.col("entity_id") > 1))
+    assert 1 <= n_first <= 2
+    assert n_existing <= n_first + 1

@@ -31,6 +31,24 @@ def test_merge_upsert_roundtrip(spark, tmp_path):
     assert [tuple(r) for r in spark.read.parquet(target).collect()] == [(2, "b2", 22.0)]
 
 
+def test_merge_counts_unchanged_matches_as_kept(spark, tmp_path):
+    """A matched key counts as updated only when a value changes, nulls
+    compared null-safe (MySQL's affected-rows rule for ON DUPLICATE KEY
+    UPDATE); an unchanged duplicate update key is still refused."""
+    import pytest
+
+    target = str(tmp_path / "t6")
+    schema = "id long, name string, v double"
+    rows = [(1, "a", None), (2, "b", 2.0)]
+    merge_upsert(spark, target, spark.createDataFrame(rows, schema), ["id"])
+    stats = merge_upsert(spark, target, spark.createDataFrame(rows, schema), ["id"])
+    assert stats == {"inserted": 0, "updated": 0, "deleted": 0, "kept": 2}
+    stats = merge_upsert(spark, target, spark.createDataFrame([(1, "a", 1.0)], schema), ["id"])
+    assert stats == {"inserted": 0, "updated": 1, "deleted": 0, "kept": 1}
+    with pytest.raises(ValueError, match="duplicate keys"):
+        merge_upsert(spark, target, spark.createDataFrame([(2, "b", 2.0)] * 2, schema), ["id"])
+
+
 def test_merge_rejects_duplicate_update_keys(spark, tmp_path):
     import pytest
 

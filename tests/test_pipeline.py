@@ -75,7 +75,7 @@ def test_invariants(spark, run_dir):
     assert entities.join(canon, "entity_id", "left_anti").count() == 0
     from btc_blockchain_scanner_spark.kg.link import default_alias_dict, link_mentions
 
-    linked, _, _ = link_mentions(mentions, default_alias_dict(spark), spark=spark)
+    linked, _, _ = link_mentions(mentions, default_alias_dict(), spark=spark)
     sim_edges = canonicalize.comention_edges(linked)
     assert canonicalize.verify_fixpoint(canon, sim_edges) == 0
 
@@ -446,7 +446,7 @@ def test_sink_write_failure_surfaces_when_canon_raises(spark, tmp_path, monkeypa
 def test_run_and_incremental_update_leave_no_persisted_rdds(spark, tmp_path, persistent_ids):
     """pipeline.run then incremental_update into its state (the perfbench
     kg_pipeline op) must release every checkpoint and cache they take:
-    the entities checkpoint link_mentions hands back, and the canon one."""
+    the canon checkpoints and the persisted extraction and edges."""
     tr = datagen.transcripts(spark, n_convs=16)
     out = str(tmp_path / "kg")
     before = persistent_ids()

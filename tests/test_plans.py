@@ -27,9 +27,9 @@ REQUIRED = {
     "a02_last_ids": ["HashAggregate"],
     "t02_doc_quality": ["ReadSchema: struct<doc_id:bigint,text:string>"],
     "mm02_frame_sample": [],
-    # two-phase id assignment: the row_number window runs over the 256-way
-    # md5-prefix buckets, not a global single-partition sort
-    "kg03_entity_ids": ["hashpartitioning(_b"],
+    # id assignment: the <=10 distinct surfaces are ranked on the driver
+    # and come back as a local relation, with no window or sort at all
+    "kg03_entity_ids": ["LocalTableScan"],
     # the transcript extraction is Arrow-vectorized Python, never
     # row-at-a-time (BatchEvalPython, banned below)
     "kg10_transcript_triples": ["ArrowEvalPython"],
@@ -51,8 +51,6 @@ SINGLE_PARTITION_WINDOW = r"Exchange SinglePartition(?:(?!Exchange)[\s\S]){0,800
 
 # query → regexes that must NOT match the plan
 FORBIDDEN = {
-    # the only single-partition exchange allowed in the id plan is the
-    # <=256-row bucket-count offset window (a sum(), not a row_number())
     "kg03_entity_ids": [SINGLE_PARTITION_WINDOW],
     "c02_source_cap_counts": [SINGLE_PARTITION_WINDOW],
     # pair candidates never degenerate to a cross join

@@ -1,6 +1,6 @@
 """Property-based tests (hypothesis) for the r02-novel invariants:
 
-* the bucketed two-phase rank is byte-identical to the global
+* the driver md5 rank is byte-identical to Spark's global
   order-by-md5 rank for ANY key set (operators/rank.py's core claim);
 * the hub-shingle cap never changes ngram_jaccard_pairs' reported pairs
   or values as long as qualifying pairs share >= 1 non-hub shingle
@@ -11,13 +11,14 @@ adversarial STRUCTURE (duplicates, near-identical keys, shared
 boilerplate), not volume — the deterministic suites cover volume.
 """
 
+import pyarrow as pa
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from btc_blockchain_scanner_spark.operators import dedup
-from btc_blockchain_scanner_spark.operators.rank import ranked_by_md5
+from btc_blockchain_scanner_spark.operators.rank import md5_rank
 
 _SETTINGS = dict(
     max_examples=8,
@@ -35,20 +36,16 @@ keys_strategy = st.lists(
 
 @given(keys=keys_strategy, offset=st.integers(min_value=0, max_value=1_000_000))
 @settings(**_SETTINGS)
-def test_bucketed_rank_equals_global_rank(spark, keys, offset):
+def test_md5_rank_equals_global_rank(spark, keys, offset):
     df = spark.createDataFrame([(k,) for k in keys], "k string")
     w = W.orderBy(F.md5(F.col("k")))
     want = {
         (r.k, r.entity_id)
         for r in df.select(
-            "k", (F.row_number().over(w) + F.lit(offset)).cast("long").alias("entity_id")
+            "k", (F.dense_rank().over(w) + F.lit(offset)).cast("long").alias("entity_id")
         ).collect()
     }
-    got = {
-        (r.k, r.entity_id)
-        for r in ranked_by_md5(df, "k", "entity_id", offset=offset).collect()
-    }
-    assert got == want
+    assert set(zip(keys, md5_rank(pa.array(keys, pa.string()), offset=offset).to_pylist())) == want
 
 
 docs_strategy = st.lists(
