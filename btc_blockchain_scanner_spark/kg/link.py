@@ -43,7 +43,7 @@ from .vocab import ALIASES, ENTITIES
 ENTITY_SCHEMA = pa.schema(
     [
         pa.field("entity_id", pa.int32(), nullable=False),
-        pa.field("entity_type", pa.string(), nullable=False),
+        pa.field("entity_type", pa.string()),
         pa.field("canonical_hash", pa.string()),
         pa.field("display_name", pa.string()),
     ]

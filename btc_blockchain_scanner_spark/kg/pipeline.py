@@ -229,9 +229,10 @@ def incremental_update(
        CONTRACTED batch graph only, never the full edge history;
     5. upsert both state tables through the MERGE sink (atomic swap,
        crash-recoverable): the entities state gets only the rows link
-       created (entity rows never change after creation), and the new
-       singletons get canon rows of their own, so the canon map stays
-       total over the entities table.
+       created (entity rows never change after creation; a batch that
+       created none leaves it unrewritten), and the new singletons get
+       canon rows of their own, so the canon map stays total over the
+       entities table.
 
     Equivalent canonical STRUCTURE to a full recompute over all batches
     (property-tested); entity ids depend on arrival order, exactly like
@@ -296,15 +297,22 @@ def incremental_update(
         ).localCheckpoint(eager=True)  # cuts the lineage to the canon state it swaps
         edges.unpersist()
 
-        # Both state frames are fully materialized (a local relation and
-        # the checkpoint above), so neither merge holds a lazy reference to
-        # the other's target dir — the two upserts touch disjoint paths and
-        # can overlap (~0.7 s of the smaller merge's job latency hidden per
-        # batch, measured r6).
-        ents_stats, canon_stats = overlap(
-            lambda: merge_upsert(spark, ents_path, created, ["entity_id"]),
-            lambda: merge_upsert(spark, canon_path, canon, ["entity_id"]),
-        )
+        if existing_ents is not None and created.isEmpty():
+            # entity rows never change after creation, so a batch that
+            # created none leaves the entities state as it is, unrewritten
+            # (``created`` is a local relation: isEmpty runs no job)
+            canon_stats = merge_upsert(spark, canon_path, canon, ["entity_id"])
+            ents_stats = {"inserted": 0, "updated": 0, "deleted": 0, "kept": rowcount(ents_path)}
+        else:
+            # Both state frames are fully materialized (a local relation and
+            # the checkpoint above), so neither merge holds a lazy reference
+            # to the other's target dir — the two upserts touch disjoint
+            # paths and can overlap (~0.7 s of the smaller merge's job
+            # latency hidden per batch, measured r6).
+            ents_stats, canon_stats = overlap(
+                lambda: merge_upsert(spark, ents_path, created, ["entity_id"]),
+                lambda: merge_upsert(spark, canon_path, canon, ["entity_id"]),
+            )
     finally:
         # both merges have returned: nothing reads the checkpoint any more
         if canon is not None:

@@ -1,6 +1,7 @@
 """End-to-end pipeline: P/R vs oracle, invariant audits (FIXTURES.md §5),
 resume-from-dirty-tail, and parallelism determinism."""
 
+import os
 import shutil
 
 import pytest
@@ -406,6 +407,20 @@ def test_incremental_update_deterministic_rerun(spark, tmp_path):
             for t in ("entities", "canon_map")
         }
     assert tables["a"] == tables["b"]
+
+
+def test_incremental_update_without_new_entities_keeps_entities_state(spark, tmp_path):
+    """A batch whose every key is already stored creates no entity row, so
+    the entities state is left as it is (its files are not rewritten) and
+    its stored rows count as kept."""
+    tr = datagen.transcripts(spark, n_convs=12).cache()
+    state = str(tmp_path / "state")
+    pipeline.incremental_update(spark, tr, state)
+    files = sorted(os.listdir(f"{state}/entities"))
+    n = spark.read.parquet(f"{state}/entities").count()
+    stats = pipeline.incremental_update(spark, tr, state)
+    assert stats["entities"] == {"inserted": 0, "updated": 0, "deleted": 0, "kept": n}
+    assert sorted(os.listdir(f"{state}/entities")) == files
 
 
 def test_incremental_update_rejects_uri_state_dir(spark):
